@@ -288,58 +288,29 @@ object Bm25 {
   /** Tombstone table of a snapshot, if it has one (created by
     * [[deleteFromIndex]]/[[upsertToIndex]], folded away by
     * [[compactIndex]]): (doc, max_seg) — postings of `doc` with
-    * `seg <= max_seg` are dead.
-    *
-    * A legacy doc-only table (pre-segment format) meant "kill every
-    * segment committed when the marker landed" — normalized here to
-    * max_seg = THE VERSION OF THE SNAPSHOT HOLDING IT, which covers
-    * exactly those segments. The old MaxValue normalization also
-    * buried FUTURE segments: a doc re-inserted by a later append lands
-    * postings at seg = v+1 <= MaxValue, so the revision silently
-    * vanished from a pre-upgrade index (and its rows were excluded
-    * from the recomputed df/doclen). Every write verb persists the
-    * normalized (doc, max_seg) table forward, so one append/upsert/
-    * delete migrates the index off the legacy shape for good. */
+    * `seg <= max_seg` are dead. */
   private def tombstones(spark: SparkSession, snap: String): Option[DataFrame] = {
     val p = java.nio.file.Paths.get(snap, "tombstones")
     if (!java.nio.file.Files.isDirectory(p)) None
-    else {
-      val t = spark.read.parquet(p.toString)
-      Some(if (t.columns.contains("max_seg")) t
-        else t.withColumn("max_seg", lit(snapVersionOf(snap))))
-    }
+    else Some(requireSegmented(spark.read.parquet(p.toString), "max_seg", snap))
   }
 
-  /** The committed version a snapshot directory holds — parsed from
-    * SnapshotStore's `snap-<N>` naming. Only legacy-tombstone
-    * normalization needs it; staged dirs never reach this branch (the
-    * write verbs always persist an explicit max_seg into the stage). */
-  private def snapVersionOf(snap: String): Long = {
-    val name = java.nio.file.Paths.get(snap).getFileName.toString
-    require(name.startsWith("snap-"),
-      s"legacy doc-only tombstones in a non-snapshot dir $snap — " +
-        "staged tombstone tables must carry max_seg")
-    name.stripPrefix("snap-").toLong
+  /** The one refusal of a pre-segment index (doc-only tombstones,
+    * postings without `seg`): those shapes predate revision-aware
+    * tombstones and no current writer produces them. */
+  private def requireSegmented(df: DataFrame, column: String,
+                               snap: String): DataFrame = {
+    require(df.columns.contains(column),
+      s"BM25 index snapshot $snap predates segment ids (no '$column' " +
+        "column) — rebuild the index with buildIndex")
+    df
   }
 
-  /** Read a snapshot's physical postings with a normalized `seg` column
-    * (legacy files without one read as segment 0).
-    *
-    * Planned against an EXPLICIT schema: all segment files agree on
-    * (term, doc, tf) — only `seg`'s presence varies across legacy/new
-    * files — so single-footer inference plus an appended nullable `seg`
-    * (the parquet reader null-fills it per file that lacks it, and
-    * reads it where present) replaces the distributed mergeSchema
-    * footer-sweep job that every index READ otherwise pays. */
-  private def readPostings(spark: SparkSession, snap: String): DataFrame = {
-    val dir = s"$snap/postings"
-    val inferred = spark.read.parquet(dir).schema
-    val schema =
-      if (inferred.fieldNames.contains("seg")) inferred
-      else inferred.add("seg", org.apache.spark.sql.types.LongType)
-    spark.read.schema(schema).parquet(dir)
-      .withColumn("seg", coalesce(col("seg"), lit(0L)))
-  }
+  /** Read a snapshot's physical postings (term, doc, tf, seg) — one
+    * footer's schema, never a mergeSchema sweep: every segment file of
+    * an index shares it. */
+  private def readPostings(spark: SparkSession, snap: String): DataFrame =
+    requireSegmented(spark.read.parquet(s"$snap/postings"), "seg", snap)
 
   /** Drop tombstoned rows: a (doc, max_seg) marker kills that doc's
     * postings in segments AT OR BELOW it — later segments (an upsert's

@@ -70,9 +70,9 @@ object CorpusLm {
     * per bigram OCCURRENCE) are the hazard: at 100 TB a MEMORY_AND_DISK
     * cache materializes a corpus-scale copy to executor storage, which
     * can cost more than the one recompute pass it saves. `bgsStorage`
-    * makes that choice explicit and measurable — the ScaleProbe
-    * `lm-cache` arm times MEMORY_AND_DISK vs DISK_ONLY vs no cache at
-    * growing corpus multiples (numbers in SCALE.md §LM-CACHE). The
+    * makes that choice explicit; SCALE.md §LM-CACHE records
+    * MEMORY_AND_DISK vs DISK_ONLY vs no cache timed at growing corpus
+    * multiples. The
     * DEFAULT is DISK_ONLY, the measured winner at every probed scale
     * (columnar in-memory encoding of the exploded strings costs more
     * CPU than it saves, and at 100 TB it would also evict working

@@ -320,7 +320,7 @@ object IvfIndex {
     * pinned in IvfSpec. Cluster sizes come from one k-row aggregate that
     * broadcasts; uniform corpora pay one broadcast join and nothing else
     * (nsalt = 1 everywhere). Wall-clock on a deliberately hot corpus is
-    * measured in ScaleProbe (SCALE.md ivf-skew curve). */
+    * recorded in SCALE.md §"Similarity / ANN" (the ivf-skew curve). */
   def knnGraphApprox(spark: SparkSession, df: DataFrame, idCol: String,
                      vecCol: String, model: Model, k: Int, nprobe: Int,
                      roundTo: Int = 6, maxClusterSize: Int = 0): DataFrame = {

@@ -22,25 +22,44 @@ object StoreQueries extends QueryFamily {
     * convention: repeated bench passes measure the READ of the verb's
     * result, not a per-invocation table rebuild, and nothing leaks a
     * table copy per pass. The verb sequences below are deterministic, so
-    * first-pass and later-pass results are identical. */
+    * first-pass and later-pass results are identical. `meta` is the
+    * table policy recorded at init (e.g. its checkpoint interval). */
   private val tableCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Temp directories of the prepared tables, deleted recursively when
+    * the JVM exits — repeated Bench/Verify runs must not fill the temp
+    * volume with one table copy per query per run. */
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private lazy val cleanupHook: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      tempDirs.forEach { dir =>
+        try java.nio.file.Files.walk(dir)
+          .sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => java.nio.file.Files.deleteIfExists(p): Unit)
+        catch { case _: java.io.IOException |
+                     _: java.io.UncheckedIOException => () }
+      }, "graft-prepared-table-cleanup"))
 
   private def preparedTable(s: org.apache.spark.sql.SparkSession,
                             dir: String, tag: String,
                             base: org.apache.spark.sql.DataFrame = null,
                             clusterBy: Seq[String] = Seq("doc_id"),
                             zorderBy: Seq[String] = Nil,
-                            numFiles: Int = 8)
+                            numFiles: Int = 8,
+                            meta: Map[String, String] = Map.empty)
                            (mutate: String => Unit): String =
     tableCache.computeIfAbsent(s"$dir#$tag", _ => {
-      val target = java.nio.file.Files
-        .createTempDirectory(s"graft-$tag").toString + "/tbl"
+      cleanupHook
+      val tmp = java.nio.file.Files.createTempDirectory(s"graft-$tag")
+      tempDirs.add(tmp)
+      val target = tmp.toString + "/tbl"
       val df = Option(base).getOrElse(
         Tables.load(s, dir, "documents").select(col("doc_id"), col("text")))
       MergeStore.init(s, df, target, numFiles = numFiles,
         clusterBy = if (zorderBy.nonEmpty) Nil else clusterBy,
-        zorderBy = zorderBy)
+        zorderBy = zorderBy, meta = meta)
       mutate(target)
       target
     })
@@ -1673,12 +1692,13 @@ object StoreQueries extends QueryFamily {
     (s, dir) => {
       import org.apache.spark.sql.types.DecimalType
       val cols = Seq("o_orderkey", "o_orderstatus", "o_totalprice")
+      // Interval 4 (a table property, set at init) puts the insert merge
+      // on the full-snapshot slot; threshold 1 makes the policy decide
+      // the encoding, not size.
       val target = preparedTable(s, dir, "q138",
         base = Tables.load(s, dir, "orders").select(cols.map(col): _*),
-        clusterBy = Seq("o_orderkey")) { t =>
-        // Interval 4 puts the insert merge on the full-snapshot slot;
-        // threshold 1 makes the policy decide the encoding, not size.
-        System.setProperty("graft.manifest.checkpoint.interval", "4")
+        clusterBy = Seq("o_orderkey"),
+        meta = Map("ckpt.interval" -> "4")) { t =>
         System.setProperty("graft.manifest.compress.threshold", "1")
         try {
           val docs = Tables.load(s, dir, "orders").select(cols.map(col): _*)
@@ -1701,10 +1721,7 @@ object StoreQueries extends QueryFamily {
           // Drain INSIDE the property scope: the async sidecar encode
           // re-reads the (test-overridden) size threshold at run time.
           MergeStore.drainCheckpoints()
-        } finally {
-          System.clearProperty("graft.manifest.checkpoint.interval")
-          System.clearProperty("graft.manifest.compress.threshold")
-        }
+        } finally System.clearProperty("graft.manifest.compress.threshold")
       }
       MergeStore.drainCheckpoints()
       val fmt = MergeStore.checkpointFormatOf(target, 4)

@@ -45,8 +45,7 @@ object CoreStore {
     val incoming = rows.where(pk.map(col(_).isNotNull).reduce(_ && _))
 
     val existing: Option[DataFrame] =
-      if (new java.io.File(target).exists())
-        try Some(spark.read.parquet(target)) catch { case _: Throwable => None }
+      if (RawStore.hasDataFiles(spark, target)) Some(spark.read.parquet(target))
       else None
 
     val dataCols = endpoint.columns.map(_.target)

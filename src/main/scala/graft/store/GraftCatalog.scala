@@ -649,20 +649,18 @@ final case class GraftTable(ident: String, path: String,
   override def schema(): StructType = {
     val v = pinnedVersion.orElse(MergeStore.version(path))
       .getOrElse(sys.error(s"no committed version at $path"))
-    MergeStore.manifestSchema(path, v)
-      .map(st => StructType(st.fields.map { f =>
-        // Strip graft-internal field metadata (column-mapping physical
-        // names) but KEEP Spark's column-default keys — the analyzer
-        // reads CURRENT_DEFAULT to fill omitted INSERT columns and the
-        // explicit DEFAULT keyword.
-        val mb = new org.apache.spark.sql.types.MetadataBuilder()
-        Seq("CURRENT_DEFAULT", "EXISTS_DEFAULT").foreach { k =>
-          if (f.metadata.contains(k))
-            mb.putString(k, f.metadata.getString(k))
-        }
-        f.copy(metadata = mb.build())
-      }))
-      .getOrElse(MergeStore.read(SparkSession.active, path, Some(v)).schema)
+    StructType(MergeStore.manifestSchema(path, v).fields.map { f =>
+      // Strip graft-internal field metadata (column-mapping physical
+      // names) but KEEP Spark's column-default keys — the analyzer
+      // reads CURRENT_DEFAULT to fill omitted INSERT columns and the
+      // explicit DEFAULT keyword.
+      val mb = new org.apache.spark.sql.types.MetadataBuilder()
+      Seq("CURRENT_DEFAULT", "EXISTS_DEFAULT").foreach { k =>
+        if (f.metadata.contains(k))
+          mb.putString(k, f.metadata.getString(k))
+      }
+      f.copy(metadata = mb.build())
+    })
   }
 
   // No OVERWRITE_DYNAMIC: the node has no V1 write fallback;

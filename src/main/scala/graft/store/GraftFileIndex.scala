@@ -1,7 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.{FileStatus, Path => HadoopPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -41,27 +39,24 @@ final class GraftFileIndex(spark: SparkSession, target: String,
 
   // File lengths come from the manifest's `z:` size lines
   // ([[MergeStore.fileSizes]] — exact, recorded at commit), so building
-  // the index makes ZERO data-directory metadata calls on a size-lined
-  // table; legacy unlined files take one counted Files.size fallback
-  // each. Lengths must be exact (split planning reads up to them) —
-  // the z: lines are post-move stats, so they are. Modification time
+  // the index makes ZERO data-directory metadata calls. Lengths must be
+  // exact (split planning reads up to them) — the z: lines are
+  // post-move stats, so they are. Modification time
   // is not manifest state; it is reported as the COMMIT time of the
   // pinned version (`_metadata.file_modification_time` on a skipping
   // read reflects the snapshot, not per-file mtimes).
   private val statuses: Map[String, FileStatusWithMetadata] = {
     val commitMs = MergeStore.commitTimeOf(target, version).getOrElse(0L)
-    MergeStore.fileSizes(target, Some(version)).map { case (f, sz) =>
-      val p = MergeStore.dataDir(target).resolve(f)
-      val len = if (sz >= 0) sz else Files.size(p)
+    MergeStore.fileSizes(target, Some(version)).map { case (f, len) =>
       f -> FileStatusWithMetadata(new FileStatus(
         len, false, 1, 128L * 1024 * 1024,
-        commitMs, new HadoopPath(p.toUri)))
+        commitMs, new HadoopPath(MergeStore.dataDir(target).resolve(f).toUri)))
     }.toMap
   }
 
   /** Files the LAST `listFiles` call planned — a plan-audit hook for
-    * specs and the scale probe (the FileSourceScanExec `numFiles`
-    * metric shows the same number post-execution). */
+    * specs (the FileSourceScanExec `numFiles` metric shows the same
+    * number post-execution). */
   @volatile var lastPlannedFiles: Option[Seq[String]] = None
 
   override def rootPaths: Seq[HadoopPath] =
@@ -94,15 +89,13 @@ object GraftFileIndex {
     * but plans only manifest-candidate files; with no filters it is
     * exactly `read`. The manifest schema plans with zero footer reads
     * and null-fills evolved columns (same contract as [[MergeStore
-    * .read]]); legacy manifests fall back to mergeSchema inference
-    * once, at relation build. */
+    * .read]]). */
   def readSkipping(spark: SparkSession, target: String,
                    version: Option[Int] = None): DataFrame = {
     val v = version.orElse(MergeStore.version(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     val index = new GraftFileIndex(spark, target, v)
     val schema = MergeStore.manifestSchema(target, v)
-      .getOrElse(MergeStore.read(spark, target, Some(v)).schema)
     // The relation speaks the files' PHYSICAL column names (a renamed
     // column keeps its on-disk name); the logical rename is an
     // alias-only projection ON TOP, so Catalyst still pushes user

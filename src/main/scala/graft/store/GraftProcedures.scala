@@ -166,7 +166,7 @@ object GraftProcedures {
     override def name: String = "details"
     override def description: String =
       "one-row table summary: head version, live files and bytes, " +
-        "metadata-exact row count (NULL on stats-less legacy tables), " +
+        "metadata-exact row count (NULL on stats-less tables), " +
         "deletion-vector count, MOR routing, constraint count, " +
         "skip-index policy"
     override def parameters(): Array[ProcedureParameter] =
@@ -177,9 +177,8 @@ object GraftProcedures {
       val v = MergeStore.version(p).get
       val files = MergeStore.liveFiles(p, Some(v))
       // Sizes come from the manifest's z: lines — zero data-dir stat
-      // calls on a size-lined table; unknown legacy sizes count as 0.
-      val bytes = MergeStore.fileSizes(p, Some(v))
-        .map { case (_, s) => math.max(0L, s) }.sum
+      // calls.
+      val bytes = MergeStore.fileSizes(p, Some(v)).map(_._2).sum
       result(
         StructType(Seq(
           StructField("version", IntegerType, nullable = false),

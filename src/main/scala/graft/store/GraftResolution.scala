@@ -457,8 +457,7 @@ final case class GraftMergeCommand(path: String, source: LogicalPlan,
     val src = org.apache.spark.sql.graftshim.PlanFrames.ofRows(spark, source)
     val v = MergeStore.version(path)
       .getOrElse(sys.error(s"no committed version at $path"))
-    val fields = MergeStore.manifestSchema(path, v).map(_.fields.toSeq)
-      .getOrElse(MergeStore.read(spark, path, Some(v)).schema.fields.toSeq)
+    val fields = MergeStore.manifestSchema(path, v).fields.toSeq
     val cols = fields.map(_.name)
     def asMap(s: Seq[(String, String)]) =
       s.map { case (k, sql) => k -> expr(sql) }.toMap

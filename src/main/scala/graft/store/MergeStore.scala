@@ -97,18 +97,6 @@ object MergeStore {
   def versionRetained(target: String, v: Int): Boolean =
     stateOpt(target, v).isDefined
 
-  /** ScaleProbe hooks: commit a SYNTHETIC manifest through the real
-    * encoder (the checkpoint-cost arm measures metadata bytes and
-    * reconstruction wall at file counts where writing real parquet
-    * would dominate the probe), and drop the reconstruction memo so a
-    * timed walk is genuinely cold. Probe-only — no verb uses these. */
-  private[graft] def commitForProbe(target: String, files: Seq[String],
-                                    parent: Int,
-                                    meta: Map[String, String]): Int =
-    commit(target, files, parent, meta)
-
-  private[graft] def clearStateCacheForProbe(): Unit = stateCache.clear()
-
   // ------------------------------------------------------------------
   // Incremental manifests + periodic checkpoints: commit metadata that
   // is O(CHANGES), not O(live files). A full-snapshot manifest per
@@ -125,10 +113,9 @@ object MergeStore {
   //     `#k=v` metadata set, `~k` metadata unset, `+file` added,
   //     `-file` removed. A trickle merge's manifest holds its few
   //     rewritten files and their fresh stats lines, never the table.
-  //   - Every [[checkpointInterval]]-th commit (and every fresh v0) is
-  //     a FULL snapshot in the legacy format, bounding reconstruction
-  //     to at most `interval` small reads. Legacy manifests ARE full
-  //     snapshots, so pre-delta tables read unchanged.
+  //   - Every [[DefaultCheckpointInterval]]-th commit (or the table's
+  //     `graft.ckpt.interval`; and every fresh v0) is a FULL snapshot,
+  //     bounding reconstruction to at most `interval` small reads.
   //   - Readers reconstruct version V by walking back to the nearest
   //     full manifest (or `v<N>.ckpt` sidecar) and folding the deltas
   //     forward; reconstructed states are memo-cached (manifests are
@@ -146,6 +133,26 @@ object MergeStore {
   /** Reserved metadata key backing the delta marker line. */
   private[store] val FormatKey = "graft.manifest"
 
+  /** Reserved metadata key stamping the on-disk format version. Like
+    * [[TsKey]], [[commit]] writes it on every version, so every full
+    * manifest, parquet checkpoint and vacuum `.ckpt` floor carries it;
+    * reconstruction refuses a full base without it
+    * ([[refuseUnstamped]]). Tables written before the stamp existed
+    * used on-disk shapes this engine no longer reads (schema-less
+    * manifests, size-less files, count-less deletion-vector lines,
+    * mtime-only commit times, inline-parquet manifest slots). */
+  private[store] val FormatVersionKey = "graft.format"
+  private[store] val FormatVersion = "1"
+
+  /** The one refusal of a table whose reconstruction base carries no
+    * format stamp. */
+  private def refuseUnstamped(target: String, v: Int): Nothing =
+    throw new IllegalStateException(
+      s"table at $target predates manifest format $FormatVersion: its " +
+        s"v$v reconstruction base carries no '$FormatVersionKey' stamp. " +
+        "Pre-stamp tables are not readable by this engine; re-create " +
+        "the table from a copy of its rows")
+
   /** Checkpoint-encoding policy (`graft.ckpt.format` TBLPROPERTY):
     * `parquet` writes interval-th full snapshots and vacuum `.ckpt`
     * floors as parquet checkpoints ([[ParquetCkpt]] — columnar,
@@ -155,21 +162,20 @@ object MergeStore {
     * encoder must stay a driver-local write. */
   private[store] val CkptFormatKey = "ckpt.format"
 
-  /** Commits between full-snapshot manifests — the reconstruction walk
-    * is bounded by this. Overridable for the ScaleProbe commit-cost
-    * arm and checkpoint-boundary specs; clamped to ≥ 1 so a zero or
-    * negative override can never divide-by-zero the commit path. */
-  private[store] def checkpointInterval: Int = math.max(1,
-    Integer.getInteger("graft.manifest.checkpoint.interval", 16).intValue())
+  /** Commits between full-snapshot manifests when the table sets no
+    * `graft.ckpt.interval` — the reconstruction walk is bounded by
+    * this. The measured trade-off behind 16 is recorded in SCALE.md
+    * §"INCREMENTAL MANIFESTS + FILE-DISJOINT OCC" (`commit-cost`). */
+  private val DefaultCheckpointInterval = 16
 
   /** Per-table full-snapshot cadence (`graft.ckpt.interval`
     * TBLPROPERTY): a trickle-heavy table can checkpoint less often
-    * (cheaper commits, longer walks), a cold-probed one more often —
-    * without a process-wide property. Falls back to the
-    * [[checkpointInterval]] system default; clamped to ≥ 1. */
+    * (cheaper commits, longer walks), a cold-probed one more often.
+    * Clamped to ≥ 1 so no recorded value can divide-by-zero the
+    * commit path. */
   private def checkpointIntervalFor(meta: Map[String, String]): Int =
     math.max(1, meta.get(CkptIntervalKey).flatMap(_.toIntOption)
-      .getOrElse(checkpointInterval))
+      .getOrElse(DefaultCheckpointInterval))
 
   /** Manifest key behind the `graft.ckpt.interval` TBLPROPERTY. */
   private[store] val CkptIntervalKey = "ckpt.interval"
@@ -181,10 +187,8 @@ object MergeStore {
   // (max(now, parent_ts + 1)). File mtimes are NOT durable commit
   // state: a backup/restore, an rsync, or an object-store migration
   // rewrites them, silently corrupting TIMESTAMP AS OF and the change
-  // feed's _commit_timestamp. [[history]] prefers the in-commit line
-  // and falls back to mtime only for legacy manifests written before
-  // it; a mixed chain stays monotonic because the first stamped commit
-  // seeds from its parent's mtime.
+  // feed's _commit_timestamp. [[history]] reads only the in-commit
+  // line.
   // ------------------------------------------------------------------
 
   /** Manifest meta key holding the commit's own timestamp (millis).
@@ -198,21 +202,20 @@ object MergeStore {
     * needs; correctness never depends on the cache). */
   private val tsCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
-      Option[Long]]()
+      java.lang.Long]()
 
-  /** The in-commit timestamp recorded in the manifest at `p`, if its
-    * writer stamped one — O(manifest bytes), memoized, no state
-    * reconstruction. */
-  private def inCommitTs(p: Path): Option[Long] = {
+  /** The in-commit timestamp recorded in the manifest at `p` —
+    * O(manifest bytes), memoized, no state reconstruction. */
+  private def inCommitTs(p: Path): Long = {
     val key = (p.toAbsolutePath.toString, Files.size(p),
       Files.getLastModifiedTime(p).toMillis)
     if (tsCache.size() > 4096) tsCache.clear()
     tsCache.computeIfAbsent(key, _ =>
-      if (ParquetCkpt.isParquetFile(p)) ParquetCkpt.commitTsOf(p)
-      else readManifestLines(p).collectFirst {
+      readManifestLines(p).collectFirst {
         case l if l.startsWith(s"#$TsKey=") =>
-          l.stripPrefix(s"#$TsKey=")
-      }.flatMap(_.toLongOption))
+          java.lang.Long.valueOf(l.stripPrefix(s"#$TsKey=").toLong)
+      }.getOrElse(throw new IllegalStateException(
+        s"manifest $p carries no in-commit timestamp"))).longValue
   }
 
   private final case class ManifestState(files: Vector[String],
@@ -242,7 +245,6 @@ object MergeStore {
       s.files.size.toLong + s.meta.size
     def get(k: (String, Int, Long, Long)): ManifestState =
       map.synchronized(map.get(k))
-    def clear(): Unit = map.synchronized { map.clear(); weight = 0L }
     def put(k: (String, Int, Long, Long), v: ManifestState): Unit =
       map.synchronized {
         // A single state heavier than the whole budget is never
@@ -311,7 +313,7 @@ object MergeStore {
 
   // ------------------------------------------------------------------
   // Compressed full snapshots: delta encoding made ordinary commits
-  // O(changes), but every checkpointInterval-th snapshot and every
+  // O(changes), but every interval-th snapshot and every
   // vacuum `.ckpt` still wrote the COMPLETE file list + stats/bloom/DV
   // lines as plain text — 1.88 MB at 16 K files, extrapolating to
   // tens of MB per checkpoint at 10⁵–10⁶ files (the public Delta
@@ -321,7 +323,7 @@ object MergeStore {
   // evolution). Snapshots BELOW the threshold stay plain text (small
   // tables keep human-readable, hand-editable manifests; the gzip
   // header costs more than it saves); readers sniff the 0x1f8b magic,
-  // so legacy text manifests and mixed tables read unchanged. Deltas
+  // so text and gzip snapshots mix freely in one chain. Deltas
   // are never compressed — they are already O(changes) bytes.
   // ------------------------------------------------------------------
 
@@ -371,9 +373,10 @@ object MergeStore {
   /** Reconstructed (files, meta) of a committed version; None when both
     * its manifest and its checkpoint sidecar are gone (vacuumed).
     * ITERATIVE reconstruction (not recursive): the walk back to the
-    * nearest full base is normally ≤ [[checkpointInterval]], but a
-    * pathological interval override (or a legacy table committed under
-    * one) must degrade to a long loop, never a StackOverflowError. */
+    * nearest full base is normally ≤ the checkpoint interval, but a
+    * huge `graft.ckpt.interval` must degrade to a long loop, never a
+    * StackOverflowError. Every full base must carry the format stamp —
+    * the one check that refuses pre-stamp tables on every path. */
   private def stateOpt(target: String, v: Int): Option[ManifestState] = {
     if (backingOf(target, v).isEmpty) return None
     // Walk back collecting unapplied delta lines until a cached state,
@@ -391,25 +394,30 @@ object MergeStore {
       val key = cacheKey(target, cur, backing)
       val cached = stateCache.get(key)
       if (cached != null) state = cached
-      else if (ParquetCkpt.isParquetFile(backing)) {
-        // Parquet checkpoints are always FULL snapshots — decode to
-        // the identical (files, meta) the text encoding would carry.
-        val (fs, m) = ParquetCkpt.readState(backing)
-        state = ManifestState(fs.sorted, m)
-        stateCache.put(key, state)
-      } else {
-        val lines = readManifestLines(backing)
-        val isDelta = backing.getFileName.toString.endsWith(".list") &&
-          lines.headOption.contains(DeltaMarkerLine)
-        if (!isDelta) {
-          state = parseFull(lines, s"$target v$cur")
-          stateCache.put(key, state)
-        } else if (cur <= 0) { // a delta v0: fold onto the empty table
-          pending ::= (cur -> lines)
-          state = ManifestState(Vector.empty, Map.empty)
-        } else {
-          pending ::= (cur -> lines)
-          cur -= 1
+      else {
+        val full =
+          if (ParquetCkpt.isParquetFile(backing)) {
+            // Parquet checkpoints are always FULL snapshots — decode to
+            // the identical (files, meta) the text encoding would carry.
+            val (fs, m) = ParquetCkpt.readState(backing)
+            Some(ManifestState(fs.sorted, m))
+          } else {
+            val lines = readManifestLines(backing)
+            if (backing.getFileName.toString.endsWith(".list") &&
+                lines.headOption.contains(DeltaMarkerLine)) {
+              // No writer starts a table with a delta: a delta v0 has
+              // no base, the shape of a pre-stamp table.
+              if (cur <= 0) refuseUnstamped(target, cur)
+              pending ::= (cur -> lines)
+              cur -= 1
+              None
+            } else Some(parseFull(lines, s"$target v$cur"))
+          }
+        full.foreach { st =>
+          if (!st.meta.get(FormatVersionKey).contains(FormatVersion))
+            refuseUnstamped(target, cur)
+          state = st
+          stateCache.put(key, st)
         }
       }
     }
@@ -498,10 +506,9 @@ object MergeStore {
     * (mergeSchema inference opens every live file — thousands of
     * object-store GETs at 100 TB before the first byte of data), and a
     * file-pruned scan no longer pays a full-manifest footer pass just
-    * to learn the column types. Written by every stats-maintaining
-    * commit from the writer's own DataFrame schema (which IS the table
-    * schema, evolution included); absent on legacy manifests, where
-    * reads fall back to mergeSchema inference. */
+    * to learn the column types. Written by every commit from the
+    * writer's own DataFrame schema (which IS the table schema,
+    * evolution included). */
   private[store] val SchemaKey = "schema"
   private def isStatsKey(k: String): Boolean = k.startsWith("s:")
   private def statsKey(file: String, column: String) = s"s:$file:$column"
@@ -530,38 +537,32 @@ object MergeStore {
     * trigger — reads the MANIFEST instead of statting the data
     * directory: at 10⁵–10⁶ files on an object store, a per-pass
     * Files.size sweep is one HEAD request per live file (Delta records
-    * `size` in its add actions for exactly this reason). Legacy
-    * manifests self-heal: the first commit after upgrade stats the
-    * un-lined survivors once and the lines carry from then on. */
+    * `size` in its add actions for exactly this reason). Every commit
+    * records a line for every live file ([[assembleAndCommit]]). */
   private def isSizeKey(k: String): Boolean = k.startsWith("z:")
   private def sizeKey(file: String) = s"z:$file"
 
-  /** Files.size fallbacks taken for size-unlined files — a probe hook
-    * letting the scale suite assert a size-lined table's maintenance
-    * does ZERO data-directory stat calls. */
-  private[graft] val sizeStatFallbacks =
-    new java.util.concurrent.atomic.AtomicLong()
+  /** A live file's recorded byte size; a missing line is a damaged
+    * manifest, never a reason to stat the data directory. */
+  private def recordedSize(target: String, v: Int, f: String,
+                           size: Option[Long]): Long =
+    size.getOrElse(throw new IllegalStateException(
+      s"manifest v$v at $target records no size for live file $f"))
 
-  /** Live files with byte sizes at `version`: manifest `z:` lines when
-    * recorded, a counted Files.size fallback for legacy files. Unknown
-    * (unlined AND unstattable) sizes report -1 — consumers decide
-    * (compactSmall treats them as not-small, details as zero bytes). */
+  /** Live files with byte sizes at `version`, straight off the
+    * manifest's `z:` lines — zero data-directory stat calls. */
   def fileSizes(target: String, version: Option[Int] = None)
       : Seq[(String, Long)] = {
     val v = version.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     coldSizes(target, v) match {
-      case Some(cold) => coldProbeHits.incrementAndGet(); return cold
+      case Some(cold) => return cold
       case None => ()
     }
     val meta = manifestMeta(target, Some(v))
-    liveFiles(target, Some(v)).map { f =>
-      f -> meta.get(sizeKey(f)).flatMap(_.toLongOption).getOrElse {
-        sizeStatFallbacks.incrementAndGet()
-        try Files.size(dataDir(target).resolve(f))
-        catch { case _: java.io.IOException => -1L }
-      }
-    }
+    liveFiles(target, Some(v)).map(f =>
+      f -> recordedSize(target, v, f,
+        meta.get(sizeKey(f)).flatMap(_.toLongOption)))
   }
 
   // ------------------------------------------------------------------
@@ -606,18 +607,16 @@ object MergeStore {
     * through the STABLE physical names: version `v`'s logical name ->
     * version `w`'s logical name, only the names that moved. Lets a
     * span consumer (the CDC source's multi-commit union) align
-    * per-commit frames onto one shape across rename commits. Empty
-    * when either version predates schema-in-the-log. */
+    * per-commit frames onto one shape across rename commits. */
   private[graft] def renameMapBetween(target: String, v: Int,
-                                      w: Int): Map[String, String] =
-    (manifestSchema(target, v), manifestSchema(target, w)) match {
-      case (Some(a), Some(b)) =>
-        val byPhys = b.fields.iterator
-          .map(f => physicalNameOf(f) -> f.name).toMap
-        a.fields.iterator.flatMap(f => byPhys.get(physicalNameOf(f))
-          .filter(_ != f.name).map(f.name -> _)).toMap
-      case _ => Map.empty
-    }
+                                      w: Int): Map[String, String] = {
+    requireSpanReadable(target, v, w)
+    val byPhys = manifestSchema(target, w).fields.iterator
+      .map(f => physicalNameOf(f) -> f.name).toMap
+    manifestSchema(target, v).fields.iterator.flatMap(f =>
+      byPhys.get(physicalNameOf(f)).filter(_ != f.name).map(f.name -> _))
+      .toMap
+  }
 
   /** [[renameAll]] for package consumers (the CDC span union). */
   private[graft] def renameColumns(df: DataFrame,
@@ -690,28 +689,26 @@ object MergeStore {
   }
 
   private def alignBatchTypes(batch: DataFrame,
-      table: Option[org.apache.spark.sql.types.StructType],
-      verb: String): DataFrame = table match {
-    case None => batch
-    case Some(ts) =>
-      val byName = ts.fields.map(f => f.name -> f.dataType).toMap
-      val aligned = batch.schema.fields.map { f =>
-        byName.get(f.name) match {
-          case Some(want)
-              if nullableForm(want) == nullableForm(f.dataType) =>
-            col(f.name)
-          case Some(want)
-              if org.apache.spark.sql.catalyst.expressions.Cast
-                .canUpCast(f.dataType, want) =>
-            col(f.name).cast(nullableForm(want)).as(f.name)
-          case Some(want) => sys.error(
-            s"$verb batch column '${f.name}' is ${f.dataType.sql} but " +
-              s"the table records ${want.sql} — a type-drifted " +
-              "producer; cast the batch explicitly")
-          case None => col(f.name) // evolution-path column
-        }
+      table: org.apache.spark.sql.types.StructType,
+      verb: String): DataFrame = {
+    val byName = table.fields.map(f => f.name -> f.dataType).toMap
+    val aligned = batch.schema.fields.map { f =>
+      byName.get(f.name) match {
+        case Some(want)
+            if nullableForm(want) == nullableForm(f.dataType) =>
+          col(f.name)
+        case Some(want)
+            if org.apache.spark.sql.catalyst.expressions.Cast
+              .canUpCast(f.dataType, want) =>
+          col(f.name).cast(nullableForm(want)).as(f.name)
+        case Some(want) => sys.error(
+          s"$verb batch column '${f.name}' is ${f.dataType.sql} but " +
+            s"the table records ${want.sql} — a type-drifted " +
+            "producer; cast the batch explicitly")
+        case None => col(f.name) // evolution-path column
       }
-      batch.select(aligned.toIndexedSeq: _*)
+    }
+    batch.select(aligned.toIndexedSeq: _*)
   }
 
   /** The nullability to RECORD for a commit built from a user batch:
@@ -722,17 +719,14 @@ object MergeStore {
     * POLICY DRIFT to [[rebaseSafe]]), and widens to nullable when the
     * batch introduces it. */
   private def unionNullability(batch: org.apache.spark.sql.types.StructType,
-      table: Option[org.apache.spark.sql.types.StructType])
-      : org.apache.spark.sql.types.StructType = table match {
-    case None => batch
-    case Some(ts) => org.apache.spark.sql.types.StructType(
-      batch.fields.map { f =>
-        ts.fields.find(_.name == f.name) match {
-          case Some(tf) => f.copy(nullable = f.nullable || tf.nullable)
-          case None => f
-        }
-      })
-  }
+      table: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(batch.fields.map { f =>
+      table.fields.find(_.name == f.name) match {
+        case Some(tf) => f.copy(nullable = f.nullable || tf.nullable)
+        case None => f
+      }
+    })
 
   /** The SQL-standard fill for a column an INSERT omits: the declared
     * DEFAULT (the recorded schema's CURRENT_DEFAULT metadata — a
@@ -757,27 +751,25 @@ object MergeStore {
     Seq(PhysicalNameKey, "CURRENT_DEFAULT", "EXISTS_DEFAULT")
 
   private def withMapping(st: org.apache.spark.sql.types.StructType,
-                          table: Option[org.apache.spark.sql.types.StructType])
-      : org.apache.spark.sql.types.StructType = table match {
-    case None => st
-    case Some(ts) =>
-      val carry: Map[String, Seq[(String, String)]] =
-        ts.fields.iterator.map { f =>
-          f.name -> CarriedFieldMetaKeys.flatMap(k =>
-            if (f.metadata.contains(k)) Seq(k -> f.metadata.getString(k))
-            else Nil)
-        }.filter(_._2.nonEmpty).toMap
-      if (carry.isEmpty) st
-      else org.apache.spark.sql.types.StructType(st.fields.map { f =>
-        carry.get(f.name) match {
-          case Some(kvs) =>
-            val mb = new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata)
-            kvs.foreach { case (k, v) => mb.putString(k, v) }
-            f.copy(metadata = mb.build())
-          case None => f
-        }
-      })
+                          table: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    val carry: Map[String, Seq[(String, String)]] =
+      table.fields.iterator.map { f =>
+        f.name -> CarriedFieldMetaKeys.flatMap(k =>
+          if (f.metadata.contains(k)) Seq(k -> f.metadata.getString(k))
+          else Nil)
+      }.filter(_._2.nonEmpty).toMap
+    if (carry.isEmpty) st
+    else org.apache.spark.sql.types.StructType(st.fields.map { f =>
+      carry.get(f.name) match {
+        case Some(kvs) =>
+          val mb = new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata)
+          kvs.foreach { case (k, v) => mb.putString(k, v) }
+          f.copy(metadata = mb.build())
+        case None => f
+      }
+    })
   }
 
   /** [[manifestMeta]] minus the engine's reserved data-skipping keys
@@ -788,13 +780,13 @@ object MergeStore {
                        version: Option[Int] = None): Map[String, String] =
     manifestMeta(target, version).filterNot { case (k, _) =>
       k == StatsColsKey || k == SchemaKey || k == BloomColsKey ||
-        k == BloomFppKey || k == TsKey || k == CkptFormatKey ||
-        k == CkptIntervalKey || isStatsKey(k) || isBloomKey(k) ||
-        isNullsKey(k) || isSizeKey(k)
+        k == BloomFppKey || k == TsKey || k == FormatVersionKey ||
+        k == CkptFormatKey || k == CkptIntervalKey || isStatsKey(k) ||
+        isBloomKey(k) || isNullsKey(k) || isSizeKey(k)
     }
 
   /** The table's stats columns at a version (empty = no stats kept —
-    * legacy tables, or tables init'd without clustering). */
+    * tables init'd without clustering). */
   def statsColumns(target: String, version: Option[Int] = None): Seq[String] =
     manifestMeta(target, version).get(StatsColsKey)
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
@@ -827,12 +819,13 @@ object MergeStore {
       else s // n: decimal text; d: ISO; t: micros
     }
 
-  /** Raw (decoded) bound text for a caller-supplied scan bound.
-    * Non-finite floats (NaN AND ±Infinity) contribute nothing: NaN is
-    * unorderable, and "Infinity" does not parse as the BigDecimal the
-    * numeric tag compares with — a file whose min/max touches either
-    * simply keeps no stats line and stays a scan candidate, instead of
-    * planting a NumberFormatException in every later pruneFiles walk. */
+  /** Raw (decoded) text of a stats value or bound. Non-finite floats
+    * (NaN AND ±Infinity) contribute nothing: NaN is unorderable, and
+    * "Infinity" does not parse as the BigDecimal the numeric tag
+    * compares with — a file whose min/max touches either simply keeps
+    * no stats line and stays a scan candidate, and a non-finite probe
+    * bound leaves its side unbounded (a superset), instead of planting
+    * a NumberFormatException in a pruneFiles walk. */
   private def rawStatValue(v: Any): Option[String] = v match {
     case null => None
     case d: Double if !java.lang.Double.isFinite(d) => None
@@ -840,14 +833,16 @@ object MergeStore {
     case _ => Some(v.toString)
   }
 
-  /** Raw (decoded) bound text for a caller-supplied scan bound. */
-  private def rawBound(tag: String, v: Any): String = (tag, v) match {
-    case ("t", ts: java.sql.Timestamp) =>
-      (ts.getTime / 1000 * 1000000L + ts.getNanos / 1000).toString
-    case ("t", i: java.time.Instant) =>
-      (i.getEpochSecond * 1000000L + i.getNano / 1000).toString
-    case _ => v.toString
-  }
+  /** Raw (decoded) bound text for a caller-supplied scan bound; None
+    * (an unbounded side) for a bound [[rawStatValue]] rejects. */
+  private def rawBound(tag: String, v: Any): Option[String] =
+    rawStatValue(v).map(text => (tag, v) match {
+      case ("t", ts: java.sql.Timestamp) =>
+        (ts.getTime / 1000 * 1000000L + ts.getNanos / 1000).toString
+      case ("t", i: java.time.Instant) =>
+        (i.getEpochSecond * 1000000L + i.getNano / 1000).toString
+      case _ => text
+    })
 
   /** a < b under the tag's ordering (decoded raw operands). */
   private def statLt(tag: String, a: String, b: String): Boolean = tag match {
@@ -905,11 +900,10 @@ object MergeStore {
   /** Exact row count from the manifest alone — `COUNT(*)` with zero
     * data-file IO. Every `n:` line carries its file's row count, so a
     * table whose every live file has one answers from metadata; files
-    * with deletion vectors subtract their sidecar's position count
-    * (one tiny parquet read per marked file — the vectors, not the
-    * data). None when any live file predates null-count stats (or the
-    * table keeps none): the caller falls back to a scan. At 100 TB
-    * this is the difference between a catalog lookup and a job. */
+    * with deletion vectors subtract the position count their `dv:`
+    * line records. None when the table keeps no stats columns (no `n:`
+    * lines): the caller falls back to a scan. At 100 TB this is the
+    * difference between a catalog lookup and a job. */
   def rowCount(spark: SparkSession, target: String,
                version: Option[Int] = None): Option[Long] = {
     val v = version.orElse(currentVersion(target))
@@ -919,23 +913,13 @@ object MergeStore {
     val nulls = fileNullsOf(target, v)
     val perFile = files.map(f =>
       nulls.get(f).flatMap(_.values.headOption).map(_._2))
-    if (perFile.exists(_.isEmpty)) return None // legacy file: scan instead
-    val live = perFile.flatten.sum
-    val dv = dvMeta(target, Some(v))
-    if (dv.isEmpty) Some(live)
-    else {
-      // Sidecars are disjoint per file and each new sidecar SUPERSEDES
-      // with the union of positions, so the per-file recorded counts
-      // sum to exactly the buried total — COUNT(*) under MOR deletes
-      // is a pure catalog lookup, zero jobs. Any legacy line missing
-      // its count falls back to one tiny sidecar read.
-      val counts = dvCounts(target, Some(v))
-      // keys.toSeq BEFORE mapping: mapping a key SET to counts would
-      // collapse files that happen to share a count.
-      val recorded = dv.keys.toSeq.map(f => counts.getOrElse(f, None))
-      if (recorded.forall(_.isDefined)) Some(live - recorded.flatten.sum)
-      else Some(live - dvPositions(spark, target, dv).count())
-    }
+    if (perFile.exists(_.isEmpty)) return None // stats-less: scan instead
+    // Sidecars are disjoint per file and each new sidecar SUPERSEDES
+    // with the union of positions, so the per-file recorded counts sum
+    // to exactly the buried total — COUNT(*) under MOR deletes is a
+    // pure catalog lookup, zero jobs. (toSeq BEFORE summing: summing a
+    // value SET would collapse files that happen to share a count.)
+    Some(perFile.flatten.sum - dvCounts(target, Some(v)).values.toSeq.sum)
   }
 
   /** Nullness constraints of resolved filter conjuncts:
@@ -998,12 +982,8 @@ object MergeStore {
       bounds.forall { case (c, (tag, lo, hi)) =>
         fs.get(c) match {
           case Some((stag, mn, mx)) if stag == tag =>
-            // A malformed legacy line (an "Infinity" min/max written
-            // before non-finite values were filtered) must keep the
-            // file a candidate, never fail the plan.
-            try !(hi.exists(h => statLt(tag, h, mn)) ||
+            !(hi.exists(h => statLt(tag, h, mn)) ||
               lo.exists(l => statLt(tag, mx, l)))
-            catch { case _: NumberFormatException => true }
           case _ => true // no/foreign stats: candidate
         }
       }
@@ -1086,14 +1066,9 @@ object MergeStore {
     * file name — column-pruned and file-pruned, the cheapest plan that
     * can answer "which files hold matched keys". */
   private def probeScan(spark: SparkSession, target: String, version: Int,
-                        full: => DataFrame, names: Seq[String],
-                        cols: Seq[String]): DataFrame = {
-    val withFile =
-      if (names.isEmpty)
-        full.limit(0).withColumn("__file", lit(""))
-      else readSubsetWithFile(spark, target, version, full, names)
-    withFile.select((cols :+ "__file").map(col): _*)
-  }
+                        names: Seq[String], cols: Seq[String]): DataFrame =
+    readSubsetWithFile(spark, target, version, names)
+      .select((cols :+ "__file").map(col): _*)
 
   /** [[commit]] plus stats upkeep: new files' freshly computed stats
     * lines join the parent's lines for carried files (rewritten files'
@@ -1166,19 +1141,17 @@ object MergeStore {
         s"'$BloomColsKey', '$BloomFppKey', 's:*', 'b:*', 'n:*', 'z:*', " +
         s"'$DvPrefix*' and '$ConstraintPrefix*' are reserved")
     val fileSet = files.toSet
-    // Every live file gets a `z:` size line: carried from the parent
-    // when already recorded, statted ONCE otherwise (a new file just
-    // moved in by writeFiles; a legacy file on its first post-upgrade
-    // commit). Delta encoding makes carried lines free — only the new
-    // files' lines hit the commit bytes.
+    // Every live file gets a `z:` size line: carried from the parent,
+    // statted ONCE for a new file just moved in by writeFiles. Delta
+    // encoding makes carried lines free — only the new files' lines
+    // hit the commit bytes.
     val parentMeta =
       if (parent < 0) Map.empty[String, String]
       else manifestMeta(target, Some(parent))
-    val sizes: Map[String, String] = files.flatMap { f =>
+    val sizes: Map[String, String] = files.map { f =>
       val k = sizeKey(f)
-      parentMeta.get(k).map(k -> _).orElse(
-        try Some(k -> Files.size(dataDir(target).resolve(f)).toString)
-        catch { case _: java.io.IOException => None })
+      k -> parentMeta.getOrElse(k,
+        Files.size(dataDir(target).resolve(f)).toString)
     }.toMap
     // Constraints are table POLICY, not per-commit state: they carry
     // through every verb commit until an explicit dropConstraint, the
@@ -1368,7 +1341,7 @@ object MergeStore {
       else bloomPruneFiles(target, meta, files, colName, values)
     val base =
       if (cand.size == files.size) read(spark, target, Some(v))
-      else readSubset(spark, target, v, read(spark, target, Some(v)), cand)
+      else readSubset(spark, target, v, cand)
     base.where(col(colName).isin(values: _*))
   }
 
@@ -1390,12 +1363,19 @@ object MergeStore {
       }.toSeq.foreach(Files.deleteIfExists)
   }
 
-  /** The manifest-recorded schema of a version, if its writer kept one. */
+  /** The manifest-recorded schema of a version — every commit records
+    * one, so a retained version without it is a damaged manifest. A
+    * vacuumed version fails like [[liveFiles]]. */
   private[store] def manifestSchema(target: String, version: Int)
-      : Option[org.apache.spark.sql.types.StructType] =
-    manifestMeta(target, Some(version)).get(SchemaKey).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      : org.apache.spark.sql.types.StructType =
+    stateOpt(target, version).getOrElse(
+      throw new java.nio.file.NoSuchFileException(
+        listPath(target, version).toString))
+      .meta.get(SchemaKey).map(j =>
+        org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .getOrElse(throw new IllegalStateException(
+        s"manifest v$version at $target records no schema"))
 
   /** Atomically publish `files` as version `parent + 1`, FAILING if that
     * version already exists — the manifest CAS that turns the sink
@@ -1424,16 +1404,12 @@ object MergeStore {
     require(!meta.contains(FormatKey),
       s"manifest metadata key '$FormatKey' is reserved (delta marker)")
     // In-commit timestamp: stamped HERE, monotonic vs the parent's
-    // (whose own stamp — or its manifest mtime, for a legacy parent —
-    // seeds the floor). CAS losers recompute against the fresh parent.
+    // stamp. CAS losers recompute against the fresh parent. The format
+    // stamp rides every version the same way.
     val parentState = if (parent < 0) None else stateOpt(target, parent)
-    val parentTs: Long =
-      if (parent < 0) 0L
-      else parentState.flatMap(_.meta.get(TsKey)).flatMap(_.toLongOption)
-        .orElse(backingOf(target, parent)
-          .map(p => Files.getLastModifiedTime(p).toMillis))
-        .getOrElse(0L)
-    val stamped = meta +
+    val parentTs: Long = parentState.flatMap(_.meta.get(TsKey))
+      .flatMap(_.toLongOption).getOrElse(0L)
+    val stamped = meta + (FormatVersionKey -> FormatVersion) +
       (TsKey -> math.max(System.currentTimeMillis(), parentTs + 1).toString)
     // Callers still pass the FULL file list and FULL metadata map — the
     // commit decides the ENCODING: a delta (only the changes vs the
@@ -1640,32 +1616,27 @@ object MergeStore {
     * versions still inside the retention window. The commit time is
     * the IN-COMMIT `#graft.ts=` line the commit stamped (monotonic by
     * construction, durable under backup/restore/rsync/object-store
-    * migration — Delta's in-commit-timestamps design); legacy
-    * manifests written before the stamp fall back to the manifest's
-    * mtime (the OSS Delta convention: the link lands at CAS win). A
-    * mixed chain stays monotonic because the first stamped commit
-    * seeds from its parent's mtime. O(manifest bytes) per version,
-    * memoized per immutable manifest — never a state reconstruction. */
+    * migration — Delta's in-commit-timestamps design). The head's
+    * (memoized) state is reconstructed once so a pre-stamp table is
+    * refused here as everywhere; the walk itself is O(manifest bytes)
+    * per version, memoized per immutable manifest. */
   def history(target: String): Seq[(Int, Long)] = {
-    val dir = manifestDir(target)
-    if (!Files.isDirectory(dir)) return Nil
-    Files.list(dir).iterator().asScala
+    val head = currentVersion(target).getOrElse(return Nil)
+    stateOpt(target, head): Unit
+    Files.list(manifestDir(target)).iterator().asScala
       .flatMap { p =>
         val n = p.getFileName.toString
         if (n.startsWith("v") && n.endsWith(".list"))
-          Some(n.stripPrefix("v").stripSuffix(".list").toInt ->
-            inCommitTs(p).getOrElse(
-              Files.getLastModifiedTime(p).toMillis))
+          Some(n.stripPrefix("v").stripSuffix(".list").toInt -> inCommitTs(p))
         else None
       }.toSeq.sortBy(_._1)
   }
 
-  /** One version's commit instant (in-commit stamp, else manifest
-    * mtime) — the O(1) accessor for consumers that need a single
-    * version's time (the FileIndex), instead of a [[history]] walk. */
+  /** One version's in-commit instant — the O(1) accessor for consumers
+    * that need a single version's time (the FileIndex), instead of a
+    * [[history]] walk. */
   private[store] def commitTimeOf(target: String, v: Int): Option[Long] =
-    Some(listPath(target, v)).filter(Files.exists(_)).map(p =>
-      inCommitTs(p).getOrElse(Files.getLastModifiedTime(p).toMillis))
+    Some(listPath(target, v)).filter(Files.exists(_)).map(inCommitTs)
 
   final case class CommitInfo(version: Int, commitTimeMs: Long,
                               format: String, addedFiles: Option[Int],
@@ -1680,10 +1651,6 @@ object MergeStore {
     * serves. */
   def historyDetail(target: String): Seq[CommitInfo] =
     history(target).map { case (v, ms) =>
-      if (ParquetCkpt.isParquetFile(listPath(target, v)))
-        CommitInfo(v, ms, "parquet", None, None,
-          ParquetCkpt.liveFileCount(listPath(target, v)))
-      else {
       val lines = readManifestLines(listPath(target, v))
       if (lines.headOption.contains(DeltaMarkerLine))
         CommitInfo(v, ms, "delta",
@@ -1692,7 +1659,6 @@ object MergeStore {
       else
         CommitInfo(v, ms, "full", None, None,
           Some(lines.count(l => l.nonEmpty && !l.startsWith("#"))))
-      }
     }
 
   /** The newest version committed AT OR BEFORE `timestampMillis`
@@ -1770,29 +1736,17 @@ object MergeStore {
     val v = version.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     val files = liveFiles(target, Some(v))
-    if (files.isEmpty) manifestSchema(target, v) match {
-      case Some(st) => return toLogical(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        physicalSchema(st)), st)
-      case None => sys.error(s"no committed version at $target")
-    }
-    val paths = files.map(f => dataDir(target).resolve(f).toString)
-    manifestSchema(target, v) match {
-      // Manifest schema: plan with zero footer reads; files predating
-      // an evolved column null-fill it (the parquet reader's missing-
-      // column rule), exactly as the mergeSchema union showed them.
-      // Files spell renamed columns by their PHYSICAL names; the
-      // logical rename lands above the DV anti-join (alias-only, so
-      // user filters still push into the scan).
-      case Some(st) => toLogical(applyDv(spark, target, v,
-        spark.read.schema(physicalSchema(st)).parquet(paths: _*)), st)
-      // Legacy manifests: mergeSchema inference — after an evolving
-      // merge the untouched carried files keep the OLD physical schema;
-      // the union schema is the table. Cost: a footer read per file.
-      // (No manifest schema means no rename ever happened.)
-      case None => applyDv(spark, target, v,
-        spark.read.option("mergeSchema", "true").parquet(paths: _*))
-    }
+    val st = manifestSchema(target, v)
+    if (files.isEmpty) return toLogical(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      physicalSchema(st)), st)
+    // The manifest schema plans with zero footer reads; files predating
+    // an evolved column null-fill it (the parquet reader's missing-
+    // column rule). Files spell renamed columns by their PHYSICAL
+    // names; the logical rename lands above the DV anti-join
+    // (alias-only, so user filters still push into the scan).
+    toLogical(applyDv(spark, target, v, spark.read.schema(physicalSchema(st))
+      .parquet(files.map(f => dataDir(target).resolve(f).toString): _*)), st)
   }
 
   // ------------------------------------------------------------------
@@ -1823,8 +1777,8 @@ object MergeStore {
   /** datafile -> deletion-vector sidecar name at a version (empty =
     * no vectors; the introspection twin of [[bloomColumns]]). The
     * manifest line is `dv:<file>=<sidecar> <positions>`; the trailing
-    * position count (absent on legacy lines) makes COUNT(*) a pure
-    * catalog lookup — this accessor yields just the sidecar name. */
+    * position count makes COUNT(*) a pure catalog lookup — this
+    * accessor yields just the sidecar name. */
   def dvMeta(target: String,
              version: Option[Int] = None): Map[String, String] =
     manifestMeta(target, version).collect {
@@ -1832,24 +1786,17 @@ object MergeStore {
         k.stripPrefix(DvPrefix) -> dvSidecarName(v)
     }
 
-  private def dvSidecarName(line: String): String = {
-    val i = line.indexOf(' ')
-    if (i < 0) line else line.take(i)
-  }
+  private def dvSidecarName(line: String): String = line.takeWhile(_ != ' ')
 
-  /** datafile -> recorded DV position count at a version; None for a
-    * legacy line written before counts rode the manifest (the caller
-    * falls back to reading that file's sidecar). */
+  /** datafile -> recorded DV position count at a version. */
   def dvCounts(target: String,
-               version: Option[Int] = None): Map[String, Option[Long]] =
+               version: Option[Int] = None): Map[String, Long] =
     manifestMeta(target, version).collect {
       case (k, v) if isDvKey(k) =>
-        k.stripPrefix(DvPrefix) -> (v.split(" ", 2) match {
-          case Array(_, n) =>
-            try Some(n.toLong)
-            catch { case _: NumberFormatException => None }
-          case _ => None
-        })
+        k.stripPrefix(DvPrefix) -> v.split(" ", 2).lift(1)
+          .flatMap(_.toLongOption).getOrElse(throw new IllegalStateException(
+            s"deletion-vector line for ${k.stripPrefix(DvPrefix)} at " +
+              s"$target records no position count: $v"))
     }
 
   /** All marked (data file, position) pairs of `entries` as a DataFrame
@@ -1992,19 +1939,15 @@ object MergeStore {
     // and position are computed directly over the scan, BEFORE the DV
     // anti-join (input_file_name's single-source rule).
     val paths = candidates.map(f => dataDir(target).resolve(f).toString)
-    val stOpt = manifestSchema(target, parentV)
-    val raw = stOpt match {
-      case Some(st) => spark.read.schema(physicalSchema(st)).parquet(paths: _*)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    val st = manifestSchema(target, parentV)
     val alive0 = applyDvJoin(spark, target, parentV,
-      raw.withColumn("__gdvf", element_at(split(input_file_name(), "/"), -1))
+      spark.read.schema(physicalSchema(st)).parquet(paths: _*)
+        .withColumn("__gdvf", element_at(split(input_file_name(), "/"), -1))
         .withColumn("__gdvp", col("_metadata.row_index")),
       "__gdvf", "__gdvp", Some(candidates))
     // The doomed-row predicate speaks logical names; file/position
     // probe columns are already materialized, so the rename is safe.
-    val alive = stOpt.map(toLogical(alive0, _)).getOrElse(alive0)
+    val alive = toLogical(alive0, st)
     val doomed = doomedOf(alive).select("__gdvf", "__gdvp").cache()
     try {
       val affected = doomed.select("__gdvf").distinct()
@@ -2077,8 +2020,7 @@ object MergeStore {
     val parentV = snapshotVersion.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     val before = liveFiles(target, Some(parentV))
-    def full = read(spark, target, Some(parentV))
-    val schema = manifestSchema(target, parentV).getOrElse(full.schema)
+    val schema = manifestSchema(target, parentV)
     val unknown = set.keySet -- schema.fieldNames.toSet
     require(unknown.isEmpty,
       s"UPDATE SET references columns not in $target: " +
@@ -2088,19 +2030,13 @@ object MergeStore {
       pruneByPredicate(spark, target, parentV, before, predicate)
     if (candidates.isEmpty) return UpdateStats(before.size, 0, 0L)
     val paths = candidates.map(f => dataDir(target).resolve(f).toString)
-    val stOpt = manifestSchema(target, parentV)
-    val raw = stOpt match {
-      case Some(st) => spark.read.schema(physicalSchema(st)).parquet(paths: _*)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
     val hit0 = applyDvJoin(spark, target, parentV,
-        raw.withColumn("__gdvf",
+        spark.read.schema(physicalSchema(schema)).parquet(paths: _*)
+          .withColumn("__gdvf",
             element_at(split(input_file_name(), "/"), -1))
           .withColumn("__gdvp", col("_metadata.row_index")),
         "__gdvf", "__gdvp", Some(candidates))
-    val hit = stOpt.map(toLogical(hit0, _)).getOrElse(hit0)
-      .where(matched).cache()
+    val hit = toLogical(hit0, schema).where(matched).cache()
     try {
       val affected = hit.select("__gdvf").distinct()
         .collect().map(_.getString(0)).toSeq.sorted
@@ -2213,9 +2149,10 @@ object MergeStore {
         val dead = dvPositions(spark, target, allMarked)
           .groupBy("__gdvf").count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val total = spark.read.option("mergeSchema", "true").parquet(
-            allMarked.keys.toSeq.sorted
-              .map(f => dataDir(target).resolve(f).toString): _*)
+        val total = spark.read
+          .schema(physicalSchema(manifestSchema(target, parentV)))
+          .parquet(allMarked.keys.toSeq.sorted
+            .map(f => dataDir(target).resolve(f).toString): _*)
           .select(element_at(split(input_file_name(), "/"), -1)
             .as("__gdvf"))
           .groupBy("__gdvf").count()
@@ -2227,9 +2164,8 @@ object MergeStore {
       }
     if (marked.isEmpty) return 0
     val before = liveFiles(target, Some(parentV))
-    def full = read(spark, target, Some(parentV))
-    val schema = manifestSchema(target, parentV).getOrElse(full.schema)
-    val survivors = readSubset(spark, target, parentV, full, marked)
+    val schema = manifestSchema(target, parentV)
+    val survivors = readSubset(spark, target, parentV, marked)
     val newFiles =
       if (survivors.isEmpty) Seq.empty
       else writeFiles(toPhysical(
@@ -2254,33 +2190,20 @@ object MergeStore {
                    version: Option[Int] = None): DataFrame =
     GraftFileIndex.readSkipping(spark, target, version)
 
-  /** Read an explicit subset of a version's files, schema-aligned to
-    * the FULL table (pre-evolution files null-fill appended columns
-    * exactly as [[read]] shows them). With a manifest schema the subset
-    * plans directly against it (no footer inference, no union shim);
-    * legacy manifests align through the `full` plan. `full` must be the
-    * same-version [[read]] plan, passed by name so the schema path
-    * never builds it. */
+  /** Read an explicit subset of a version's files, planned directly
+    * against the manifest schema (no footer inference): pre-evolution
+    * files null-fill appended columns exactly as [[read]] shows them. */
   private def readSubset(spark: SparkSession, target: String, version: Int,
-                         full: => DataFrame, names: Seq[String]): DataFrame =
-    manifestSchema(target, version) match {
-      case Some(st) =>
-        if (names.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-        else toLogical(applyDv(spark, target, version,
-          spark.read.schema(physicalSchema(st)).parquet(
-            names.map(f => dataDir(target).resolve(f).toString): _*),
-          Some(names)), st)
-      case None =>
-        if (names.isEmpty) full.limit(0)
-        else full.limit(0).unionByName(
-          applyDv(spark, target, version,
-            spark.read.option("mergeSchema", "true").parquet(
-              names.map(f => dataDir(target).resolve(f).toString): _*),
-            Some(names)),
-          allowMissingColumns = true)
-    }
+                         names: Seq[String]): DataFrame = {
+    val st = manifestSchema(target, version)
+    if (names.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
+    else toLogical(applyDv(spark, target, version,
+      spark.read.schema(physicalSchema(st)).parquet(
+        names.map(f => dataDir(target).resolve(f).toString): _*),
+      Some(names)), st)
+  }
 
   /** [[readSubset]] carrying a `__file` column (the row's data file
     * name), deletion vectors applied. `__file` and the DV probe's row
@@ -2289,30 +2212,19 @@ object MergeStore {
     * two file sources, so callers must never re-derive the file name
     * on top of a DV-applied frame. */
   private def readSubsetWithFile(spark: SparkSession, target: String,
-                                 version: Int, full: => DataFrame,
+                                 version: Int,
                                  names: Seq[String]): DataFrame = {
-    def marked(raw: DataFrame): DataFrame =
-      applyDvJoin(spark, target, version,
-        raw.withColumn("__file",
-            element_at(split(input_file_name(), "/"), -1))
-          .withColumn("__gdvp0", col("_metadata.row_index")),
-        "__file", "__gdvp0", Some(names)).drop("__gdvp0")
-    manifestSchema(target, version) match {
-      case Some(st) =>
-        if (names.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-            .withColumn("__file", lit(""))
-        else toLogical(marked(spark.read.schema(physicalSchema(st)).parquet(
-          names.map(f => dataDir(target).resolve(f).toString): _*)), st)
-      case None =>
-        if (names.isEmpty) full.limit(0).withColumn("__file", lit(""))
-        else full.limit(0).withColumn("__file", lit(""))
-          .unionByName(marked(spark.read.option("mergeSchema", "true")
-            .parquet(names.map(f =>
-              dataDir(target).resolve(f).toString): _*)),
-            allowMissingColumns = true)
-    }
+    val st = manifestSchema(target, version)
+    if (names.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
+        .withColumn("__file", lit(""))
+    else toLogical(applyDvJoin(spark, target, version,
+      spark.read.schema(physicalSchema(st)).parquet(
+          names.map(f => dataDir(target).resolve(f).toString): _*)
+        .withColumn("__file", element_at(split(input_file_name(), "/"), -1))
+        .withColumn("__gdvp0", col("_metadata.row_index")),
+      "__file", "__gdvp0", Some(names)).drop("__gdvp0"), st)
   }
 
   // ------------------------------------------------------------------
@@ -2328,12 +2240,6 @@ object MergeStore {
   // correct — the cold path is an optimization with a proof burden,
   // never a second source of truth.
   // ------------------------------------------------------------------
-
-  /** Cold parquet probes actually served (vs fallen back) — the spec/
-    * probe hook proving the pruned path engaged, the [[sizeStatFallbacks]]
-    * pattern. */
-  private[graft] val coldProbeHits =
-    new java.util.concurrent.atomic.AtomicLong()
 
   /** One delta manifest's actions, parsed without a base state. */
   private final case class DeltaActs(sets: Map[String, String],
@@ -2360,8 +2266,10 @@ object MergeStore {
   }
 
   /** The chain from `v` down to its nearest full base, ONLY when that
-    * base is a parquet checkpoint and no intermediate state is already
-    * memoized: Some((checkpoint, delta actions oldest-first)). */
+    * base is a format-stamped parquet checkpoint and no intermediate
+    * state is already memoized: Some((checkpoint, delta actions
+    * oldest-first)). An unstamped base takes the normal
+    * reconstruction, whose format check refuses it. */
   private def coldParquetChain(target: String, v: Int)
       : Option[(Path, List[DeltaActs])] = {
     var pending = List.empty[DeltaActs]
@@ -2371,7 +2279,8 @@ object MergeStore {
       if (stateCache.get(cacheKey(target, cur, backing)) != null)
         return None // memoized state is at least as cheap
       if (ParquetCkpt.isParquetFile(backing))
-        return Some((backing, pending))
+        return if (ParquetCkpt.formatOf(backing).contains(FormatVersion))
+          Some((backing, pending)) else None
       val lines = readManifestLines(backing)
       if (!lines.headOption.contains(DeltaMarkerLine)) return None
       pending ::= parseDeltaActs(lines)
@@ -2429,7 +2338,7 @@ object MergeStore {
       case _ => return None
     }
     val basePruned = ParquetCkpt.prunedFiles(base, colName, effTag,
-      lo.map(x => rawBound(effTag, x)), hi.map(x => rawBound(effTag, x)))
+      lo.flatMap(rawBound(effTag, _)), hi.flatMap(rawBound(effTag, _)))
       .getOrElse(return None)
     def overlaps(lineValue: String): Option[Boolean] =
       lineValue.split(" ", 3) match {
@@ -2439,11 +2348,10 @@ object MergeStore {
             val dec = (x: String) =>
               if (t == "s") java.net.URLDecoder.decode(x, "UTF-8") else x
             val (mn, mx) = (dec(mnE), dec(mxE))
-            val l = lo.map(x => rawBound(t, x))
-            val h = hi.map(x => rawBound(t, x))
-            Some(try !(h.exists(b => statLt(t, b, mn)) ||
-              l.exists(b => statLt(t, mx, b)))
-            catch { case _: NumberFormatException => true })
+            val l = lo.flatMap(rawBound(t, _))
+            val h = hi.flatMap(rawBound(t, _))
+            Some(!(h.exists(b => statLt(t, b, mn)) ||
+              l.exists(b => statLt(t, mx, b))))
           }
         case _ => Some(true) // malformed: candidate
       }
@@ -2519,24 +2427,21 @@ object MergeStore {
       }
     }
     Some(sizes.iterator.map { case (f, s) =>
-      f -> s.getOrElse {
-        sizeStatFallbacks.incrementAndGet()
-        try Files.size(dataDir(target).resolve(f))
-        catch { case _: java.io.IOException => -1L }
-      }
+      f -> recordedSize(target, v, f, s)
     }.toSeq.sortBy(_._1))
   }
 
   /** The manifest-pruned candidate file list for a one-column range
-    * probe — exposed for specs and the ScaleProbe skip audit. Bounds
-    * are inclusive; None = unbounded side. */
+    * probe — exposed for specs and skip audits (the measured skip
+    * curves are recorded in SCALE.md §"MANIFEST STATS"). Bounds are
+    * inclusive; None = unbounded side. */
   def candidateFiles(spark: SparkSession, target: String, colName: String,
                      lo: Option[Any], hi: Option[Any],
                      version: Option[Int] = None): Seq[String] = {
     val v = version.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     prunedColdCandidates(target, v, colName, lo, hi) match {
-      case Some(cold) => coldProbeHits.incrementAndGet(); return cold
+      case Some(cold) => return cold
       case None => ()
     }
     val files = liveFiles(target, Some(v))
@@ -2549,8 +2454,8 @@ object MergeStore {
       stats.valuesIterator.flatMap(_.get(colName)).map(_._1)
         .toSet.toList match {
         case tag :: Nil => pruneFiles(files, stats,
-          Map(colName -> (tag, lo.map(rawBound(tag, _)),
-            hi.map(rawBound(tag, _)))))
+          Map(colName -> (tag, lo.flatMap(rawBound(tag, _)),
+            hi.flatMap(rawBound(tag, _)))))
         case _ => files // no stats lines yet, or mixed tags: no pruning
       }
     }
@@ -2574,7 +2479,7 @@ object MergeStore {
     val base =
       if (cand.size == liveFiles(target, Some(v)).size)
         read(spark, target, Some(v))
-      else readSubset(spark, target, v, read(spark, target, Some(v)), cand)
+      else readSubset(spark, target, v, cand)
     val pred = (lo.map(v => col(colName) >= lit(v)) ++
       hi.map(v => col(colName) <= lit(v))).reduce(_ && _)
     base.where(pred)
@@ -2600,15 +2505,15 @@ object MergeStore {
       if (!sCols.contains(c)) None
       else stats.valuesIterator.flatMap(_.get(c)).map(_._1)
         .toSet.toList match {
-        case tag :: Nil => Some(c -> ((tag, lo.map(rawBound(tag, _)),
-          hi.map(rawBound(tag, _)))))
+        case tag :: Nil => Some(c -> ((tag, lo.flatMap(rawBound(tag, _)),
+          hi.flatMap(rawBound(tag, _)))))
         case _ => None
       }
     }.toMap
     val cand = pruneFiles(files, stats, bounds)
     val base =
       if (cand.size == files.size) read(spark, target, Some(v))
-      else readSubset(spark, target, v, read(spark, target, Some(v)), cand)
+      else readSubset(spark, target, v, cand)
     val pred = ranges.iterator.flatMap { case (c, (lo, hi)) =>
       lo.map(x => col(c) >= lit(x)) ++ hi.map(x => col(c) <= lit(x))
     }.reduce(_ && _)
@@ -2687,12 +2592,11 @@ object MergeStore {
     require(keyCols.nonEmpty, s"scanForKeys at $target needs key columns")
     val v = version.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
-    lazy val full = read(spark, target, Some(v))
     val keyRows = keys.select(keyCols.map(col): _*).distinct()
     val before = liveFiles(target, Some(v))
     val candidates = pruneByKeyBounds(target, v, before, keyRows, keyCols)
-    val base = if (candidates.size == before.size) full
-      else readSubset(spark, target, v, full, candidates)
+    val base = if (candidates.size == before.size) read(spark, target, Some(v))
+      else readSubset(spark, target, v, candidates)
     base.join(keyRows, keyCols, "left_semi")
   }
 
@@ -2844,8 +2748,7 @@ object MergeStore {
     val parentV = snapshotVersion.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     val tableSchema = manifestSchema(target, parentV)
-    val tableCols: Seq[String] = tableSchema.map(_.fieldNames.toSeq)
-      .getOrElse(read(spark, target, Some(parentV)).columns.toSeq)
+    val tableCols: Seq[String] = tableSchema.fieldNames.toSeq
     val extra = rows.columns.filterNot(tableCols.contains)
     require(extra.isEmpty,
       s"append batch carries columns absent from the table " +
@@ -2921,11 +2824,8 @@ object MergeStore {
     val files = writeFiles(incoming, target)
     val (fresh, blooms) = freshStatsAndBlooms(spark, target, files,
       sCols, bloomCols, bloomFpp, schema)
-    val sizes: Map[String, String] = files.flatMap { f =>
-      try Some(sizeKey(f) ->
-        Files.size(dataDir(target).resolve(f)).toString)
-      catch { case _: java.io.IOException => None }
-    }.toMap
+    val sizes: Map[String, String] = files.map(f =>
+      sizeKey(f) -> Files.size(dataDir(target).resolve(f)).toString).toMap
     val props = Map(SchemaKey -> schema.json) ++
       (if (sCols.nonEmpty) Map(StatsColsKey -> sCols.mkString(","))
        else Map.empty) ++
@@ -3016,12 +2916,11 @@ object MergeStore {
         return CopyStats(offered.size, 0, skipped.size, 0L, recomputes,
           Some(head))
       val tableSchema = manifestSchema(target, head)
-      val tableCols: Seq[String] = tableSchema.map(_.fieldNames.toSeq)
-        .getOrElse(read(spark, target, Some(head)).columns.toSeq)
+      val tableCols: Seq[String] = tableSchema.fieldNames.toSeq
       val reader0 = spark.read.format(format).options(options)
       val reader =
         if (format == "parquet" || format == "orc") reader0
-        else tableSchema.fold(reader0)(reader0.schema)
+        else reader0.schema(tableSchema)
       val raw = reader.load(toLoad.map(_.getPath.toString): _*)
       val extra = raw.columns.filterNot(tableCols.contains)
       require(extra.isEmpty,
@@ -3130,23 +3029,21 @@ object MergeStore {
     val parentV = snapshotVersion.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     val before = liveFiles(target, Some(parentV))
-    def snapshot = read(spark, target, Some(parentV))
     val ord = if (ordCols.nonEmpty) ordCols.map(col)
       else Seq(monotonically_increasing_id())
     val deduped = Upsert.dedupByKey(
       updates.where(pk.map(col(_).isNotNull).reduce(_ && _)), pk, ord)
-    // With a manifest-recorded schema the verb NEVER builds the
-    // full-table read plan just to learn column names: constructing it
-    // lists every live file (an InMemoryFileIndex pass — a parallel
-    // listing JOB past the discovery threshold, an object-store HEAD
-    // per path at 100 TB), and a pruned trickle merge must stay
-    // O(candidate files) end to end.
+    // The verb NEVER builds the full-table read plan just to learn
+    // column names: constructing it lists every live file (an
+    // InMemoryFileIndex pass — a parallel listing JOB past the
+    // discovery threshold, an object-store HEAD per path at 100 TB),
+    // and a pruned trickle merge must stay O(candidate files) end to
+    // end. The manifest schema answers instead.
     val tableSchema = manifestSchema(target, parentV)
-    val tableCols: Seq[String] =
-      tableSchema.map(_.fieldNames.toSeq).getOrElse(snapshot.columns.toSeq)
+    val tableCols: Seq[String] = tableSchema.fieldNames.toSeq
     // Schema evolution (Delta's mergeSchema shape): with it on, batch
     // columns absent from the table are APPENDED (carried files keep
-    // their physical schema — read()'s mergeSchema nulls them there),
+    // their physical schema — read() null-fills them there),
     // and table columns absent from the batch null-fill on the incoming
     // rows. Off (the default), the batch must project exactly onto the
     // table's columns — a drifted producer fails loudly here instead of
@@ -3162,7 +3059,7 @@ object MergeStore {
     // A renamed-away column's PHYSICAL name is still spelled inside
     // every carried file; evolving in a new column under that name
     // would make two fields collide on disk (and resurrect old bytes).
-    val physTaken = tableSchema.toSeq.flatMap(_.fields)
+    val physTaken = tableSchema.fields
       .filter(f => physicalNameOf(f) != f.name)
       .map(physicalNameOf).toSet
     val collides = extra.filter(physTaken.contains)
@@ -3172,11 +3069,8 @@ object MergeStore {
         "pick another name, or compact and re-init to retire the " +
         "physical name")
     val batchOnlyOrd = ordCols.filterNot(tableCols.contains)
-    def emptyTable = tableSchema match {
-      case Some(st) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      case None => snapshot.limit(0)
-    }
+    def emptyTable = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
     val incoming = (
       if (allowSchemaEvolution)
         emptyTable.unionByName(deduped.drop(batchOnlyOrd: _*),
@@ -3195,7 +3089,7 @@ object MergeStore {
     // input_file_name filter over every live file).
     val candidates = pruneByKeyBounds(target, parentV, before,
       incoming.select(pk.map(col): _*), pk)
-    val liveKeys = probeScan(spark, target, parentV, snapshot, candidates, pk)
+    val liveKeys = probeScan(spark, target, parentV, candidates, pk)
     // Files holding at least one matched PK — the COW rewrite set.
     val affected = liveKeys.join(incoming, pk, "left_semi")
       .select("__file").distinct()
@@ -3207,7 +3101,7 @@ object MergeStore {
     // Survivors of the affected files (their non-matched rows) plus the
     // incoming batch become the replacement files; untouched files are
     // carried into the next manifest as-is.
-    val survivors = readSubset(spark, target, parentV, snapshot,
+    val survivors = readSubset(spark, target, parentV,
         affected.toSeq.sorted)
       .join(incoming, pk, "left_anti")
     val replacement =
@@ -3394,15 +3288,10 @@ object MergeStore {
     val parentV = snapshotVersion.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     val before = liveFiles(target, Some(parentV))
-    def snapshot = read(spark, target, Some(parentV))
     val tableSchema = manifestSchema(target, parentV)
-    val fields: Seq[(String, Option[org.apache.spark.sql.types.DataType])] =
-      tableSchema.map(_.fields.toSeq.map(f => f.name -> Option(f.dataType)))
-        .getOrElse(snapshot.columns.toSeq.map(_ -> None))
-    val tableCols = fields.map(_._1)
+    val tableCols = tableSchema.fieldNames.toSeq
     def toTableType(c: org.apache.spark.sql.Column, name: String) =
-      fields.find(_._1 == name).flatMap(_._2)
-        .map(t => c.cast(nullableForm(t))).getOrElse(c).as(name)
+      c.cast(nullableForm(tableSchema(name).dataType)).as(name)
     (actions.collect { case MatchedUpdate(_, Some(m)) => m } ++
         inserts.flatMap(_.values) ++
         notMatchedBySource.flatMap(_.assignments).toSeq).flatten(_.keys)
@@ -3430,8 +3319,7 @@ object MergeStore {
       // set; liveKeys still feeds the insert anti-join.
       val keyCandidates = pruneByKeyBounds(target, parentV, before,
         src.select(pk.map(col): _*), pk)
-      val liveKeys = probeScan(spark, target, parentV, snapshot,
-        keyCandidates, pk)
+      val liveKeys = probeScan(spark, target, parentV, keyCandidates, pk)
       val matchAffected =
         if (actions.isEmpty) Set.empty[String]
         else liveKeys.join(src, pk, "left_semi")
@@ -3455,8 +3343,7 @@ object MergeStore {
       val bsAffected: Set[String] = notMatchedBySource match {
         case None => Set.empty
         case Some(_) =>
-          readSubsetWithFile(spark, target, parentV, snapshot,
-              bsCandidates)
+          readSubsetWithFile(spark, target, parentV, bsCandidates)
             .join(src, pk, "left_anti").where(bsHit.get)
             .select("__file").distinct()
             .collect().map(_.getString(0)).toSet
@@ -3464,7 +3351,7 @@ object MergeStore {
       val candidates = (keyCandidates ++ bsCandidates).distinct
       val affected = matchAffected ++ bsAffected
 
-      val affectedRows = readSubset(spark, target, parentV, snapshot,
+      val affectedRows = readSubset(spark, target, parentV,
         affected.toSeq.sorted)
       val pairs = affectedRows.alias("t").join(src.alias("s"),
         pk.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
@@ -3535,9 +3422,7 @@ object MergeStore {
                       s"INSERT * needs source column '$c' (absent from " +
                         "the batch) — use a values map to assign a subset")
                     col(s"s.$c")
-                  case Some(m) => m.getOrElse(c,
-                    tableSchema.flatMap(_.fields.find(_.name == c))
-                      .map(defaultFill).getOrElse(lit(null)))
+                  case Some(m) => m.getOrElse(c, defaultFill(tableSchema(c)))
                 }, c)
               }.toIndexedSeq: _*)
           }.reduce(_.unionByName(_))
@@ -3674,13 +3559,11 @@ object MergeStore {
     val parentV = snapshotVersion.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     val before = liveFiles(target, Some(parentV))
-    // `full` stays UNBUILT on the pruned path: constructing the plan
-    // lists every live file (an object-store HEAD per path at 100 TB),
-    // so a key-local verb against a clustered table must never force
-    // it — the schema comes from the manifest, the probe and rewrite
-    // read candidate files by name.
-    def full = read(spark, target, Some(parentV))
-    val schema = manifestSchema(target, parentV).getOrElse(full.schema)
+    // The full-table plan is never built: constructing it lists every
+    // live file (an object-store HEAD per path at 100 TB), so the
+    // schema comes from the manifest and the probe and rewrite read
+    // candidate files by name.
+    val schema = manifestSchema(target, parentV)
     // Key-form deletes prune the doomed-row probe via manifest stats
     // (a key batch outside a file's range can't kill rows there);
     // predicate deletes prune by the bounds the predicate itself
@@ -3693,7 +3576,7 @@ object MergeStore {
         .map(p => pruneByPredicate(spark, target, parentV, before, p))
         .getOrElse(before)
     }
-    val live = readSubsetWithFile(spark, target, parentV, full, candidates)
+    val live = readSubsetWithFile(spark, target, parentV, candidates)
     val dead = doomed(live)
     val affected = dead.select("__file").distinct()
       .collect().map(_.getString(0)).toSet
@@ -3702,7 +3585,7 @@ object MergeStore {
     val rowsDeleted = dead.count()
     // Rewrite reads the affected files BY NAME — never a post-scan
     // file-name filter over the whole table.
-    val kept = survivors(readSubset(spark, target, parentV, full,
+    val kept = survivors(readSubset(spark, target, parentV,
         affected.toSeq.sorted))
       .drop("__file")
     // A fully-dead file set writes nothing — the manifest just drops it.
@@ -3809,11 +3692,9 @@ object MergeStore {
       : Seq[String] = {
     val sColsEarly = statsColumns(target, Some(parentV))
     if (sColsEarly.isEmpty) return files // no stats: skip the analysis too
-    val schemaPlan = manifestSchema(target, parentV) match {
-      case Some(st) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      case None => read(spark, target, Some(parentV))
-    }
+    val schemaPlan = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      manifestSchema(target, parentV))
     // The same analyzed condition serves both extractions: value
     // bounds for min/max lines, nullness for null-count lines (a
     // DELETE WHERE c IS NULL against a mostly-complete table prunes
@@ -3850,7 +3731,7 @@ object MergeStore {
         .toSet.toList match {
         case tag :: Nil =>
           try pruneFiles(fs, stats, Map(c -> (tag,
-            lo.map(rawBound(tag, _)), hi.map(rawBound(tag, _)))))
+            lo.flatMap(rawBound(tag, _)), hi.flatMap(rawBound(tag, _)))))
           catch { case _: Throwable => fs } // un-encodable literal: no prune
         case _ => fs
       }
@@ -3935,8 +3816,7 @@ object MergeStore {
     // match the files), so pushed filters name physical columns; stats
     // and bloom lines key by logical name. Physical names are unique,
     // so the translation is unambiguous.
-    val ren = manifestSchema(target, version)
-      .map(logicalByPhysical).getOrElse(Map.empty)
+    val ren = logicalByPhysical(manifestSchema(target, version))
     def logical(c: String): String = ren.getOrElse(c, c)
     val afterBounds = pruneByConstraints(target, version, files,
       boundsOfExpressions(filters).map { case (c, lo, hi) =>
@@ -4000,10 +3880,7 @@ object MergeStore {
     val parentV = snapshotVersion.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     val before = liveFiles(target, Some(parentV))
-    // Lazy for the same reason as delete: the pruned path never lists
-    // (or requires the existence of) out-of-range files.
-    def full = read(spark, target, Some(parentV))
-    val schema = manifestSchema(target, parentV).getOrElse(full.schema)
+    val schema = manifestSchema(target, parentV)
     val unknown = set.keySet -- schema.fieldNames.toSet
     require(unknown.isEmpty,
       s"UPDATE SET references columns not in $target: " +
@@ -4011,7 +3888,7 @@ object MergeStore {
     val matched = coalesce(predicate, lit(false))
     val candidates =
       pruneByPredicate(spark, target, parentV, before, predicate)
-    val live = readSubsetWithFile(spark, target, parentV, full, candidates)
+    val live = readSubsetWithFile(spark, target, parentV, candidates)
     val hit = live.where(matched)
     val affected = hit.select("__file").distinct()
       .collect().map(_.getString(0)).toSet
@@ -4027,7 +3904,7 @@ object MergeStore {
     val rowsUpdated = hit.count()
     // Rewrite reads the affected files BY NAME; untouched rows in them
     // re-write verbatim (COW granularity is the file, not the row).
-    val updated = readSubset(spark, target, parentV, full,
+    val updated = readSubset(spark, target, parentV,
         affected.toSeq.sorted)
       .select(schema.fields.map { f =>
         set.get(f.name) match {
@@ -4170,7 +4047,7 @@ object MergeStore {
           Files.createLink(to, from)
         }
       } else if (isDvKey(k)) {
-        val name = dvSidecarName(sidecar) // value may carry "<name> <n>"
+        val name = dvSidecarName(sidecar) // value is "<name> <n>"
         val from = dvDir(source).resolve(name)
         val to = dvDir(dest).resolve(name)
         if (Files.exists(from) && !Files.exists(to)) {
@@ -4275,7 +4152,7 @@ object MergeStore {
           Files.createLink(to, from)
         }
       } else if (isDvKey(k)) {
-        val name = dvSidecarName(sidecar) // value may carry "<name> <n>"
+        val name = dvSidecarName(sidecar) // value is "<name> <n>"
         val from = dvDir(branch).resolve(name)
         val to = dvDir(source).resolve(name)
         if (Files.exists(from) && !Files.exists(to)) {
@@ -4379,13 +4256,11 @@ object MergeStore {
           require(d > 0 && d < 1,
             s"graft.bloom.fpp wants a double in (0,1), got '$v'")
         case _ =>
-          manifestSchema(target, parentV).foreach { schema =>
-            val missing = v.split(',').map(_.trim).filter(_.nonEmpty)
-              .filterNot(schema.fieldNames.contains)
-            require(missing.isEmpty,
-              s"$property names column(s) not in the table's schema: " +
-                missing.mkString(", "))
-          }
+          val missing = v.split(',').map(_.trim).filter(_.nonEmpty)
+            .filterNot(manifestSchema(target, parentV).fieldNames.contains)
+          require(missing.isEmpty,
+            s"$property names column(s) not in the table's schema: " +
+              missing.mkString(", "))
       }
     }
     val meta = manifestMeta(target, Some(parentV))
@@ -4412,17 +4287,14 @@ object MergeStore {
     * job). Time travel below the drop still shows the column. Refused
     * when the column is a stats/bloom/cluster participant or a CHECK
     * constraint references it (drop those first — a silent skip-column
-    * drop would un-prune existing consumers), and on legacy
-    * schema-less manifests (compact once to record the schema).
+    * drop would un-prune existing consumers).
     * ADD COLUMN is merge's `allowSchemaEvolution`; RENAME is
     * [[renameColumn]] (column mapping). */
   def dropColumn(spark: SparkSession, target: String,
                  colName: String): Int = {
     val parentV = currentVersion(target)
       .getOrElse(sys.error(s"no committed version at $target"))
-    val schema = manifestSchema(target, parentV).getOrElse(sys.error(
-      s"dropColumn at $target needs a manifest-recorded schema — " +
-        "run compact once to record it"))
+    val schema = manifestSchema(target, parentV)
     require(schema.fieldNames.contains(colName),
       s"no column '$colName' at $target")
     require(schema.fields.length > 1,
@@ -4480,8 +4352,7 @@ object MergeStore {
     *
     * Refused when a CHECK constraint references the column (its SQL
     * text would silently stop binding — drop and re-add it spelled
-    * with the new name), when `to` is already a logical column, and on
-    * legacy schema-less manifests (compact once to record the schema).
+    * with the new name), and when `to` is already a logical column.
     * The freed logical name stays RESERVED on disk: schema evolution
     * refuses to add a column whose name collides with any mapped
     * field's physical name (the carried files still spell it — a new
@@ -4490,9 +4361,7 @@ object MergeStore {
                    from: String, to: String): Int = {
     val parentV = currentVersion(target)
       .getOrElse(sys.error(s"no committed version at $target"))
-    val schema = manifestSchema(target, parentV).getOrElse(sys.error(
-      s"renameColumn at $target needs a manifest-recorded schema — " +
-        "run compact once to record it"))
+    val schema = manifestSchema(target, parentV)
     require(schema.fieldNames.contains(from),
       s"no column '$from' at $target")
     require(to != from, s"renameColumn at $target: '$from' -> itself")
@@ -4559,14 +4428,12 @@ object MergeStore {
     * Refused when the name is already a logical column, or when it
     * collides with a mapped field's ON-DISK name (the carried files
     * spell that name — a new field over it would resurrect the renamed
-    * column's bytes), and on legacy schema-less manifests. */
+    * column's bytes). */
   def addColumn(spark: SparkSession, target: String, colName: String,
                 dataType: org.apache.spark.sql.types.DataType): Int = {
     val parentV = currentVersion(target)
       .getOrElse(sys.error(s"no committed version at $target"))
-    val schema = manifestSchema(target, parentV).getOrElse(sys.error(
-      s"addColumn at $target needs a manifest-recorded schema — " +
-        "run compact once to record it"))
+    val schema = manifestSchema(target, parentV)
     require(!schema.fieldNames.contains(colName),
       s"column '$colName' already exists at $target")
     require(colName.nonEmpty && !colName.exists(c => c == ':' || c == '=' ||
@@ -4600,9 +4467,7 @@ object MergeStore {
                        colName: String, default: Option[String]): Int = {
     val parentV = currentVersion(target)
       .getOrElse(sys.error(s"no committed version at $target"))
-    val schema = manifestSchema(target, parentV).getOrElse(sys.error(
-      s"setColumnDefault at $target needs a manifest-recorded schema — " +
-        "run compact once to record it"))
+    val schema = manifestSchema(target, parentV)
     val f = schema.fields.find(_.name == colName).getOrElse(sys.error(
       s"no column '$colName' at $target — columns: " +
         schema.fieldNames.mkString(", ")))
@@ -4747,12 +4612,10 @@ object MergeStore {
       if (g.stale(markerValue(target, g.key, Some(parentV)).map(_.toLong)))
         return ApplyStats(before.size, 0, 0L, 0L, skippedReplay = true)
     }
-    // Schema and columns come from the manifest when recorded — the
-    // full-table read plan (a listing job over every live file) is
-    // never built on the pruned path, same as merge/delete.
-    def snapshot = read(spark, target, Some(parentV))
+    // Schema and columns come from the manifest — the full-table read
+    // plan (a listing job over every live file) is never built, same
+    // as merge/delete.
     val recorded = manifestSchema(target, parentV)
-      .getOrElse(withMapping(snapshot.schema, None))
     val ord = if (ordCols.nonEmpty) ordCols.map(col)
       else Seq(monotonically_increasing_id())
     val incoming = Upsert.dedupByKey(
@@ -4783,7 +4646,7 @@ object MergeStore {
       val candidates = pruneByKeyBounds(target, parentV, before,
         incoming.select(pk.map(col): _*)
           .unionByName(keys.select(pk.map(col): _*)), pk)
-      val liveKeys = probeScan(spark, target, parentV, snapshot, candidates, pk)
+      val liveKeys = probeScan(spark, target, parentV, candidates, pk)
       val matchedUp = liveKeys.join(incoming, pk, "left_semi")
       val matchedDel = liveKeys.join(keys, pk, "left_semi")
       val affected = matchedUp.select("__file")
@@ -4803,7 +4666,7 @@ object MergeStore {
             sCols, recorded, bCols, bloomFpp)
         return ApplyStats(before.size, 0, 0L, 0L)
       }
-      val survivors = readSubset(spark, target, parentV, snapshot,
+      val survivors = readSubset(spark, target, parentV,
           affected.toSeq.sorted)
         .join(incoming, pk, "left_anti")
         .join(keys, pk, "left_anti")
@@ -4857,21 +4720,15 @@ object MergeStore {
   }
 
   /** Read a version's files for the diff/changes span machinery, with
-    * the same schema discipline as [[read]]: when the manifest carries a
-    * schema, plan against its PHYSICAL shape directly — zero footer
-    * reads, no distributed mergeSchema-inference job per span side (a
-    * per-commit CDC replay otherwise pays one such job per commit per
-    * side); files predating an evolved column null-fill it and columns
-    * dropped from the manifest never surface, both exactly the shapes
-    * the mergeSchema union ended up showing after alignment. Legacy
-    * manifests (no schema line) keep the inference path. */
+    * the same schema discipline as [[read]]: plan against the manifest
+    * schema's PHYSICAL shape directly — zero footer reads, no
+    * distributed schema-inference job per span side; files predating
+    * an evolved column null-fill it and columns dropped from the
+    * manifest never surface. */
   private def readSpanFiles(spark: SparkSession, target: String, v: Int,
                             paths: Seq[String]): DataFrame =
-    manifestSchema(target, v) match {
-      case Some(st) => spark.read.schema(physicalSchema(st)).parquet(paths: _*)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    spark.read.schema(physicalSchema(manifestSchema(target, v)))
+      .parquet(paths: _*)
 
   /** Row-level diff between two committed versions (change-data-feed
     * lite): the rows of `toVersion` that are NOT in `fromVersion` — i.e.
@@ -4887,8 +4744,7 @@ object MergeStore {
     // BOTH sides surface the TO version's logical names: physical
     // (on-disk) names are the stable identity across a rename, so a
     // span straddling a rename commit still aligns row-for-row.
-    val renames = manifestSchema(target, toVersion)
-      .map(logicalByPhysical).getOrElse(Map.empty)
+    val renames = logicalByPhysical(manifestSchema(target, toVersion))
     def readFiles(names: Seq[String], v: Int): Option[DataFrame] =
       if (names.isEmpty) None
       else Some(renameAll(applyDv(spark, target, v,
@@ -4948,8 +4804,7 @@ object MergeStore {
           changed.map(f => dataDir(target).resolve(f).toString))
         .withColumn("__gdvf", element_at(split(input_file_name(), "/"), -1))
         .withColumn("__gdvp", col("_metadata.row_index")),
-      manifestSchema(target, toVersion)
-        .map(logicalByPhysical).getOrElse(Map.empty))
+      logicalByPhysical(manifestSchema(target, toVersion)))
     def rowsAt(pos: DataFrame): DataFrame =
       content.join(broadcast(pos), Seq("__gdvf", "__gdvp"), "left_semi")
         .drop("__gdvf", "__gdvp")
@@ -4984,8 +4839,7 @@ object MergeStore {
     requireSpanReadable(target, fromVersion, toVersion)
     // Both sides in the TO version's logical names (see [[diff]]) —
     // `pk` is spelled in the consumer's present-day names.
-    val renames = manifestSchema(target, toVersion)
-      .map(logicalByPhysical).getOrElse(Map.empty)
+    val renames = logicalByPhysical(manifestSchema(target, toVersion))
     def readFiles(names: Seq[String], v: Int): Option[DataFrame] =
       if (names.isEmpty) None
       else Some(renameAll(applyDv(spark, target, v,
@@ -5129,8 +4983,8 @@ object MergeStore {
       else df.repartition(targetFiles)
     // Stats carry through a compaction (every file is new, so every
     // stats line recomputes); `statsCols = Some(...)` additionally
-    // ENABLES skipping on a legacy stats-less table — the upgrade path:
-    // one compaction backfills the whole table's stats.
+    // ENABLES skipping on a stats-less table — one compaction
+    // backfills the whole table's stats.
     val sCols = statsCols.getOrElse(statsColumns(target, Some(parentV)))
       .filter(c => df.schema.fields.exists(f =>
         f.name == c && tagOf(f.dataType).isDefined))
@@ -5165,8 +5019,7 @@ object MergeStore {
     * recomputes (`maxRetries`), exactly the row-level verbs' contract.
     *
     * File sizes come from the manifest's `z:` lines ([[fileSizes]]) —
-    * zero data-directory stat calls on any table committed since the
-    * lines landed; legacy files fall back to one counted Files.size. */
+    * zero data-directory stat calls. */
   def compactSmall(spark: SparkSession, target: String, smallBytes: Long,
                    targetFileBytes: Long = 128L << 20,
                    maxRetries: Int = 0,
@@ -5190,15 +5043,12 @@ object MergeStore {
     val parentV = snapshotVersion.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     val before = liveFiles(target, Some(parentV))
-    // Unknown sizes (-1: unlined legacy file whose stat failed) are
-    // NOT small — never rewrite a file whose size can't be proven.
     val small = fileSizes(target, Some(parentV))
-      .filter { case (_, s) => s >= 0 && s < smallBytes }
+      .filter { case (_, s) => s < smallBytes }
     if (small.size < 2) return CompactStats(parentV, 0, 0)
     val smallNames = small.map(_._1)
     val smallSet = smallNames.toSet
-    def full = read(spark, target, Some(parentV))
-    val df = readSubset(spark, target, parentV, full, smallNames)
+    val df = readSubset(spark, target, parentV, smallNames)
     val nOut = math.max(1, math.ceil(
       small.map(_._2).sum.toDouble / targetFileBytes).toInt)
     val recorded = withMapping(df.schema, manifestSchema(target, parentV))
@@ -5264,16 +5114,14 @@ object MergeStore {
     if (Files.exists(ckptPath(target, v))) return v
     val backing = listPath(target, v)
     val isDeltaBacking = Files.exists(backing) &&
-      !ParquetCkpt.isParquetFile(backing) &&
       readManifestLines(backing).headOption.contains(DeltaMarkerLine)
     // A non-delta backing already bounds the walk at v. A sidecar
     // still pays ONE case: a text-full slot under the parquet policy
     // (a fresh table's v0, whose commit wrote the cheap gzip text and
     // enqueued this conversion) — the columnar sidecar is what serves
     // the cold predicate-pruned probes.
-    if (!isDeltaBacking && (ParquetCkpt.isParquetFile(backing) ||
-        !manifestMeta(target, Some(v)).get(CkptFormatKey)
-          .contains("parquet")))
+    if (!isDeltaBacking && !manifestMeta(target, Some(v)).get(CkptFormatKey)
+        .contains("parquet"))
       return v
     stateOpt(target, v).foreach { st =>
       // Size estimate by arithmetic — never build the full-state

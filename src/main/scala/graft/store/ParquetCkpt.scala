@@ -55,15 +55,17 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   * snapshots mix freely in one manifest chain. */
 private[graft] object ParquetCkpt {
 
-  /** Footer keys. `files` = live-file row count (history serves it
-    * without scanning); `statscols` = the table's `stats.cols` policy
-    * at checkpoint time (the cold pruned probe needs it before any
-    * state exists); `cols` = the column-group map. */
+  /** Footer keys. `files` = live-file row count; `statscols` = the
+    * table's `stats.cols` policy at checkpoint time (the cold pruned
+    * probe needs it before any state exists); `cols` = the column-group
+    * map; `format` = the manifest format stamp (the cold probe checks
+    * it without scanning rows). */
   private val VersionKey = "graft.ckpt.v"
   private val FilesKey = "graft.ckpt.files"
   private val StatsColsKey = "graft.ckpt.statscols"
   private val ColsKey = "graft.ckpt.cols"
   private val TsKey = "graft.ckpt.ts"
+  private val FormatKey = "graft.ckpt.format"
 
   private def enc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
@@ -215,6 +217,7 @@ private[graft] object ParquetCkpt {
       // The in-commit timestamp doubles in the footer so history()
       // reads it without scanning rows (it is a generic row too).
       TsKey -> meta.getOrElse(MergeStore.TsKey, ""),
+      FormatKey -> meta.getOrElse(MergeStore.FormatVersionKey, ""),
       ColsKey -> (
         statGroups.zipWithIndex.map { case (g, i) =>
           s"s,$i,${enc(g.col)},${g.tag},${g.kind}"
@@ -265,15 +268,8 @@ private[graft] object ParquetCkpt {
           raw.split(" ", 3) match {
             case Array(tag, mn, mx) =>
               if (cg.kind == "f") {
-                // Malformed numeric text (a legacy "Infinity" line)
-                // keeps the raw value but writes no typed bounds —
-                // the pruned probe then keeps the file a candidate.
-                try {
-                  g.add(statMinI(i),
-                    floorDouble(new java.math.BigDecimal(mn)))
-                  g.add(statMaxI(i),
-                    ceilDouble(new java.math.BigDecimal(mx)))
-                } catch { case _: NumberFormatException => () }
+                g.add(statMinI(i), floorDouble(new java.math.BigDecimal(mn)))
+                g.add(statMaxI(i), ceilDouble(new java.math.BigDecimal(mx)))
               } else {
                 g.add(statMinI(i), decodedBound(tag, mn))
                 g.add(statMaxI(i), decodedBound(tag, mx))
@@ -408,10 +404,10 @@ private[graft] object ParquetCkpt {
     (files.result(), meta.result())
   }
 
-  /** Live-file count straight off the footer — `historyDetail` serves
-    * a parquet snapshot without scanning it. */
-  def liveFileCount(p: Path): Option[Int] =
-    footerMeta(p).get(FilesKey).flatMap(_.toIntOption)
+  /** The manifest format stamp recorded at checkpoint time, off the
+    * footer — no row scan. */
+  def formatOf(p: Path): Option[String] =
+    footerMeta(p).get(FormatKey).filter(_.nonEmpty)
 
   /** The in-commit timestamp the snapshot's commit stamped, off the
     * footer — no row scan. */

@@ -32,16 +32,33 @@ object RawStore {
 
   def path(root: String, endpoint: String): String = s"$root/raw/$endpoint"
 
+  /** Whether `target` holds at least one data file — a file Spark
+    * would read: no path component below `target` starts with `_` or
+    * `.`, so a crashed writer's `_temporary/` does not count. It is the
+    * ONLY condition under which a store load counts as a first load: a
+    * target that holds data but fails to read is an error, never an
+    * empty store (treating it as one would rewrite every page past the
+    * hash guard, or report the whole core table as inserted). */
+  private[store] def hasDataFiles(spark: SparkSession,
+                                  target: String): Boolean = {
+    val root = new org.apache.hadoop.fs.Path(target)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def holdsData(dir: org.apache.hadoop.fs.Path): Boolean =
+      fs.listStatus(dir).exists { st =>
+        val n = st.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".") &&
+          (!st.isDirectory || holdsData(st.getPath))
+      }
+    fs.exists(root) && holdsData(root)
+  }
+
   /** Hash-guarded page upsert. `pages` columns: year, page_number,
     * source_url, source_hash, ingested_at, record_count, payload. */
   def upsertPages(spark: SparkSession, pages: DataFrame, root: String,
                   endpoint: String): Long = {
     val target = path(root, endpoint)
-    val exists = new java.io.File(target).exists() ||
-      target.startsWith("hdfs:") || target.startsWith("s3")
     val existing: Option[DataFrame] =
-      if (exists)
-        try Some(spark.read.parquet(target)) catch { case _: Throwable => None }
+      if (hasDataFiles(spark, target)) Some(spark.read.parquet(target))
       else None
 
     existing match {

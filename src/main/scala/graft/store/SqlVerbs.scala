@@ -116,7 +116,7 @@ object SqlVerbs {
         "file-clustered, not hive-partitioned")
     val data =
       org.apache.spark.sql.graftshim.PlanFrames.ofRows(spark, i.query)
-    val fields = tableFields(spark, path)
+    val fields = tableFields(path)
     val aligned =
       if (i.userSpecifiedCols.isEmpty) {
         require(data.columns.length == fields.length,
@@ -149,12 +149,11 @@ object SqlVerbs {
       else MergeStore.append(spark, aligned, path, maxRetries = maxRetries))
   }
 
-  private def tableFields(spark: SparkSession, path: String)
+  private def tableFields(path: String)
       : Seq[org.apache.spark.sql.types.StructField] = {
     val v = MergeStore.version(path)
       .getOrElse(sys.error(s"no committed version at $path"))
-    MergeStore.manifestSchema(path, v).map(_.fields.toSeq)
-      .getOrElse(MergeStore.read(spark, path, Some(v)).schema.fields.toSeq)
+    MergeStore.manifestSchema(path, v).fields.toSeq
   }
 
   private def executeMerge(spark: SparkSession, m: MergeIntoTable,
@@ -299,7 +298,7 @@ object SqlVerbs {
                                 source: DataFrame, ia: InsertAction,
                                 sNames: Set[String],
                                 pk: Seq[String]): DataFrame = {
-    val fields = tableFields(spark, path)
+    val fields = tableFields(path)
     val vals = ia.assignments.map { case Assignment(k, v) =>
       attrName(k, Set.empty) -> mapSourceOnly(v, Set.empty, sNames,
         source.columns.map(_.toLowerCase).toSet)
@@ -449,7 +448,7 @@ object SqlVerbs {
     * reference whose head is one of these is STRUCT-FIELD access, not
     * a table qualifier. */
   private def columnRoots(spark: SparkSession, path: String): Set[String] =
-    tableFields(spark, path).map(_.name.toLowerCase).toSet
+    tableFields(path).map(_.name.toLowerCase).toSet
 
   /** Strip the statement's OWN alias/table qualifier from column
     * references (`t.x` → `x`, `t.meta.kind` → `meta.kind` when `t`

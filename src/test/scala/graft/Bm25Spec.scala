@@ -288,47 +288,39 @@ class Bm25Spec extends SparkSpec {
     assert(run(dir) == run(scratch))
   }
 
-  test("legacy doc-only tombstones: re-inserted doc survives migration (no MaxValue burial)") {
+  test("pre-segment index shapes (doc-only tombstones, seg-less postings) are refused") {
     import org.apache.spark.sql.functions.col
     import scala.jdk.CollectionConverters._
     val docs = graft.core.Tables.load(spark, sf(), "documents")
       .select(col("doc_id"), col("text"))
+    val qs = Seq(0 -> "dup hash join").toDF("query_id", "qtext")
+    def search(d: String) =
+      Bm25.searchTopKIndexed(d, qs, "query_id", "qtext", k = 10).collect()
+    def rewrite(p: java.nio.file.Path, df: org.apache.spark.sql.DataFrame) = {
+      val rows = df.collect().toSeq
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists)
+      spark.createDataFrame(rows.asJava, df.schema).write.parquet(p.toString)
+    }
+    // Doc-only tombstones: strip the markers' max_seg column in place.
     val dir = tmpDir("bm25-legacy")
     Bm25.buildIndex(docs, "doc_id", "text", dir) // v0
     Bm25.deleteFromIndex(spark, dir,
       docs.where(col("doc_id") % 11 === 0).select(col("doc_id"))) // v1
-    // Simulate a PRE-UPGRADE index: strip the markers to the legacy
-    // doc-only shape (no max_seg column) in place.
     val snap = Bm25.resolveSnapshot(dir, Some(1))
-    val markerIds = spark.read.parquet(s"$snap/tombstones")
-      .select("doc").as[Long].collect().toSeq
     val tPath = java.nio.file.Paths.get(snap, "tombstones")
-    java.nio.file.Files.walk(tPath).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.deleteIfExists)
-    markerIds.toDF("doc").write.parquet(tPath.toString)
-    // Re-insert one tombstoned doc: its postings land at seg = 2, above
-    // the legacy markers' normalized reach (the marker snapshot's own
-    // version, 1) — under the old MaxValue normalization the revision
-    // was silently buried and excluded from df/doclen.
-    val backId = markerIds.min
-    val back = docs.where(col("doc_id") === backId)
-    val backTerm = back.head.getString(1).split(" ")
-      .find(_.nonEmpty).get
-    Bm25.appendToIndex(back, "doc_id", "text", dir) // v2
-    val qs = Seq(0 -> backTerm, 1 -> "dup hash join")
-      .toDF("query_id", "qtext")
-    def run(d: String) =
-      Bm25.searchTopKIndexed(d, qs, "query_id", "qtext", k = 10)
-        .select(col("query_id"), col("rank"), col("doc"), col("score"))
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
-          r.getDouble(3))).toSeq.sorted
-    // Bit-identical to an index that only ever saw the effective corpus
-    // (victims gone, one re-inserted) — burial would both drop the doc
-    // and skew df/doclen.
-    val scratch = tmpDir("bm25-legacy-scratch")
-    Bm25.buildIndex(docs.where(col("doc_id") % 11 =!= 0)
-      .unionByName(back), "doc_id", "text", scratch)
-    assert(run(dir) == run(scratch))
+    rewrite(tPath, spark.read.parquet(tPath.toString).select("doc"))
+    val e1 = intercept[IllegalArgumentException](search(dir))
+    assert(e1.getMessage.contains("max_seg") && e1.getMessage.contains(snap),
+      e1.getMessage)
+    // Postings without a seg column: strip it from a fresh index.
+    val dir2 = tmpDir("bm25-legacy-postings")
+    Bm25.buildIndex(docs, "doc_id", "text", dir2)
+    val snap2 = Bm25.resolveSnapshot(dir2, None)
+    val pPath = java.nio.file.Paths.get(snap2, "postings")
+    rewrite(pPath, spark.read.parquet(pPath.toString).drop("seg"))
+    val e2 = intercept[IllegalArgumentException](search(dir2))
+    assert(e2.getMessage.contains("'seg'"), e2.getMessage)
   }
 
   test("query-side scale flip: shuffle join == broadcast join row-for-row") {

@@ -10,9 +10,7 @@ import graft.store.MergeStore
   * the manifest as `#graft.ts=`, stamped by commit() itself, monotonic
   * by construction — so TIMESTAMP AS OF and the change feed's
   * `_commit_timestamp` survive anything that rewrites file mtimes
-  * (backup/restore, rsync, object-store migration). Legacy manifests
-  * fall back to mtime, and a mixed chain stays monotonic because the
-  * first stamped commit seeds from its parent's mtime. */
+  * (backup/restore, rsync, object-store migration). */
 class InCommitTimestampSpec extends SparkSpec {
   import spark.implicits._
 
@@ -58,48 +56,12 @@ class InCommitTimestampSpec extends SparkSpec {
       "r1-12")
   }
 
-  test("legacy manifests fall back to mtime; a mixed chain stays monotonic") {
-    val t = tmpDir("ict-legacy") + "/tbl"
-    MergeStore.init(spark, base, t, 4, clusterBy = Seq("id")) // v0
-    trickle(t, 1L) // v1
-    // Simulate a pre-ICT table: strip the stamp lines from both
-    // manifests (plain text below the compress threshold).
-    Seq(0, 1).foreach { v =>
-      val p = Paths.get(t, "_manifest", s"v$v.list")
-      val stripped = new String(Files.readAllBytes(p), "UTF-8")
-        .split("\n", -1).filterNot(_.startsWith("#graft.ts="))
-        .mkString("\n")
-      Files.write(p, stripped.getBytes("UTF-8"))
-    }
-    // Pre-ICT manifests report raw mtimes, and two back-to-back commits
-    // on a loaded box can share a millisecond — the engine cannot (and
-    // does not claim to) repair LEGACY-to-legacy ordering. Pin distinct
-    // mtimes so the fixture tests the documented contract (mtime
-    // fallback + stamped seeding), not the filesystem's timer.
-    Files.setLastModifiedTime(Paths.get(t, "_manifest", "v0.list"),
-      java.nio.file.attribute.FileTime.fromMillis(
-        Files.getLastModifiedTime(Paths.get(t, "_manifest", "v1.list"))
-          .toMillis - 10))
-    val legacy = MergeStore.history(t)
-    val mt1 = Files.getLastModifiedTime(
-      Paths.get(t, "_manifest", "v1.list")).toMillis
-    assert(legacy(1)._2 == mt1, "legacy manifests report mtime")
-    // The next commit stamps, seeding from the parent's mtime — the
-    // mixed chain is monotonic.
-    trickle(t, 2L) // v2: first stamped commit
-    val h = MergeStore.history(t)
-    assert(h(2)._2 > legacy(1)._2,
-      s"stamped commit must land after the legacy parent: $h")
-    assert(h.sliding(2).forall { case Seq(a, b) => b._2 > a._2 })
-    assert(MergeStore.manifestMeta(t, Some(2)).contains("graft.ts"))
-  }
-
   test("parquet snapshots carry the stamp in the footer") {
-    System.setProperty("graft.manifest.checkpoint.interval", "2")
     System.setProperty("graft.manifest.compress.threshold", "1")
     try {
       val t = tmpDir("ict-pq") + "/tbl"
-      MergeStore.init(spark, base, t, 4, clusterBy = Seq("id"))
+      MergeStore.init(spark, base, t, 4, clusterBy = Seq("id"),
+        meta = Map("ckpt.interval" -> "2"))
       MergeStore.setPolicy(t, "graft.ckpt.format", Some("parquet")) // v1
       trickle(t, 1L) // v2: checkpoint slot (delta + async sidecar)
       MergeStore.drainCheckpoints()
@@ -114,10 +76,7 @@ class InCommitTimestampSpec extends SparkSpec {
         "the parquet sidecar's FOOTER must carry the same stamp — the " +
           "durable instant an object-store migration preserves")
       assert(h.sliding(2).forall { case Seq(a, b) => b._2 > a._2 })
-    } finally {
-      System.clearProperty("graft.manifest.checkpoint.interval")
-      System.clearProperty("graft.manifest.compress.threshold")
-    }
+    } finally System.clearProperty("graft.manifest.compress.threshold")
   }
 
   test("graft.ckpt.interval is per-table policy") {

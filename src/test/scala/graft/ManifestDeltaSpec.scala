@@ -25,9 +25,11 @@ class ManifestDeltaSpec extends SparkSpec {
     .select(col("id"), (col("id") % 97).cast("int").as("grp"),
       concat(lit("v1-"), col("id")).as("payload"))
 
-  private def fresh(tag: String): String = {
+  private def fresh(tag: String,
+                    meta: Map[String, String] = Map.empty): String = {
     val t = tmpDir(tag) + "/tbl"
-    MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id"))
+    MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id"),
+      meta = meta)
     t
   }
 
@@ -96,20 +98,17 @@ class ManifestDeltaSpec extends SparkSpec {
   }
 
   test("every interval-th commit is a full snapshot bounding the walk") {
-    System.setProperty("graft.manifest.checkpoint.interval", "4")
-    try {
-      val t = fresh("md-interval")
-      (1L to 9L).foreach(trickle(t, _))
-      (1 to 9).foreach { v =>
-        if (v % 4 == 0) assert(!isDelta(t, v), s"v$v should be full")
-        else assert(isDelta(t, v), s"v$v should be a delta")
-      }
-      assert(MergeStore.read(spark, t).count() == N)
-      // A version right past a checkpoint reconstructs from it.
-      assert(MergeStore.read(spark, t, Some(5))
-        .where($"id" === 52L).select($"payload").as[String].head() ==
-        "r5-52")
-    } finally System.clearProperty("graft.manifest.checkpoint.interval")
+    val t = fresh("md-interval", Map("ckpt.interval" -> "4"))
+    (1L to 9L).foreach(trickle(t, _))
+    (1 to 9).foreach { v =>
+      if (v % 4 == 0) assert(!isDelta(t, v), s"v$v should be full")
+      else assert(isDelta(t, v), s"v$v should be a delta")
+    }
+    assert(MergeStore.read(spark, t).count() == N)
+    // A version right past a checkpoint reconstructs from it.
+    assert(MergeStore.read(spark, t, Some(5))
+      .where($"id" === 52L).select($"payload").as[String].head() ==
+      "r5-52")
   }
 
   test("vacuum materializes the floor as a checkpoint; travel works") {

@@ -360,6 +360,39 @@ class MergeStoreSpec extends SparkSpec {
     assert(MergeStore.changes(spark, t, 2, 3, pk = Seq("id")).count() == 0)
   }
 
+  test("changes: a NULL-key row classifies by its own side only") {
+    // A key with a NULL component never equi-matches, so the feed
+    // classifies such a row purely by the side it sits on: an updated
+    // NULL-key row is a delete (old image) plus an insert (new image),
+    // never an update pre/post-image pair — with or without pre-images
+    // — and a compaction still nets it to nothing.
+    val t = tmpDir("merge-nullkey") + "/tbl"
+    MergeStore.init(spark, spark.range(200L).select(col("id"),
+      when(col("id") % 50 === 0, lit(null).cast("int"))
+        .otherwise((col("id") % 7).cast("int")).as("grp"),
+      concat(lit("v1-"), col("id")).as("payload")),
+      t, 4, clusterBy = Seq("id")) // v0
+    MergeStore.updateWhere(spark, t, col("id").isin(50L, 51L),
+      Map("payload" -> concat(lit("u-"), col("id").cast("string")))) // v1
+    MergeStore.compact(spark, t, targetFiles = 2, clusterBy = Seq("id")) // v2
+    def feed(from: Int, to: Int, pre: Boolean) =
+      MergeStore.changes(spark, t, from, to, pk = Seq("id", "grp"),
+        includePreimages = pre)
+        .select($"id", $"payload", $"_change_type")
+        .as[(Long, String, String)].collect().toSet
+    Seq(false, true).foreach { pre =>
+      val complete = Set((51L, "u-51", "update_postimage")) ++
+        (if (pre) Set((51L, "v1-51", "update_preimage")) else Set.empty)
+      val nullKey = Set((50L, "u-50", "insert"), (50L, "v1-50", "delete"))
+      assert(feed(0, 1, pre) == complete ++ nullKey,
+        s"includePreimages=$pre")
+      assert(feed(0, 2, pre) == complete ++ nullKey,
+        s"span across the compaction, includePreimages=$pre")
+      assert(feed(1, 2, pre).isEmpty,
+        s"compaction must net to nothing, includePreimages=$pre")
+    }
+  }
+
   test("applyChanges: merge + delete + metadata land in ONE atomic commit") {
     val t = freshTable() // v0
     val ups = spark.range(0L, 5L)

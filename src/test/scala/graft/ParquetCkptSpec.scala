@@ -19,9 +19,9 @@ import graft.store.MergeStore
   *     work through a parquet base;
   *   - vacuum's retention-floor `.ckpt` honors the same policy;
   *   - COLD probes (candidateFiles, fileSizes) on an un-memoized chain
-  *     bottoming at a parquet checkpoint are served by column-pruned,
-  *     row-group-filtered checkpoint reads + O(changes) delta folding
-  *     — and match the warm reconstruction exactly.
+  *     bottoming at a parquet checkpoint — a manifest-only copy of the
+  *     table, whose path the reconstruction memo has never seen — match
+  *     the warm reconstruction exactly, reading no data file.
   */
 class ParquetCkptSpec extends SparkSpec {
   import spark.implicits._
@@ -46,22 +46,34 @@ class ParquetCkptSpec extends SparkSpec {
     b.length >= 4 && b(0) == 'P' && b(1) == 'A' && b(2) == 'R' && b(3) == '1'
   }
 
-  private def withCkptProps[A](interval: Int = 4)(f: => A): A = {
-    System.setProperty("graft.manifest.checkpoint.interval",
-      interval.toString)
+  private def withCkptProps[A](f: => A): A = {
     System.setProperty("graft.manifest.compress.threshold", "1")
-    try f finally {
-      System.clearProperty("graft.manifest.checkpoint.interval")
-      System.clearProperty("graft.manifest.compress.threshold")
-    }
+    try f finally System.clearProperty("graft.manifest.compress.threshold")
+  }
+
+  /** A table whose full-snapshot cadence is `interval` commits. */
+  private def initTable(t: String, interval: Int = 4): Unit =
+    MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id"),
+      meta = Map("ckpt.interval" -> interval.toString))
+
+  /** A copy of `t`'s manifest directory ALONE, under a fresh path: the
+    * reconstruction memo (keyed by table path) has never seen it, and
+    * with no data directory any probe answered from it provably read
+    * no data file. */
+  private def manifestOnlyCopy(t: String): String = {
+    val copy = Paths.get(tmpDir("pq-cold-copy"), "tbl")
+    val from = Paths.get(t, "_manifest")
+    val to = copy.resolve("_manifest")
+    Files.createDirectories(to)
+    Files.list(from).forEach(p => Files.copy(p, to.resolve(p.getFileName)): Unit)
+    copy.toString
   }
 
   test("interval slots stay cheap deltas; parquet checkpoints land as async sidecars; state round-trips vs a text twin") {
-    withCkptProps() {
+    withCkptProps {
       val tp = tmpDir("pq-twin-p") + "/tbl"
       val tt = tmpDir("pq-twin-t") + "/tbl"
-      Seq(tp, tt).foreach(t =>
-        MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id")))
+      Seq(tp, tt).foreach(initTable(_))
       MergeStore.setPolicy(tp, "graft.ckpt.format", Some("parquet")) // v1
       MergeStore.setPolicy(tt, "graft.ckpt.format", Some("text")) // v1
       MergeStore.setPolicy(tp, "graft.pk", Some("id")) // v2
@@ -129,9 +141,9 @@ class ParquetCkptSpec extends SparkSpec {
   }
 
   test("vacuum floor honors the parquet policy; travel at the floor works") {
-    withCkptProps(interval = 100) { // keep everything a delta after v0
+    withCkptProps { // interval 100: everything after v0 is a delta
       val t = tmpDir("pq-vac") + "/tbl"
-      MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id"))
+      initTable(t, interval = 100)
       MergeStore.setPolicy(t, "graft.ckpt.format", Some("parquet")) // v1
       (1L to 5L).foreach(trickle(t, _)) // v2..v6, deltas
       MergeStore.vacuum(t, retainVersions = 3, graceMillis = 0) // floor v4
@@ -151,10 +163,10 @@ class ParquetCkptSpec extends SparkSpec {
     }
   }
 
-  test("historyDetail reports delta slots; legacy inline-parquet manifests still read") {
-    withCkptProps() {
+  test("historyDetail reports delta slots; a pre-stamp parquet slot is refused") {
+    withCkptProps {
       val t = tmpDir("pq-hist") + "/tbl"
-      MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id"))
+      initTable(t)
       MergeStore.setPolicy(t, "graft.ckpt.format", Some("parquet")) // v1
       (1L to 3L).foreach(trickle(t, _)) // v2..v4
       MergeStore.drainCheckpoints()
@@ -166,10 +178,9 @@ class ParquetCkptSpec extends SparkSpec {
       assert(v4.addedFiles.exists(_ > 0))
       assert(MergeStore.checkpointFormatOf(t, 4).contains("parquet"))
       assert(h.find(_.version == 3).get.format == "delta")
-      // LEGACY compat: a manifest SLOT that is itself a parquet file
-      // (written by an earlier engine revision, where the interval-th
-      // commit encoded inline) still reads — historyDetail reports it
-      // with its live-file count, and reconstruction serves it.
+      // A manifest SLOT that is itself a parquet file (an earlier
+      // engine revision encoded the interval-th commit inline, before
+      // the format stamp existed) is refused with the format error.
       import graft.store.ParquetCkpt
       val legacy = tmpDir("pq-hist-legacy") + "/tbl"
       Files.createDirectories(Paths.get(legacy, "_manifest"))
@@ -179,18 +190,18 @@ class ParquetCkptSpec extends SparkSpec {
       ParquetCkpt.write(Paths.get(legacy, "_manifest", "v0.list"),
         Seq("a.parquet", "b.parquet"),
         Map("schema" -> schemaJson, "graft.ts" -> "1755000000000"))
-      val lh = MergeStore.historyDetail(legacy)
-      assert(lh.size == 1 && lh.head.format == "parquet")
-      assert(lh.head.liveFiles.contains(2))
-      assert(lh.head.commitTimeMs == 1755000000000L,
-        "legacy parquet slot serves its footer in-commit timestamp")
+      val e = intercept[IllegalStateException] {
+        MergeStore.historyDetail(legacy)
+      }
+      assert(e.getMessage.contains(legacy) &&
+        e.getMessage.contains("predates manifest format"), e.getMessage)
     }
   }
 
   test("cold range probe engages and matches the warm reconstruction") {
-    withCkptProps() {
+    withCkptProps {
       val t = tmpDir("pq-cold") + "/tbl"
-      MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id"))
+      initTable(t)
       MergeStore.setPolicy(t, "graft.ckpt.format", Some("parquet")) // v1
       (1L to 5L).foreach(trickle(t, _)) // v2..v6: v4 slots the sidecar
       MergeStore.deleteWhere(spark, t, col("id").between(3000, 3100)) // v7
@@ -202,57 +213,49 @@ class ParquetCkptSpec extends SparkSpec {
       // Warm first (fills the memo), recording the normal-path answer.
       val warm = probes.map { case (lo, hi) =>
         MergeStore.candidateFiles(spark, t, "id", lo, hi, Some(head)) }
-      // Cold: clear the memo; the pruned parquet path must serve it.
+      // Cold: a fresh manifest-only copy per probe; the pruned parquet
+      // path serves it.
       probes.zip(warm).foreach { case ((lo, hi), w) =>
-        MergeStore.clearStateCacheForProbe()
-        val before = MergeStore.coldProbeHits.get()
-        val c = MergeStore.candidateFiles(spark, t, "id", lo, hi, Some(head))
-        assert(MergeStore.coldProbeHits.get() > before,
-          "cold path did not engage")
+        val c = MergeStore.candidateFiles(spark, manifestOnlyCopy(t), "id",
+          lo, hi, Some(head))
         assert(c.sorted == w.sorted, s"cold/warm diverge for ($lo,$hi)")
       }
       // And the probe genuinely prunes on this clustered layout.
-      MergeStore.clearStateCacheForProbe()
-      val pruned = MergeStore.candidateFiles(spark, t, "id",
-        Some(40L), Some(60L), Some(head))
+      val pruned = MergeStore.candidateFiles(spark, manifestOnlyCopy(t),
+        "id", Some(40L), Some(60L), Some(head))
       assert(pruned.size < MergeStore.liveFiles(t, Some(head)).size)
       // A column with no stats: every live file stays a candidate.
-      MergeStore.clearStateCacheForProbe()
-      val noStats = MergeStore.candidateFiles(spark, t, "payload",
-        Some("a"), Some("b"), Some(head))
+      val noStats = MergeStore.candidateFiles(spark, manifestOnlyCopy(t),
+        "payload", Some("a"), Some("b"), Some(head))
       assert(noStats.toSet == MergeStore.liveFiles(t, Some(head)).toSet)
     }
   }
 
   test("cold fileSizes matches warm with zero data-directory stats") {
-    withCkptProps() {
+    withCkptProps {
       val t = tmpDir("pq-sizes") + "/tbl"
-      MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id"))
+      initTable(t)
       MergeStore.setPolicy(t, "graft.ckpt.format", Some("parquet")) // v1
       (1L to 5L).foreach(trickle(t, _))
       MergeStore.drainCheckpoints() // v4's parquet sidecar must land
       val head = MergeStore.version(t).get
       val warm = MergeStore.fileSizes(t, Some(head)).sortBy(_._1)
-      MergeStore.clearStateCacheForProbe()
-      val before = MergeStore.coldProbeHits.get()
-      val fb = MergeStore.sizeStatFallbacks.get()
-      val cold = MergeStore.fileSizes(t, Some(head)).sortBy(_._1)
-      assert(MergeStore.coldProbeHits.get() > before,
-        "cold sizes path did not engage")
-      assert(MergeStore.sizeStatFallbacks.get() == fb,
-        "size-lined table must take no Files.size fallback")
+      // The copy has no data directory: sizes come off the manifest.
+      val cold = MergeStore.fileSizes(manifestOnlyCopy(t), Some(head))
+        .sortBy(_._1)
       assert(cold == warm)
     }
   }
 
   test("string stats with URL-encoded specials round-trip through parquet") {
-    withCkptProps(interval = 2) {
+    withCkptProps {
       val t = tmpDir("pq-str") + "/tbl"
       val df = spark.range(400L).select(
         col("id"),
         concat(lit("k "), lpad(col("id").cast("string"), 4, "0"),
           lit(" %+é")).as("name"))
-      MergeStore.init(spark, df, t, 4, clusterBy = Seq("name"))
+      MergeStore.init(spark, df, t, 4, clusterBy = Seq("name"),
+        meta = Map("ckpt.interval" -> "2"))
       MergeStore.setPolicy(t, "graft.ckpt.format", Some("parquet")) // v1
       MergeStore.merge(spark, spark.range(400L, 410L).select(col("id"),
         concat(lit("k "), lpad(col("id").cast("string"), 4, "0"),
@@ -262,9 +265,8 @@ class ParquetCkptSpec extends SparkSpec {
       val sidecar = Paths.get(t, "_manifest", "v2.ckpt")
       assert(Files.exists(sidecar) && isParquet(sidecar))
       // Cold probe over the string column, bounds inside the domain.
-      MergeStore.clearStateCacheForProbe()
-      val cold = MergeStore.candidateFiles(spark, t, "name",
-        Some("k 0100"), Some("k 0120"), Some(2))
+      val cold = MergeStore.candidateFiles(spark, manifestOnlyCopy(t),
+        "name", Some("k 0100"), Some("k 0120"), Some(2))
       val warm = MergeStore.candidateFiles(spark, t, "name",
         Some("k 0100"), Some("k 0120"), Some(2))
       assert(cold.sorted == warm.sorted)
@@ -321,9 +323,9 @@ class ParquetCkptSpec extends SparkSpec {
   }
 
   test("explicit checkpoint bounds the walk; CALL graft.system.checkpoint speaks it") {
-    withCkptProps(interval = 100) { // nothing checkpoints by interval
+    withCkptProps { // interval 100: nothing checkpoints by interval
       val t = tmpDir("pq-ckp") + "/tbl"
-      MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id"))
+      initTable(t, interval = 100)
       MergeStore.setPolicy(t, "graft.ckpt.format", Some("parquet")) // v1
       (1L to 3L).foreach(trickle(t, _)) // v2..v4, all deltas
       assert(MergeStore.checkpoint(t) == 4)
@@ -331,10 +333,9 @@ class ParquetCkptSpec extends SparkSpec {
       assert(Files.exists(ckpt) && isParquet(ckpt))
       assert(MergeStore.checkpoint(t) == 4, "idempotent")
       // The sidecar is now the cold probe's base at head.
-      MergeStore.clearStateCacheForProbe()
-      val before = MergeStore.coldProbeHits.get()
-      MergeStore.candidateFiles(spark, t, "id", Some(40L), Some(60L))
-      assert(MergeStore.coldProbeHits.get() > before)
+      assert(MergeStore.candidateFiles(spark, manifestOnlyCopy(t), "id",
+          Some(40L), Some(60L)).sorted ==
+        MergeStore.candidateFiles(spark, t, "id", Some(40L), Some(60L)).sorted)
       assert(MergeStore.read(spark, t).count() == N)
       // The SQL spelling, on a later head.
       graft.store.GraftCatalog.register("db.ckp", t)
@@ -353,19 +354,23 @@ class ParquetCkptSpec extends SparkSpec {
   }
 
   test("a sidecar that never lands is harmless; the next interval slot self-heals") {
-    withCkptProps() {
+    withCkptProps {
       val t = tmpDir("pq-heal") + "/tbl"
-      MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id"))
+      initTable(t)
       MergeStore.setPolicy(t, "graft.ckpt.format", Some("parquet")) // v1
       (1L to 3L).foreach(trickle(t, _)) // v2..v4 (interval slot)
       MergeStore.drainCheckpoints()
       val ck4 = Paths.get(t, "_manifest", "v4.ckpt")
       assert(Files.exists(ck4), "v4 sidecar should have landed")
       // Crash simulation: the async checkpointer died before landing.
+      // A manifest-only copy stands in for the data directory's
+      // reconstruction memo, which has seen the sidecar.
       Files.delete(ck4)
-      MergeStore.clearStateCacheForProbe()
+      val crashed = manifestOnlyCopy(t)
       // Correctness never depended on the sidecar — the walk just
       // folds the deltas back to v0's full snapshot.
+      assert(MergeStore.liveFiles(crashed).sorted ==
+        MergeStore.liveFiles(t).sorted)
       assert(MergeStore.read(spark, t).count() == N)
       assert(MergeStore.read(spark, t).where($"id" === 32L)
         .select($"payload").as[String].head() == "r3-32")
@@ -375,11 +380,10 @@ class ParquetCkptSpec extends SparkSpec {
       (4L to 7L).foreach(trickle(t, _)) // v5..v8 (next slot)
       MergeStore.drainCheckpoints()
       assert(MergeStore.checkpointFormatOf(t, 8).contains("parquet"))
-      MergeStore.clearStateCacheForProbe()
-      val before = MergeStore.coldProbeHits.get()
-      MergeStore.candidateFiles(spark, t, "id", Some(40L), Some(60L))
-      assert(MergeStore.coldProbeHits.get() > before,
-        "cold probe should engage off the healed v8 sidecar")
+      // The healed v8 sidecar serves a cold probe.
+      assert(MergeStore.candidateFiles(spark, manifestOnlyCopy(t), "id",
+          Some(40L), Some(60L)).sorted ==
+        MergeStore.candidateFiles(spark, t, "id", Some(40L), Some(60L)).sorted)
     }
   }
 

@@ -192,6 +192,48 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("raw and core stores: an existing empty directory is still a first load") {
+    val root = tmpDir("graft-emptydir")
+    Seq(RawStore.path(root, "directory"), CoreStore.path(root, "directory"))
+      .foreach(d => java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(d)))
+    val entry = Runner.loadEndpointYears(spark, Registry.directory,
+      settingsFor(root), new FakeApi, 2010, 2010)
+    assert(entry.rows_inserted == 3 && entry.rows_updated == 0)
+    assert(RawStore.read(spark, root, "directory").count() == 2)
+    assert(CoreStore.read(spark, root, "directory").count() == 3)
+  }
+
+  test("raw and core stores: a corrupt target raises instead of reloading") {
+    import scala.jdk.CollectionConverters._
+    def corrupt(dir: String): Unit =
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator()
+        .asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .foreach(p => java.nio.file.Files.write(p,
+          "not parquet".getBytes("UTF-8")))
+    // Raw: a corrupt page store must not be rewritten past the hash
+    // guard as if it were empty.
+    val rawRoot = tmpDir("graft-corrupt-raw")
+    Runner.loadEndpointYears(spark, Registry.directory,
+      settingsFor(rawRoot), new FakeApi, 2010, 2010)
+    corrupt(RawStore.path(rawRoot, "directory"))
+    intercept[Exception] {
+      Runner.loadEndpointYears(spark, Registry.directory,
+        settingsFor(rawRoot), new FakeApi, 2010, 2010)
+    }
+    // Core: a corrupt core table must not report every row inserted.
+    val coreRoot = tmpDir("graft-corrupt-core")
+    Runner.loadEndpointYears(spark, Registry.directory,
+      settingsFor(coreRoot), new FakeApi, 2010, 2010)
+    corrupt(CoreStore.path(coreRoot, "directory"))
+    intercept[Exception] {
+      Runner.loadEndpointYears(spark, Registry.directory,
+        settingsFor(coreRoot), new FakeApi, 2010, 2010)
+    }
+    assert(LineageLog.readLoadLog(spark, coreRoot).count() == 1,
+      "the failed core load must log no counts")
+  }
+
   test("changed content IS rewritten (hash differs → page update)") {
     val root = tmpDir("graft-chg")
     val settings = settingsFor(root)

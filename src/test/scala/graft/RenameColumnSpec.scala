@@ -213,24 +213,20 @@ class RenameColumnSpec extends SparkSpec {
     MergeStore.init(spark, base, statless, 4)
     MergeStore.renameColumn(spark, statless, "payload", "text")
     assert(MergeStore.read(spark, statless).columns.contains("text"))
-    // A genuinely LEGACY manifest (written before schema-in-the-log):
-    // model it by stripping the schema line. The named refusal fires,
-    // and its remedy — one compact — records the schema for real, even
-    // with no stats and no bloom columns (the migration path must not
-    // be a dead end for exactly those tables).
+    // A LEGACY manifest (written before the format stamp): model it by
+    // stripping the stamp line. The table-wide format refusal fires
+    // before the verb does anything.
     val legacy = tmpDir("ren-legacy") + "/tbl"
     MergeStore.init(spark, base, legacy, 4)
     val m0 = java.nio.file.Paths.get(legacy, "_manifest", "v0.list")
     val stripped = java.nio.file.Files.readAllLines(m0)
-      .asScala.filterNot(_.startsWith("#schema=")).asJava
+      .asScala.filterNot(_.startsWith("#graft.format=")).asJava
     java.nio.file.Files.write(m0, stripped)
-    val e3 = intercept[RuntimeException] {
+    val e3 = intercept[IllegalStateException] {
       MergeStore.renameColumn(spark, legacy, "payload", "text")
     }
-    assert(e3.getMessage.contains("schema"))
-    MergeStore.compact(spark, legacy, 4)
-    MergeStore.renameColumn(spark, legacy, "payload", "text")
-    assert(MergeStore.read(spark, legacy).columns.contains("text"))
+    assert(e3.getMessage.contains("predates manifest format"),
+      e3.getMessage)
   }
 
   test("addColumn: metadata-only; null-filled reads; verbs land values") {
