@@ -435,8 +435,7 @@ object CurationQueries extends QueryFamily {
       "shard_tokens) and breaks the hash.",
     (s, dir) => {
       val root = exportCache.computeIfAbsent(dir, _ => {
-        val r = java.nio.file.Files
-          .createTempDirectory("graft-q99").toString + "/export"
+        val r = graft.core.TempDirs.create("graft-q99").toString + "/export"
         graft.operators.ShardExport.export(s,
           docs(s, dir).select(col("doc_id"), col("text")),
           "doc_id", "text", epoch = 0, budgetTokens = 4096, root = r)

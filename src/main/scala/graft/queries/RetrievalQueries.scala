@@ -27,8 +27,7 @@ object RetrievalQueries extends QueryFamily {
     * documents table. Exposed so Bench can pre-build during warmup. */
   def indexFor(s: SparkSession, dir: String): String =
     indexCache.computeIfAbsent(dir, _ => {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-bm25-index").toString
+      val d = graft.core.TempDirs.create("graft-bm25-index").toString
       Bm25.buildIndex(docs(s, dir), "doc_id", "text", d)
       d
     })
@@ -305,8 +304,7 @@ object RetrievalQueries extends QueryFamily {
   private def deletedIndexFor(s: SparkSession, dir: String): String =
     deletedIndexCache.computeIfAbsent(dir, _ => {
       import org.apache.spark.sql.functions.col
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-bm25-del-index").toString
+      val d = graft.core.TempDirs.create("graft-bm25-del-index").toString
       Bm25.buildIndex(docs(s, dir), "doc_id", "text", d)
       Bm25.deleteFromIndex(s, d,
         docs(s, dir).where(col("doc_id") % 13 === 0).select(col("doc_id")))
@@ -345,8 +343,7 @@ object RetrievalQueries extends QueryFamily {
   private def upsertedIndexFor(s: SparkSession, dir: String): String =
     upsertedIndexCache.computeIfAbsent(dir, _ => {
       import org.apache.spark.sql.functions.{col, concat, lit}
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-bm25-upsert-index").toString
+      val d = graft.core.TempDirs.create("graft-bm25-upsert-index").toString
       Bm25.buildIndex(docs(s, dir), "doc_id", "text", d)
       Bm25.upsertToIndex(docs(s, dir).where(col("doc_id") % 13 === 0)
           .select(col("doc_id"),
@@ -395,8 +392,7 @@ object RetrievalQueries extends QueryFamily {
       import org.apache.spark.sql.functions.{col, concat, lit}
       import graft.store.MergeStore
       import graft.streaming.StreamingSearch
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-bm25-stream").toString
+      val root = graft.core.TempDirs.create("graft-bm25-stream").toString
       val t = s"$root/tbl"
       MergeStore.init(s, docs(s, dir).select(col("doc_id"), col("text")),
         t, numFiles = 8, clusterBy = Seq("doc_id")) // v0

@@ -169,7 +169,7 @@ object SimilarityQueries extends QueryFamily {
 
   private def ivfStoreDir(s: SparkSession, dir: String): String =
     ivfStoreCache.computeIfAbsent(dir, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft-ivf-q39")
+      val d = graft.core.TempDirs.create("graft-ivf-q39")
         .toString
       val e = emb(s, dir)
       graft.store.IvfStore.init(s, e, "embedding",
@@ -427,7 +427,7 @@ object SimilarityQueries extends QueryFamily {
 
   private def pqStoreDir(s: SparkSession, dir: String): String =
     pqStoreCache.computeIfAbsent(dir, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft-pq-q60")
+      val d = graft.core.TempDirs.create("graft-pq-q60")
         .toString
       val e = emb(s, dir)
       val (ivf, rm) = PqIndex.trainIvfResidual(e, "vec_id", "embedding",
@@ -941,8 +941,7 @@ object SimilarityQueries extends QueryFamily {
       import org.apache.spark.sql.functions.col
       val e = emb(s, dir)
       val indexDir = deletedIvfCache.computeIfAbsent(dir, _ => {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-ivf-del").toString
+        val d = graft.core.TempDirs.create("graft-ivf-del").toString
         graft.store.IvfStore.init(s, e, "embedding",
           IvfIndex.train(e, "vec_id", "embedding", k = 16), d)
         graft.store.IvfStore.delete(s, d,

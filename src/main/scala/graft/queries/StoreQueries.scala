@@ -27,21 +27,6 @@ object StoreQueries extends QueryFamily {
   private val tableCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Temp directories of the prepared tables, deleted recursively when
-    * the JVM exits — repeated Bench/Verify runs must not fill the temp
-    * volume with one table copy per query per run. */
-  private val tempDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempDirs.forEach { dir =>
-        try java.nio.file.Files.walk(dir)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p): Unit)
-        catch { case _: java.io.IOException |
-                     _: java.io.UncheckedIOException => () }
-      }, "graft-prepared-table-cleanup"))
-
   private def preparedTable(s: org.apache.spark.sql.SparkSession,
                             dir: String, tag: String,
                             base: org.apache.spark.sql.DataFrame = null,
@@ -51,10 +36,7 @@ object StoreQueries extends QueryFamily {
                             meta: Map[String, String] = Map.empty)
                            (mutate: String => Unit): String =
     tableCache.computeIfAbsent(s"$dir#$tag", _ => {
-      cleanupHook
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-$tag")
-      tempDirs.add(tmp)
-      val target = tmp.toString + "/tbl"
+      val target = graft.core.TempDirs.create(s"graft-$tag").toString + "/tbl"
       val df = Option(base).getOrElse(
         Tables.load(s, dir, "documents").select(col("doc_id"), col("text")))
       MergeStore.init(s, df, target, numFiles = numFiles,
@@ -328,8 +310,7 @@ object StoreQueries extends QueryFamily {
           pk = Seq("doc_id")) // v2
       }
       val sink = s"q98_cdc_${cdcRuns.incrementAndGet()}"
-      val ck = java.nio.file.Files
-        .createTempDirectory("graft-q98-ck").toString
+      val ck = graft.core.TempDirs.create("graft-q98-ck").toString
       val q = graft.streaming.MergeStoreCdc
         .readStream(s, target, pk = Seq("doc_id"), fromVersion = Some(0))
         .writeStream.outputMode("append").format("memory")
@@ -1012,8 +993,8 @@ object StoreQueries extends QueryFamily {
       "the wrong base breaks the hash.",
     (s, dir) => {
       val target = preparedTable(s, dir, "q126") { t =>
-        val branch = java.nio.file.Files
-          .createTempDirectory("graft-q126-br").toString + "/branch"
+        val branch =
+          graft.core.TempDirs.create("graft-q126-br").toString + "/branch"
         MergeStore.branchTable(s, t, branch)
         MergeStore.merge(s,
           MergeStore.read(s, branch).where(col("doc_id") % 9 === 0)
@@ -1064,10 +1045,11 @@ object StoreQueries extends QueryFamily {
 
   private val q128 = QueryDef(
     "q128_sql_verbs",
-    "SQL text surface for the table verbs (graft.store.SqlVerbs): an " +
-      "analyst-shaped UPDATE, DELETE FROM, and MERGE INTO run as plain " +
-      "SQL strings through Spark's own parser and dispatch to the " +
-      "MergeStore verbs — same COW rewrites, constraint gates, and " +
+    "SQL text surface for the table verbs: an analyst-shaped UPDATE, " +
+      "DELETE FROM, and MERGE INTO run as plain spark.sql strings " +
+      "against graft.q128.ord — resolved by Spark's own analyzer over " +
+      "the graft catalog, dispatched to the MergeStore verbs by " +
+      "GraftResolution — same COW rewrites, constraint gates, and " +
       "manifest CAS commits as the Scala API. Sequence: UPDATE marks " +
       "open orders ending in 3 (price * 1.1, priority '9-SQL'), DELETE " +
       "drops filled orders with key % 7 = 0, MERGE upserts a source " +
@@ -1082,24 +1064,22 @@ object StoreQueries extends QueryFamily {
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_orderpriority"), col("o_totalprice")),
         clusterBy = Seq("o_orderkey")) { t =>
-        val cat = Map("ord" -> t)
-        graft.store.SqlVerbs.execute(s,
-          "UPDATE ord SET o_totalprice = o_totalprice * 1.1, " +
-            "o_orderpriority = '9-SQL' " +
-            "WHERE o_orderstatus = 'O' AND o_orderkey % 10 = 3", cat)
-        graft.store.SqlVerbs.execute(s,
-          "DELETE FROM ord " +
-            "WHERE o_orderstatus = 'F' AND o_orderkey % 7 = 0", cat)
+        graft.store.GraftCatalog.register("q128.ord", t)
+        s.sql("UPDATE graft.q128.ord " +
+          "SET o_totalprice = o_totalprice * 1.1, " +
+          "o_orderpriority = '9-SQL' " +
+          "WHERE o_orderstatus = 'O' AND o_orderkey % 10 = 3")
+        s.sql("DELETE FROM graft.q128.ord " +
+          "WHERE o_orderstatus = 'F' AND o_orderkey % 7 = 0")
         Tables.load(s, dir, "orders")
           .where(col("o_orderkey") % 1000 === 1)
           .select(col("o_orderkey"), col("o_orderstatus"),
             lit("M-SQL").as("o_orderpriority"), col("o_totalprice"))
           .createOrReplaceTempView("q128_src")
-        graft.store.SqlVerbs.execute(s,
-          "MERGE INTO ord t USING q128_src s " +
-            "ON t.o_orderkey = s.o_orderkey " +
-            "WHEN MATCHED THEN UPDATE SET * " +
-            "WHEN NOT MATCHED THEN INSERT *", cat)
+        s.sql("MERGE INTO graft.q128.ord t USING q128_src s " +
+          "ON t.o_orderkey = s.o_orderkey " +
+          "WHEN MATCHED THEN UPDATE SET * " +
+          "WHEN NOT MATCHED THEN INSERT *")
       }
       MergeStore.read(s, target)
         .groupBy("o_orderpriority")
@@ -1146,13 +1126,12 @@ object StoreQueries extends QueryFamily {
           .where(col("o_orderkey") % 3 === 0)
           .select(cols.map(col): _*),
         clusterBy = Seq("o_orderkey")) { t =>
-        val cat = Map("ord" -> t)
+        graft.store.GraftCatalog.register("q129.ord", t)
         Tables.load(s, dir, "orders")
           .where(col("o_orderkey") % 3 === 1)
           .select(cols.map(col): _*)
           .createOrReplaceTempView("q129_src")
-        graft.store.SqlVerbs.execute(s,
-          "INSERT INTO ord SELECT * FROM q129_src", cat)
+        s.sql("INSERT INTO graft.q129.ord SELECT * FROM q129_src")
         MergeStore.merge(s,
           Tables.load(s, dir, "orders")
             .where(col("o_orderkey") % 6 === 0)
@@ -1198,7 +1177,7 @@ object StoreQueries extends QueryFamily {
       val target = preparedTable(s, dir, "q130",
         base = Tables.load(s, dir, "orders").select(cols.map(col): _*),
         clusterBy = Seq("o_orderkey")) { t =>
-        val cat = Map("ord" -> t)
+        graft.store.GraftCatalog.register("q130.ord", t)
         val docs = Tables.load(s, dir, "orders")
         docs.where(col("o_orderkey") % 10 === 3)
           .select(col("o_orderkey"), col("o_orderstatus"),
@@ -1214,15 +1193,14 @@ object StoreQueries extends QueryFamily {
               col("o_orderstatus"), col("o_orderpriority"),
               col("o_totalprice")))
           .createOrReplaceTempView("q130_src")
-        graft.store.SqlVerbs.execute(s,
-          "MERGE INTO ord t USING q130_src s " +
-            "ON t.o_orderkey = s.o_orderkey " +
-            "WHEN MATCHED AND s.o_totalprice > t.o_totalprice * 1.5 " +
-            "THEN UPDATE SET o_totalprice = s.o_totalprice, " +
-            "o_orderpriority = 'C-SQL' " +
-            "WHEN NOT MATCHED THEN INSERT " +
-            "(o_orderkey, o_orderpriority, o_totalprice) " +
-            "VALUES (s.o_orderkey, 'N-SQL', s.o_totalprice)", cat)
+        s.sql("MERGE INTO graft.q130.ord t USING q130_src s " +
+          "ON t.o_orderkey = s.o_orderkey " +
+          "WHEN MATCHED AND s.o_totalprice > t.o_totalprice * 1.5 " +
+          "THEN UPDATE SET o_totalprice = s.o_totalprice, " +
+          "o_orderpriority = 'C-SQL' " +
+          "WHEN NOT MATCHED THEN INSERT " +
+          "(o_orderkey, o_orderpriority, o_totalprice) " +
+          "VALUES (s.o_orderkey, 'N-SQL', s.o_totalprice)")
       }
       MergeStore.read(s, target)
         .groupBy("o_orderpriority")
@@ -1328,8 +1306,8 @@ object StoreQueries extends QueryFamily {
       "is the orders slice o_orderkey % 4 = 0 re-prioritized 'K-SRC'; " +
       "matched rows take it, and target rows WITHOUT a source match " +
       "whose status is 'F' are DELETED by the bySource action — " +
-      "condition false/NULL keeps. Runs as one SQL statement through " +
-      "SqlVerbs; the oracle replays the algebra (matched override + " +
+      "condition false/NULL keeps. Runs as one spark.sql statement on " +
+      "graft.q132.ord; the oracle replays the algebra (matched override + " +
       "unmatched conditional anti-delete) from scratch.",
     (s, dir) => {
       import org.apache.spark.sql.types.DecimalType
@@ -1338,18 +1316,17 @@ object StoreQueries extends QueryFamily {
       val target = preparedTable(s, dir, "q132",
         base = Tables.load(s, dir, "orders").select(cols.map(col): _*),
         clusterBy = Seq("o_orderkey")) { t =>
-        val cat = Map("ord" -> t)
+        graft.store.GraftCatalog.register("q132.ord", t)
         Tables.load(s, dir, "orders")
           .where(col("o_orderkey") % 4 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"),
             lit("K-SRC").as("o_orderpriority"), col("o_totalprice"))
           .createOrReplaceTempView("q132_src")
-        graft.store.SqlVerbs.execute(s,
-          "MERGE INTO ord t USING q132_src s " +
-            "ON t.o_orderkey = s.o_orderkey " +
-            "WHEN MATCHED THEN UPDATE SET * " +
-            "WHEN NOT MATCHED BY SOURCE AND t.o_orderstatus = 'F' " +
-            "THEN DELETE", cat)
+        s.sql("MERGE INTO graft.q132.ord t USING q132_src s " +
+          "ON t.o_orderkey = s.o_orderkey " +
+          "WHEN MATCHED THEN UPDATE SET * " +
+          "WHEN NOT MATCHED BY SOURCE AND t.o_orderstatus = 'F' " +
+          "THEN DELETE")
       }
       MergeStore.read(s, target)
         .groupBy("o_orderpriority")
@@ -1391,11 +1368,9 @@ object StoreQueries extends QueryFamily {
         base = Tables.load(s, dir, "orders").select(cols.map(col): _*),
         clusterBy = Seq("o_orderkey")) { t =>
         graft.store.GraftCatalog.register("q133.ord", t)
-        val cat = Map("ord" -> t)
-        graft.store.SqlVerbs.execute(s, "DELETE FROM ord " +
-          "WHERE o_orderstatus = 'F' AND o_orderkey % 5 = 0", cat)
-        graft.store.SqlVerbs.execute(s,
-          "DELETE FROM ord WHERE o_orderkey % 7 = 0", cat)
+        s.sql("DELETE FROM graft.q133.ord " +
+          "WHERE o_orderstatus = 'F' AND o_orderkey % 5 = 0")
+        s.sql("DELETE FROM graft.q133.ord WHERE o_orderkey % 7 = 0")
         s.sql("CALL graft.system.restore('q133.ord', version => 1)")
         s.sql("CALL graft.system.compact('q133.ord', " +
           "target_files => 4, zorder_by => 'o_orderkey,o_totalprice')")
@@ -1491,6 +1466,7 @@ object StoreQueries extends QueryFamily {
       val target = preparedTable(s, dir, "q135",
         base = Tables.load(s, dir, "orders").select(cols.map(col): _*),
         clusterBy = Seq("o_orderkey")) { t =>
+        graft.store.GraftCatalog.register("q135.ord", t)
         val docs = Tables.load(s, dir, "orders")
         docs.where(col("o_orderkey") % 5 === 0)
           .select(col("o_orderkey"),
@@ -1500,16 +1476,14 @@ object StoreQueries extends QueryFamily {
             .select((col("o_orderkey") + 10000000000L).as("o_orderkey"),
               lit(false).as("del"), col("o_totalprice")))
           .createOrReplaceTempView("q135_src")
-        graft.store.SqlVerbs.execute(s,
-          "MERGE INTO ord t USING q135_src s " +
-            "ON t.o_orderkey = s.o_orderkey " +
-            "WHEN MATCHED AND s.del THEN DELETE " +
-            "WHEN MATCHED THEN UPDATE SET " +
-            "o_orderpriority = 'M-CDC', o_totalprice = s.o_totalprice " +
-            "WHEN NOT MATCHED AND s.o_totalprice > 150000 THEN INSERT " +
-            "(o_orderkey, o_orderpriority, o_totalprice) " +
-            "VALUES (s.o_orderkey, 'I-CDC', s.o_totalprice)",
-          Map("ord" -> t))
+        s.sql("MERGE INTO graft.q135.ord t USING q135_src s " +
+          "ON t.o_orderkey = s.o_orderkey " +
+          "WHEN MATCHED AND s.del THEN DELETE " +
+          "WHEN MATCHED THEN UPDATE SET " +
+          "o_orderpriority = 'M-CDC', o_totalprice = s.o_totalprice " +
+          "WHEN NOT MATCHED AND s.o_totalprice > 150000 THEN INSERT " +
+          "(o_orderkey, o_orderpriority, o_totalprice) " +
+          "VALUES (s.o_orderkey, 'I-CDC', s.o_totalprice)")
       }
       MergeStore.read(s, target)
         .groupBy("o_orderpriority")
@@ -1561,8 +1535,7 @@ object StoreQueries extends QueryFamily {
         base = Tables.load(s, dir, "orders").select(cols.map(col): _*),
         clusterBy = Seq("o_orderkey")) { t =>
         // The replica: an identical twin born from the same base.
-        val rep = java.nio.file.Files
-          .createTempDirectory("graft-q136-rep").toString + "/tbl"
+        val rep = graft.core.TempDirs.create("graft-q136-rep").toString + "/tbl"
         MergeStore.cloneTable(s, t, rep)
         graft.store.GraftCatalog.register("q136.ord", t)
         graft.store.GraftCatalog.register("q136.rep", rep)
@@ -1636,8 +1609,7 @@ object StoreQueries extends QueryFamily {
     (s, dir) => {
       import org.apache.spark.sql.types.DecimalType
       val target = tableCache.computeIfAbsent(s"$dir#q137", _ => {
-        val t = java.nio.file.Files
-          .createTempDirectory("graft-q137").toString + "/tbl"
+        val t = graft.core.TempDirs.create("graft-q137").toString + "/tbl"
         graft.store.GraftCatalog.register("q137.part", t)
         s.sql("CREATE TABLE graft.q137.part (o_orderkey BIGINT, yr INT, " +
           "o_totalprice DOUBLE) PARTITIONED BY (yr)")
@@ -1777,8 +1749,7 @@ object StoreQueries extends QueryFamily {
         def put(name: String,
                 df: org.apache.spark.sql.DataFrame): Unit = {
           import scala.jdk.CollectionConverters._
-          val stage = java.nio.file.Files
-            .createTempDirectory("q139-stage")
+          val stage = graft.core.TempDirs.create("q139-stage")
           df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
           val one = java.nio.file.Files.list(stage).iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet")).get
@@ -1827,8 +1798,7 @@ object StoreQueries extends QueryFamily {
       "three fills as constants over customer.",
     (s, dir) => {
       val target = tableCache.computeIfAbsent(s"$dir#q140", _ => {
-        val t = java.nio.file.Files
-          .createTempDirectory("graft-q140").toString + "/tbl"
+        val t = graft.core.TempDirs.create("graft-q140").toString + "/tbl"
         graft.store.GraftCatalog.register("q140.cust", t)
         s.sql("CREATE TABLE graft.q140.cust (c_custkey BIGINT, " +
           "c_mktsegment STRING DEFAULT 'UNKNOWN', " +
@@ -1890,8 +1860,7 @@ object StoreQueries extends QueryFamily {
       "oracle replays both from orders.",
     (s, dir) => {
       val target = tableCache.computeIfAbsent(s"$dir#q141", _ => {
-        val t = java.nio.file.Files
-          .createTempDirectory("graft-q141").toString + "/tbl"
+        val t = graft.core.TempDirs.create("graft-q141").toString + "/tbl"
         graft.store.GraftCatalog.register("q141.rt", t)
         s.sql("CREATE TABLE graft.q141.rt " +
           "(o_orderkey BIGINT, o_totalprice DOUBLE)") // v0

@@ -264,7 +264,7 @@ object StreamMultimodalQueries extends QueryFamily {
       "watermark granularity).",
     (s, dir) => {
       def tmp(p: String) =
-        java.nio.file.Files.createTempDirectory(p).toString
+        graft.core.TempDirs.create(p).toString
       EventsStreaming.runWindowedAggAppend(s, dir,
           tmp("graft-q82-out"), tmp("graft-q82-ck"))
         .orderBy("window_start", "event_type")
@@ -349,8 +349,7 @@ object StreamMultimodalQueries extends QueryFamily {
   def signaturesFor(s: SparkSession, dir: String): String =
     sigCache.computeIfAbsent(dir, _ => {
       import s.implicits._
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-media-sigs").toString
+      val root = graft.core.TempDirs.create("graft-media-sigs").toString
       // Widened: the three signature passes below are synth+decode+hash
       // kernels over every payload — one-file scan = one task otherwise.
       val ids = graft.core.Par.widen(

@@ -60,25 +60,30 @@ object CoreStore {
         write(deduped, target, sortWithin)
         (count(spark, target), 0L)
       case Some(old) =>
-        val years = incoming.select("year").distinct()
-        val oldAffected = old.join(years, Seq("year"), "left_semi")
-        // Old rows lose to ANY incoming row (__prec), so their order
-        // columns are constant placeholders.
-        val oldTagged = oldAffected.select(dataCols.map(col): _*)
-          .withColumn("__prec", lit(0))
-        val oldWithOrd = intraBatchOrder.foldLeft(oldTagged)(
-          (df, c) => df.withColumn(c, lit(-1L)))
-        val newTagged = incoming
-          .select((dataCols ++ intraBatchOrder).map(col): _*)
-          .withColumn("__prec", lit(1))
-        val merged = Upsert.dedupByKey(
-            oldWithOrd.unionByName(newTagged), pk, col("__prec") +: ordCols)
-          .select(dataCols.map(col): _*)
-        val updated = incoming.join(oldAffected, pk, "left_semi").count()
-        val inserted = incoming.join(oldAffected, pk, "left_anti")
-          .select(pk.map(col): _*).distinct().count()
-        write(merged, target, sortWithin)
-        (inserted, updated)
+        // The batch (raw read, explode, cleaning, mapping) feeds both
+        // counts and the rewrite: derive it once.
+        val batch = incoming.cache()
+        try {
+          val years = batch.select("year").distinct()
+          val oldAffected = old.join(years, Seq("year"), "left_semi")
+          // Old rows lose to ANY incoming row (__prec), so their order
+          // columns are constant placeholders.
+          val oldTagged = oldAffected.select(dataCols.map(col): _*)
+            .withColumn("__prec", lit(0))
+          val oldWithOrd = intraBatchOrder.foldLeft(oldTagged)(
+            (df, c) => df.withColumn(c, lit(-1L)))
+          val newTagged = batch
+            .select((dataCols ++ intraBatchOrder).map(col): _*)
+            .withColumn("__prec", lit(1))
+          val merged = Upsert.dedupByKey(
+              oldWithOrd.unionByName(newTagged), pk, col("__prec") +: ordCols)
+            .select(dataCols.map(col): _*)
+          val updated = batch.join(oldAffected, pk, "left_semi").count()
+          val inserted = batch.join(oldAffected, pk, "left_anti")
+            .select(pk.map(col): _*).distinct().count()
+          write(merged, target, sortWithin)
+          (inserted, updated)
+        } finally batch.unpersist(): Unit
     }
   }
 

@@ -536,34 +536,12 @@ object GraftCatalog {
     * themselves. */
   private[store] val registry = new ConcurrentHashMap[String, String]()
 
-  /** Paths whose SQL UPDATE/DELETE route merge-on-read (deletion
-    * vectors) instead of copy-on-write — session-scope routing policy,
-    * like the `mor` flag on [[SqlVerbs.execute]]. */
-  private[store] val morPaths =
-    java.util.Collections.newSetFromMap(
-      new ConcurrentHashMap[String, java.lang.Boolean]())
-
   /** Register `name` (e.g. "db.orders") at an explicit MergeStore path,
-    * making `spark.sql("... graft.db.orders ...")` resolve to it.
-    * `mor = true` routes the table's SQL UPDATE/DELETE through the
-    * deletion-vector verbs (O(change) trickle deletes, no rewrite). */
-  def register(name: String, path: String, mor: Boolean = false): Unit = {
+    * making `spark.sql("... graft.db.orders ...")` resolve to it. */
+  def register(name: String, path: String): Unit = {
     require(name.contains('.'),
       "register a namespaced name, e.g. \"db.orders\"")
-    registry.put(name, path)
-    // mor=true ADDS the routing; the default never removes it — a
-    // second registration of the same path (an alias, a refresh) must
-    // not silently disable previously-established MOR routing. Turn it
-    // off explicitly with clearMor.
-    if (mor) morPaths.add(
-      Paths.get(path).toAbsolutePath.normalize.toString): Unit
-  }
-
-  /** Drop the session-scope MOR routing for a path (the durable
-    * `graft.mor` manifest policy, if any, still applies). */
-  def clearMor(path: String): Unit = {
-    morPaths.remove(
-      Paths.get(path).toAbsolutePath.normalize.toString): Unit
+    registry.put(name, path): Unit
   }
 
   def unregister(name: String): Unit = { registry.remove(name): Unit }
@@ -623,16 +601,16 @@ object GraftCatalog {
     p
   }
 
-  /** MOR routing policy: the session-scope registration flag OR the
-    * table's own durable `graft.mor` manifest policy. `version` pins
-    * the manifest read — a caller assembling a multi-column summary at
-    * one version (CALL details) must not let a rival SET TBLPROPERTIES
-    * mix a newer head's flag into the row. */
+  /** MOR routing policy: the table's durable `graft.mor` manifest
+    * policy decides whether SQL UPDATE/DELETE mark deletion vectors or
+    * rewrite files. `version` pins the manifest read — a caller
+    * assembling a multi-column summary at one version (CALL details)
+    * must not let a rival SET TBLPROPERTIES mix a newer head's flag
+    * into the row. */
   private[store] def isMor(path: String,
                            version: Option[Int] = None): Boolean =
-    morPaths.contains(Paths.get(path).toAbsolutePath.normalize.toString) ||
-      MergeStore.manifestMeta(path, version).get(MergeStore.MorKey)
-        .exists(_.toBoolean)
+    MergeStore.manifestMeta(path, version).get(MergeStore.MorKey)
+      .exists(_.toBoolean)
 }
 
 /** A MergeStore table as seen by Spark's catalog machinery. Reads are
@@ -659,7 +637,12 @@ final case class GraftTable(ident: String, path: String,
         if (f.metadata.contains(k))
           mb.putString(k, f.metadata.getString(k))
       }
-      f.copy(metadata = mb.build())
+      // Nested fields read as nullable: the verbs store-assign into the
+      // nullable form (NOT NULL is a CHECK constraint, not a type), and
+      // a NOT NULL struct field would make the analyzer refuse
+      // `SET s = src.s` from a source whose field may be NULL.
+      f.copy(dataType = MergeStore.nullableForm(f.dataType),
+        metadata = mb.build())
     })
   }
 

@@ -1,8 +1,9 @@
 package graft.store
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, EqualTo, Expression}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, Coalesce, EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.catalyst.plans.logical.{AppendData, Assignment, DeleteAction, DeleteFromTable, InsertAction, InsertIntoStatement, LogicalPlan, MergeAction, MergeIntoTable, OverwriteByExpression, Project, SubqueryAlias, UpdateAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -157,9 +158,20 @@ final case class GraftResolution(spark: SparkSession)
       "subqueries in UPDATE/DELETE conditions are not supported — " +
         "materialize the subquery as a temp view and use MERGE INTO " +
         s"(got: ${e.sql})")
-    e.transform {
+    guardNulls(e).transform {
       case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
     }.sql
+  }
+
+  /** `AssertNotNull` — the analyzer's guard on a nullable value
+    * assigned to a NOT NULL column — has no SQL spelling: spell the same
+    * runtime refusal as `coalesce(v, raise_error(...))` so the
+    * expression re-resolves inside the verb's own plan. */
+  private def guardNulls(e: Expression): Expression = e.transformUp {
+    case a: AssertNotNull => Coalesce(Seq(a.child,
+      UnresolvedFunction("raise_error",
+        Seq(Literal("NULL value assigned to a NOT NULL column")),
+        isDistinct = false)))
   }
 
   private def targetColName(e: Expression): String = e match {
@@ -176,20 +188,20 @@ final case class GraftResolution(spark: SparkSession)
     val (_, table) = graftOf(m.targetTable).get
     val tOut = m.targetTable.outputSet
     val sOut = m.sourceTable.outputSet
-    def targetOnlySql(e: Expression): String = e.transform {
+    def targetOnlySql(e: Expression): String = guardNulls(e).transform {
       case a: AttributeReference if tOut.contains(a) =>
         UnresolvedAttribute(Seq(a.name))
       case a: AttributeReference => sys.error(
         "NOT MATCHED BY SOURCE expressions may reference only the " +
           s"MERGE target; '${a.name}' does not")
     }.sql
-    def sideSql(e: Expression): String = e.transform {
+    def sideSql(e: Expression): String = guardNulls(e).transform {
       case a: AttributeReference if tOut.contains(a) =>
         UnresolvedAttribute(Seq("t", a.name))
       case a: AttributeReference if sOut.contains(a) =>
         UnresolvedAttribute(Seq("s", a.name))
     }.sql
-    def sourceOnlySql(e: Expression): String = e.transform {
+    def sourceOnlySql(e: Expression): String = guardNulls(e).transform {
       case a: AttributeReference if sOut.contains(a) =>
         UnresolvedAttribute(Seq("s", a.name))
       case a: AttributeReference => sys.error(
@@ -480,7 +492,7 @@ final case class GraftMergeCommand(path: String, source: LogicalPlan,
           case Some(vals) if !isStarMap(vals, cols) =>
             // A column list that skips a key column would insert
             // NULL-keyed rows the key-probing verbs then drop — refuse
-            // (same contract as the no-catalog route).
+            // (same contract as mergeConditional's insert clauses).
             val missingPk = pk.filterNot(k => vals.exists(_._1 == k))
             require(missingPk.isEmpty,
               s"INSERT column list must assign every ON-clause key " +
@@ -493,7 +505,7 @@ final case class GraftMergeCommand(path: String, source: LogicalPlan,
           case _ => conditioned.select(cols.map(
             org.apache.spark.sql.functions.col): _*)
         }
-        SqlVerbs.mergeFiltered(spark, path, aligned, pk, "left_anti", 3)
+        mergeUnmatched(spark, aligned, 3)
       // Canonical upsert: star update + star insert, unconditioned.
       case (Seq(MatchedUpdateSpec(None, Some(ma))),
             Seq(InsertSpec(None, iv)))
@@ -516,11 +528,38 @@ final case class GraftMergeCommand(path: String, source: LogicalPlan,
             MergeStore.BySourceAction(c.map(expr), a.map(asMap))
           },
           maxRetries = 3,
-          matchedActions = Some(actions),
-          insertClauses = Some(inserts.map { case InsertSpec(c, v) =>
+          matchedActions = actions,
+          insertClauses = inserts.map { case InsertSpec(c, v) =>
             MergeStore.InsertClause(c.map(expr), v.map(asMap))
-          }))
+          })
     }
     Seq(Row(st.rowsUpdated, st.rowsInserted))
+  }
+
+  /** INSERT-only MERGE: the source anti-joins the statement's PINNED
+    * snapshot on the key (only unmatched keys survive), then the upsert
+    * verb runs against that SAME snapshot. On a lost CAS the whole
+    * filter-then-merge REPLAYS against the fresh head — retrying only
+    * the inner merge would re-match a stale filter (a key a rival
+    * inserted mid-flight must count as "matched" for SQL's NOT-MATCHED
+    * evaluation, exactly OCC's serializability story). The inner merge
+    * may still resolve a provably file-disjoint rival by rebase: its
+    * read set and this filter share one snapshot. */
+  private def mergeUnmatched(spark: SparkSession, source: DataFrame,
+                             maxRetries: Int): MergeStore.MergeStats = {
+    val v = MergeStore.version(path)
+      .getOrElse(sys.error(s"no committed version at $path"))
+    val unmatched = source.join(
+      MergeStore.read(spark, path, Some(v)).select(pk.map(
+        org.apache.spark.sql.functions.col): _*),
+      pk, "left_anti")
+    try MergeStore.merge(spark, unmatched, path, pk,
+      snapshotVersion = Some(v))
+    catch {
+      case _: java.util.ConcurrentModificationException
+          if maxRetries > 0 =>
+        val st = mergeUnmatched(spark, source, maxRetries - 1)
+        st.copy(recomputes = st.recomputes + 1)
+    }
   }
 }

@@ -669,8 +669,8 @@ object MergeStore {
     * and every carried file would stop planning (the read schema no
     * longer matches the old parquet footers) — an append that
     * succeeds silently and bricks the table at read time. The SQL
-    * routes (analyzer-aligned writes, SqlVerbs' explicit casts) never
-    * reach the refusal. */
+    * route ([[GraftResolution]]: analyzer-aligned writes, explicit
+    * casts in the MERGE insert alignment) never reaches the refusal. */
   /** `dt` with every nesting level nullable — the CAST-target form: a
     * cast to a type carrying NOT NULL fields fails analysis outright
     * (CAST_WITHOUT_SUGGESTION), and nullability never changes bytes. */
@@ -732,8 +732,9 @@ object MergeStore {
     * DEFAULT (the recorded schema's CURRENT_DEFAULT metadata — a
     * constant expression the DDL validated) when one exists, else
     * NULL. Spark's analyzer performs this fill on the catalog INSERT
-    * route; the path-spoken SqlVerbs routes and the MERGE insert
-    * clauses share this helper so every spelling agrees. */
+    * route; the MERGE insert clauses ([[GraftResolution]]'s
+    * insert-only alignment, [[mergeConditional]]) share this helper so
+    * every spelling agrees. */
   private[store] def defaultFill(
       f: org.apache.spark.sql.types.StructField)
       : org.apache.spark.sql.Column =
@@ -3163,16 +3164,13 @@ object MergeStore {
     *     matched row no clause claims survives UNCHANGED. The
     *     multi-clause form is the canonical CDC-apply statement
     *     (`WHEN MATCHED AND s.del THEN DELETE WHEN MATCHED THEN
-    *     UPDATE SET *`). The legacy single-action parameters
-    *     (`matchedCondition` / `matchedAssignments`) remain as the
-    *     one-clause shorthand; `matchedActions` (when given) wins.
+    *     UPDATE SET *`). An empty `matchedActions` leaves every
+    *     matched row unchanged.
     *   - unmatched source: routed to the FIRST `insertClauses` entry
     *     whose condition holds (same order contract), inserting per
     *     its values map (`None` = `INSERT *`, unassigned columns
-    *     NULL); a row no clause claims is dropped. The legacy
-    *     single-clause parameters (`insert` / `insertValues` /
-    *     `insertCondition`) remain as shorthand; `insertClauses`
-    *     (when given) wins.
+    *     NULL); a row no clause claims is dropped, so an empty
+    *     `insertClauses` inserts nothing.
     *   - unmatched target rows: untouched — unless a
     *     `notMatchedBySource` action is given (SQL's `WHEN NOT MATCHED
     *     BY SOURCE [AND cond] THEN DELETE | UPDATE SET ...`): target
@@ -3195,32 +3193,19 @@ object MergeStore {
     * files holding a row the action actually changes. */
   def mergeConditional(spark: SparkSession, source: DataFrame,
                        target: String, pk: Seq[String],
-                       matchedCondition: Option[org.apache.spark.sql.Column] = None,
-                       matchedAssignments: Option[Map[String, org.apache.spark.sql.Column]] = None,
-                       insert: Boolean = true,
-                       insertValues: Option[Map[String, org.apache.spark.sql.Column]] = None,
+                       matchedActions: Seq[MatchedAction],
+                       insertClauses: Seq[InsertClause],
                        notMatchedBySource: Option[BySourceAction] = None,
                        ordCols: Seq[String] = Nil,
                        maxRetries: Int = 0,
-                       snapshotVersion: Option[Int] = None,
-                       matchedActions: Option[Seq[MatchedAction]] = None,
-                       insertCondition: Option[org.apache.spark.sql.Column] = None,
-                       insertClauses: Option[Seq[InsertClause]] = None): MergeStats =
-    try mergeConditionalOnce(spark, source, target, pk,
-      matchedActions.getOrElse(
-        Seq(MatchedUpdate(matchedCondition, matchedAssignments))),
-      insertClauses.getOrElse(
-        if (insert) Seq(InsertClause(insertCondition, insertValues))
-        else Nil),
-      notMatchedBySource, ordCols, snapshotVersion)
+                       snapshotVersion: Option[Int] = None): MergeStats =
+    try mergeConditionalOnce(spark, source, target, pk, matchedActions,
+      insertClauses, notMatchedBySource, ordCols, snapshotVersion)
     catch {
       case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
         val st = mergeConditional(spark, source, target, pk,
-          matchedCondition, matchedAssignments, insert, insertValues,
-          notMatchedBySource, ordCols, maxRetries - 1,
-          matchedActions = matchedActions,
-          insertCondition = insertCondition,
-          insertClauses = insertClauses)
+          matchedActions, insertClauses, notMatchedBySource, ordCols,
+          maxRetries - 1)
         st.copy(recomputes = st.recomputes + 1)
     }
 

@@ -68,23 +68,26 @@ object RawStore {
       case Some(old) =>
         // Changed or brand-new pages: incoming rows whose (key, hash) triple
         // has no exact match — matching rows are skipped (hash guard).
+        // Persisted: counted here, then read again by the rewrite.
         val changed = pages.alias("n").join(old.alias("o"),
           pageKey.map(k => col(s"n.$k") === col(s"o.$k")) :+
             (col("n.source_hash") === col("o.source_hash")) reduce (_ && _),
-          "left_anti")
-        val nChanged = changed.count()
-        if (nChanged > 0) {
-          // Rewrite only affected years: survivors = old rows not replaced
-          // by a changed row, plus the changed rows.
-          val years = changed.select("year").distinct()
-          val oldAffected = old.join(years, Seq("year"), "left_semi")
-          val keptOld = oldAffected.alias("o").join(changed.alias("n"),
-            pageKey.map(k => col(s"o.$k") === col(s"n.$k")) reduce (_ && _),
-            "left_anti")
-          val merged = keptOld.unionByName(changed.select(keptOld.columns.toIndexedSeq.map(col): _*))
-          merged.write.partitionBy("year").mode(SaveMode.Overwrite).parquet(target)
-        }
-        nChanged
+          "left_anti").cache()
+        try {
+          val nChanged = changed.count()
+          if (nChanged > 0) {
+            // Rewrite only affected years: survivors = old rows not
+            // replaced by a changed row, plus the changed rows.
+            val years = changed.select("year").distinct()
+            val oldAffected = old.join(years, Seq("year"), "left_semi")
+            val keptOld = oldAffected.alias("o").join(changed.alias("n"),
+              pageKey.map(k => col(s"o.$k") === col(s"n.$k")) reduce (_ && _),
+              "left_anti")
+            val merged = keptOld.unionByName(changed.select(keptOld.columns.toIndexedSeq.map(col): _*))
+            merged.write.partitionBy("year").mode(SaveMode.Overwrite).parquet(target)
+          }
+          nChanged
+        } finally changed.unpersist(): Unit
     }
   }
 

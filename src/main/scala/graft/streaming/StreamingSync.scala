@@ -55,10 +55,12 @@ object StreamingSync {
     * delete the departed keys. A multi-commit batch can carry several
     * changes for one key (delete@v1 then re-insert@v2) — only the
     * TERMINAL change per key (highest `_commit_version`) may apply, or
-    * a delete-then-reinsert would end deleted. Visible for specs. */
+    * a delete-then-reinsert would end deleted. The terminal changes are
+    * persisted for the call: the emptiness probes and both verbs read
+    * them, and each would otherwise re-run the span read over the
+    * source. Visible for specs. */
   def applyCdcBatch(batch: DataFrame, replica: String,
                     pk: Seq[String]): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     // Robust to a pre-image-bearing feed (includePreimages = true):
     // update_preimage rows TIE their post-image on _commit_version, so
@@ -74,14 +76,17 @@ object StreamingSync {
     val terminal = events
       .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
       .drop("__rn", MergeStoreCdc.CommitVersionCol)
-    val upserts = terminal.where(col(MergeStoreCdc.ChangeTypeCol).isin(
-      "insert", "update_postimage")).drop(MergeStoreCdc.ChangeTypeCol)
-    val deletes = terminal
-      .where(col(MergeStoreCdc.ChangeTypeCol) === "delete")
-      .select(pk.map(col): _*).distinct()
-    if (!upserts.isEmpty)
-      MergeStore.merge(spark, upserts, replica, pk, maxRetries = 3)
-    if (!deletes.isEmpty)
-      MergeStore.delete(spark, replica, deletes, pk, maxRetries = 3)
+      .cache()
+    try {
+      val upserts = terminal.where(col(MergeStoreCdc.ChangeTypeCol).isin(
+        "insert", "update_postimage")).drop(MergeStoreCdc.ChangeTypeCol)
+      val deletes = terminal
+        .where(col(MergeStoreCdc.ChangeTypeCol) === "delete")
+        .select(pk.map(col): _*).distinct()
+      if (!upserts.isEmpty)
+        MergeStore.merge(spark, upserts, replica, pk, maxRetries = 3)
+      if (!deletes.isEmpty)
+        MergeStore.delete(spark, replica, deletes, pk, maxRetries = 3)
+    } finally terminal.unpersist(): Unit
   }
 }

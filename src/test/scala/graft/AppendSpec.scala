@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.store.{MergeStore, SqlVerbs}
+import graft.store.{GraftCatalog, MergeStore}
 
 /** Blind APPEND — the highest-frequency ingest verb: zero key probe,
   * zero rewrite, stats on the batch only, and an EMPTY read set, so
@@ -177,40 +177,39 @@ class AppendSpec extends SparkSpec {
 
   test("INSERT INTO by SQL: positional, column-list with NULL fill, OVERWRITE") {
     val t = fresh("app-sql")
-    val cat = Map("events" -> t)
-    val r = SqlVerbs.execute(spark,
-      s"INSERT INTO events VALUES (${N + 1}, 5, 'sql-a'), " +
-        s"(${N + 2}, 6, 'sql-b')", cat)
-    assert(r.asInstanceOf[SqlVerbs.Appended].stats.rowsInserted == 2)
+    GraftCatalog.register("app.events", t)
+    val before = MergeStore.liveFiles(t).toSet
+    spark.sql("INSERT INTO graft.app.events " +
+      s"VALUES (${N + 1}, 5, 'sql-a'), (${N + 2}, 6, 'sql-b')")
+    assert(MergeStore.read(spark, t).count() == N + 2)
+    assert(before.subsetOf(MergeStore.liveFiles(t).toSet),
+      "INSERT INTO must append, never rewrite")
     assert(MergeStore.read(spark, t).where($"id" === (N + 1).toLong)
       .select($"payload").as[String].head() == "sql-a")
     // Column list: unlisted columns NULL-fill; values cast to the
-    // table's types (the literal 7 below is an INT into a BIGINT id).
-    val r2 = SqlVerbs.execute(spark,
-      s"INSERT INTO events (id, payload) VALUES (${N + 3}, 'sql-c')", cat)
-    assert(r2.asInstanceOf[SqlVerbs.Appended].stats.rowsInserted == 1)
+    // table's types (the literal below is an INT into a BIGINT id).
+    spark.sql("INSERT INTO graft.app.events (id, payload) " +
+      s"VALUES (${N + 3}, 'sql-c')")
+    assert(MergeStore.read(spark, t).count() == N + 3)
     val row = MergeStore.read(spark, t).where($"id" === (N + 3).toLong)
       .select($"grp", $"payload").collect().head
     assert(row.isNullAt(0) && row.getString(1) == "sql-c")
     // INSERT INTO ... SELECT over a temp view.
     base.limit(3).select($"id" + 100000L as "id", $"grp", $"payload")
       .createOrReplaceTempView("app_sel_src")
-    val r3 = SqlVerbs.execute(spark,
-      "INSERT INTO events SELECT * FROM app_sel_src", cat)
-    assert(r3.asInstanceOf[SqlVerbs.Appended].stats.rowsInserted == 3)
+    spark.sql("INSERT INTO graft.app.events SELECT * FROM app_sel_src")
+    assert(MergeStore.read(spark, t).count() == N + 6)
     // OVERWRITE replaces everything.
-    val r4 = SqlVerbs.execute(spark,
-      "INSERT OVERWRITE events SELECT * FROM app_sel_src", cat)
-    assert(r4.asInstanceOf[SqlVerbs.Appended].stats.rowsInserted == 3)
+    spark.sql("INSERT OVERWRITE graft.app.events SELECT * FROM app_sel_src")
     assert(MergeStore.read(spark, t).count() == 3)
     // Refusals: unknown column, arity mismatch.
-    intercept[IllegalArgumentException] {
-      SqlVerbs.execute(spark,
-        "INSERT INTO events (id, nope) VALUES (1, 2)", cat)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("INSERT INTO graft.app.events (id, nope) VALUES (1, 2)")
     }
-    intercept[IllegalArgumentException] {
-      SqlVerbs.execute(spark, "INSERT INTO events VALUES (1, 2)", cat)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("INSERT INTO graft.app.events VALUES (1, 2)")
     }
+    assert(MergeStore.read(spark, t).count() == 3)
   }
 
   test("wide schemas: empty partitions still never commit (probe is not size-gated on small batches)") {

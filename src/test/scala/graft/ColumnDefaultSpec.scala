@@ -108,21 +108,19 @@ class ColumnDefaultSpec extends SparkSpec {
     }
   }
 
-  test("MERGE insert clauses and the path-route INSERT fill declared defaults") {
-    withWarehouse { wh =>
+  test("MERGE insert clauses and a column-list INSERT fill declared defaults") {
+    withWarehouse { _ =>
       spark.sql("CREATE TABLE graft.dwh.t6 " +
         "(id BIGINT, s STRING DEFAULT 'x', n INT DEFAULT 5)")
       spark.sql("INSERT INTO graft.dwh.t6 VALUES (1, 'a', 1)")
-      val p = s"$wh/dwh/t6"
-      // Catalog-route MERGE: the column-list INSERT omits s and n —
+      // MERGE: the column-list INSERT omits s and n —
       // the declared defaults fill them (standard SQL), not NULL.
       Seq(2L).toDF("id").createOrReplaceTempView("t6_src")
       spark.sql("MERGE INTO graft.dwh.t6 t USING t6_src s " +
         "ON t.id = s.id " +
         "WHEN NOT MATCHED THEN INSERT (id) VALUES (s.id)")
-      // Path-route (SqlVerbs) INSERT with a column list agrees.
-      graft.store.SqlVerbs.execute(spark,
-        "INSERT INTO tbl (id) VALUES (3)", Map("tbl" -> p)): Unit
+      // A column-list INSERT agrees.
+      spark.sql("INSERT INTO graft.dwh.t6 (id) VALUES (3)"): Unit
       val rows = spark.sql("SELECT * FROM graft.dwh.t6 ORDER BY id")
         .collect().toSeq.map(_.toString)
       assert(rows == Seq("[1,a,1]", "[2,x,5]", "[3,x,5]"), rows.toString)

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.store.{MergeStore, SqlVerbs}
+import graft.store.{GraftCatalog, MergeStore}
+import graft.store.MergeStore.{InsertClause, MatchedDelete, MatchedUpdate}
 
 /** Conditional + column-list MERGE actions — the Delta/Iceberg
   * `WHEN MATCHED AND cond THEN UPDATE SET c = e` family. The Scala verb
@@ -33,6 +34,15 @@ class ConditionalMergeSpec extends SparkSpec {
     t
   }
 
+  /** Register `t` in the graft catalog; returns the name SQL uses. */
+  private def sqlName(t: String, name: String): String = {
+    GraftCatalog.register(s"cm.$name", t)
+    s"graft.cm.$name"
+  }
+
+  /** `WHEN NOT MATCHED THEN INSERT *`. */
+  private val insertAll = Seq(InsertClause(None, None))
+
   // Source: ids 0..199 with ts = 50 (newer than target ts for ids whose
   // id % 100 < 50, older otherwise, NULL-vs-50 for % 31 ids) plus 10
   // genuinely new keys past N.
@@ -46,7 +56,8 @@ class ConditionalMergeSpec extends SparkSpec {
   test("conditional SET *: only strictly-newer source rows win; NULL condition keeps") {
     val t = fresh("cm-star")
     val st = MergeStore.mergeConditional(spark, source, t, Seq("id"),
-      matchedCondition = Some(expr("s.ts > t.ts")))
+      matchedActions = Seq(MatchedUpdate(Some(expr("s.ts > t.ts")), None)),
+      insertClauses = insertAll)
     // Matched = 200; condition true only where target ts < 50 (NULL ts
     // rows fail the condition — kept).
     val expectedUpdated = base.where($"id" < 200 && $"ts" < 50).count()
@@ -74,16 +85,16 @@ class ConditionalMergeSpec extends SparkSpec {
   test("column-list SET: unassigned columns keep target; values cast to table types") {
     val t = fresh("cm-cols")
     val st = MergeStore.mergeConditional(spark, source, t, Seq("id"),
-      matchedCondition = Some(expr("s.ts > t.ts")),
-      matchedAssignments = Some(Map(
-        "payload" -> expr("concat(t.payload, '+', s.payload)"),
-        // grp is INT in the table; the expression yields BIGINT — the
-        // verb must store-assign (cast) it back to INT.
-        "grp" -> expr("t.grp + s.grp"))),
-      insert = false)
+      matchedActions = Seq(MatchedUpdate(Some(expr("s.ts > t.ts")),
+        Some(Map(
+          "payload" -> expr("concat(t.payload, '+', s.payload)"),
+          // grp is INT in the table; the expression yields BIGINT — the
+          // verb must store-assign (cast) it back to INT.
+          "grp" -> expr("t.grp + s.grp"))))),
+      insertClauses = Nil)
     assert(st.rowsInserted == 0)
     val after = MergeStore.read(spark, t)
-    assert(after.count() == N, "insert=false must not add rows")
+    assert(after.count() == N, "no insert clause must not add rows")
     assert(after.schema("grp").dataType ==
       org.apache.spark.sql.types.IntegerType)
     // id=1: target ts=1 < 50 → updated; grp = (1 % 97) + 7; ts keeps
@@ -101,10 +112,11 @@ class ConditionalMergeSpec extends SparkSpec {
   test("insertValues subset: unassigned insert columns are NULL, keys land") {
     val t = fresh("cm-insvals")
     val st = MergeStore.mergeConditional(spark, source, t, Seq("id"),
-      matchedCondition = Some(lit(false)), // touch nothing matched
-      insertValues = Some(Map(
+      // touch nothing matched
+      matchedActions = Seq(MatchedUpdate(Some(lit(false)), None)),
+      insertClauses = Seq(InsertClause(None, Some(Map(
         "id" -> expr("s.id"),
-        "payload" -> expr("upper(s.payload)"))))
+        "payload" -> expr("upper(s.payload)"))))))
     assert(st.rowsUpdated == 0 && st.rowsInserted == 10)
     val ins = MergeStore.read(spark, t).where($"id" >= N.toLong)
     assert(ins.count() == 10)
@@ -119,43 +131,41 @@ class ConditionalMergeSpec extends SparkSpec {
 
   test("SQL spelling: WHEN MATCHED AND cond THEN UPDATE SET c = e + INSERT (cols) VALUES") {
     val t = fresh("cm-sql")
-    val cat = Map("events" -> t)
+    val events = sqlName(t, "sql")
     source.createOrReplaceTempView("cm_src")
-    val r = SqlVerbs.execute(spark,
-      "MERGE INTO events tgt USING cm_src src ON tgt.id = src.id " +
+    val st = spark.sql(
+      s"MERGE INTO $events tgt USING cm_src src ON tgt.id = src.id " +
         "WHEN MATCHED AND src.ts > tgt.ts THEN " +
         "UPDATE SET payload = concat(tgt.payload, '+', src.payload), " +
         "ts = src.ts " +
         "WHEN NOT MATCHED THEN INSERT (id, ts, payload) " +
-        "VALUES (src.id, ts, lower(payload))", cat)
-    val st = r.asInstanceOf[SqlVerbs.Merged].stats
+        "VALUES (src.id, ts, lower(payload))").collect().head
     val expectedUpdated = base.where($"id" < 200 && $"ts" < 50).count()
-    assert(st.rowsUpdated == expectedUpdated && st.rowsInserted == 10)
+    assert(st.getLong(0) == expectedUpdated && st.getLong(1) == 10)
     val after = MergeStore.read(spark, t)
     // Twin through the Scala verb on a second table: bit-identical.
     val twin = tmpDir("cm-sql-twin") + "/tbl"
     MergeStore.init(spark, base, twin, 8, clusterBy = Seq("id"))
     MergeStore.mergeConditional(spark, source, twin, Seq("id"),
-      matchedCondition = Some(expr("s.ts > t.ts")),
-      matchedAssignments = Some(Map(
-        "payload" -> expr("concat(t.payload, '+', s.payload)"),
-        "ts" -> expr("s.ts"))),
-      insertValues = Some(Map(
+      matchedActions = Seq(MatchedUpdate(Some(expr("s.ts > t.ts")),
+        Some(Map(
+          "payload" -> expr("concat(t.payload, '+', s.payload)"),
+          "ts" -> expr("s.ts"))))),
+      insertClauses = Seq(InsertClause(None, Some(Map(
         "id" -> expr("s.id"), "ts" -> expr("s.ts"),
-        "payload" -> expr("lower(s.payload)"))))
+        "payload" -> expr("lower(s.payload)"))))))
     assert(after.orderBy("id").collect().toSeq ==
       MergeStore.read(spark, twin).orderBy("id").collect().toSeq)
   }
 
   test("SQL conditional UPDATE SET * ; update-only conditional form") {
     val t = fresh("cm-sqlstar")
-    val cat = Map("events" -> t)
+    val events = sqlName(t, "sqlstar")
     source.createOrReplaceTempView("cm_src2")
-    val r = SqlVerbs.execute(spark,
-      "MERGE INTO events t USING cm_src2 s ON t.id = s.id " +
-        "WHEN MATCHED AND s.ts > t.ts THEN UPDATE SET *", cat)
-    val st = r.asInstanceOf[SqlVerbs.Merged].stats
-    assert(st.rowsInserted == 0, "update-only must not insert")
+    val st = spark.sql(
+      s"MERGE INTO $events t USING cm_src2 s ON t.id = s.id " +
+        "WHEN MATCHED AND s.ts > t.ts THEN UPDATE SET *").collect().head
+    assert(st.getLong(1) == 0, "update-only must not insert")
     val after = MergeStore.read(spark, t)
     assert(after.count() == N)
     assert(after.where($"id" === 1L).select($"payload")
@@ -177,8 +187,9 @@ class ConditionalMergeSpec extends SparkSpec {
     val far = spark.range(5000L, 5010L)
       .select(col("id"), lit(50L).as("ts"), lit(2).cast("int").as("grp"),
         concat(lit("cond-"), col("id")).as("payload"))
+    val newer = Seq(MatchedUpdate(Some(expr("s.ts > t.ts")), None))
     val st = MergeStore.mergeConditional(spark, far, t, Seq("id"),
-      matchedCondition = Some(expr("s.ts > t.ts")),
+      matchedActions = newer, insertClauses = insertAll,
       snapshotVersion = Some(0))
     assert(st.rebases == 1 && st.recomputes == 0, s"$st")
     // Both rivals' effects visible.
@@ -191,7 +202,7 @@ class ConditionalMergeSpec extends SparkSpec {
       .select(col("id"), lit(1000L).as("ts"), lit(3).cast("int").as("grp"),
         concat(lit("clash-"), col("id")).as("payload"))
     val st2 = MergeStore.mergeConditional(spark, clash, t, Seq("id"),
-      matchedCondition = Some(expr("s.ts > t.ts")),
+      matchedActions = newer, insertClauses = insertAll,
       snapshotVersion = Some(0), maxRetries = 2)
     assert(st2.recomputes >= 1, s"$st2")
     assert(MergeStore.read(spark, t).where($"id" === 11L)
@@ -205,17 +216,17 @@ class ConditionalMergeSpec extends SparkSpec {
     // unmatched target rows — matched rows must survive byte-identical
     // even though their keys appear in the source.
     val t = fresh("cm-bys-only")
-    val r = SqlVerbs.execute(spark,
-      "MERGE INTO events t USING cm_bys_only_src s ON t.id = s.id " +
-        "WHEN NOT MATCHED BY SOURCE AND t.grp >= 90 THEN DELETE",
-      Map("events" -> {
-        source.createOrReplaceTempView("cm_bys_only_src"); t
-      }))
+    source.createOrReplaceTempView("cm_bys_only_src")
+    val st = spark.sql(s"MERGE INTO ${sqlName(t, "bys_only")} t " +
+      "USING cm_bys_only_src s ON t.id = s.id " +
+      "WHEN NOT MATCHED BY SOURCE AND t.grp >= 90 THEN DELETE")
+      .collect().head
+    assert(st.getLong(0) == 0 && st.getLong(1) == 0, st.toString)
+    // Exactly the condition-true unmatched rows are gone.
     val expectedDeleted = base.where($"id" >= 200 && $"grp" >= 90).count()
-    assert(r.asInstanceOf[SqlVerbs.Merged].stats.rowsDeleted ==
-      expectedDeleted)
     val after = MergeStore.read(spark, t)
     assert(after.count() == N - expectedDeleted)
+    assert(after.where($"grp" >= 90 && $"id" >= 200).count() == 0)
     // Matched rows (ids < 200) carry UNCHANGED — still v1 payloads.
     assert(after.where($"id" < 200 && !$"payload".startsWith("v1-"))
       .count() == 0)
@@ -228,8 +239,8 @@ class ConditionalMergeSpec extends SparkSpec {
     // unmatched rows with grp >= 90, bySource semantics must leave
     // matched rows and condition-false unmatched rows alone.
     val st = MergeStore.mergeConditional(spark, source, t, Seq("id"),
-      matchedCondition = Some(expr("s.ts > t.ts")),
-      insert = false,
+      matchedActions = Seq(MatchedUpdate(Some(expr("s.ts > t.ts")), None)),
+      insertClauses = Nil,
       notMatchedBySource = Some(MergeStore.BySourceAction(
         Some(expr("grp >= 90")), None)))
     val expectedDeleted =
@@ -244,20 +255,22 @@ class ConditionalMergeSpec extends SparkSpec {
     // bySource UPDATE via SQL: unmatched rows tagged, matched rows
     // upserted, twin through the Scala verb bit-identical.
     val t2 = fresh("cm-bys-sql")
-    val cat = Map("events" -> t2)
+    val events = sqlName(t2, "bys_sql")
     source.createOrReplaceTempView("cm_bys_src")
-    val r = SqlVerbs.execute(spark,
-      "MERGE INTO events t USING cm_bys_src s ON t.id = s.id " +
+    val st2 = spark.sql(
+      s"MERGE INTO $events t USING cm_bys_src s ON t.id = s.id " +
         "WHEN MATCHED THEN UPDATE SET payload = s.payload " +
         "WHEN NOT MATCHED BY SOURCE AND t.grp < 3 THEN " +
-        "UPDATE SET payload = concat('stale-', t.payload)", cat)
-    val st2 = r.asInstanceOf[SqlVerbs.Merged].stats
-    assert(st2.rowsDeleted == 0 && st2.rowsInserted == 0)
+        "UPDATE SET payload = concat('stale-', t.payload)").collect().head
+    // Nothing inserted, nothing deleted: the row count holds.
+    assert(st2.getLong(1) == 0)
+    assert(MergeStore.read(spark, t2).count() == N)
     val twin = tmpDir("cm-bys-twin") + "/tbl"
     MergeStore.init(spark, base, twin, 8, clusterBy = Seq("id"))
     MergeStore.mergeConditional(spark, source, twin, Seq("id"),
-      matchedAssignments = Some(Map("payload" -> expr("s.payload"))),
-      insert = false,
+      matchedActions = Seq(MatchedUpdate(None,
+        Some(Map("payload" -> expr("s.payload"))))),
+      insertClauses = Nil,
       notMatchedBySource = Some(MergeStore.BySourceAction(
         Some(expr("grp < 3")),
         Some(Map("payload" -> expr("concat('stale-', payload)"))))))
@@ -268,12 +281,11 @@ class ConditionalMergeSpec extends SparkSpec {
     assert(MergeStore.read(spark, t2).where($"id" === 100L)
       .select($"payload").as[String].head() == "src-100")
     // A source-side reference inside a bySource expression refuses.
-    val e = intercept[RuntimeException] {
-      SqlVerbs.execute(spark,
-        "MERGE INTO events t USING cm_bys_src s ON t.id = s.id " +
-          "WHEN NOT MATCHED BY SOURCE AND s.grp = 1 THEN DELETE", cat)
+    val e = intercept[Exception] {
+      spark.sql(s"MERGE INTO $events t USING cm_bys_src s ON t.id = s.id " +
+        "WHEN NOT MATCHED BY SOURCE AND s.grp = 1 THEN DELETE")
     }
-    assert(e.getMessage.contains("only the MERGE target"))
+    assert(e.getMessage.contains("`s`.`grp`"), e.getMessage)
   }
 
   test("stats counts fold into one tagged job: driver collects inside the verb stay bounded") {
@@ -296,7 +308,9 @@ class ConditionalMergeSpec extends SparkSpec {
     try {
       // Three stat arms at once: matched updates + inserts + bySource.
       MergeStore.mergeConditional(spark, source, fresh("cm-jobs"),
-        Seq("id"), matchedCondition = Some(expr("s.ts > t.ts")),
+        Seq("id"),
+        matchedActions = Seq(MatchedUpdate(Some(expr("s.ts > t.ts")), None)),
+        insertClauses = insertAll,
         notMatchedBySource = Some(MergeStore.BySourceAction(
           Some(expr("grp = 96")), None)))
       // Listener bus is async — drain it deterministically before
@@ -321,10 +335,10 @@ class ConditionalMergeSpec extends SparkSpec {
     val cdcSrc = source.withColumn("del", col("id") % 10 === 0)
     val t = fresh("cm-cdc-scala")
     val st = MergeStore.mergeConditional(spark, cdcSrc, t, Seq("id"),
-      matchedActions = Some(Seq(
-        MergeStore.MatchedDelete(Some(expr("s.del"))),
-        MergeStore.MatchedUpdate(None, None))),
-      insertCondition = Some(expr("not s.del")))
+      matchedActions = Seq(
+        MatchedDelete(Some(expr("s.del"))),
+        MatchedUpdate(None, None)),
+      insertClauses = Seq(InsertClause(Some(expr("not s.del")), None)))
     // Matched ids 0..199: 20 del-flagged delete, 180 update; unmatched
     // ids N..N+9: the one del-flagged row (N) is filtered, 9 insert.
     assert(st.rowsDeleted == 20, st.toString)
@@ -332,15 +346,15 @@ class ConditionalMergeSpec extends SparkSpec {
     assert(st.rowsInserted == 9, st.toString)
     val t2 = fresh("cm-cdc-sql")
     cdcSrc.createOrReplaceTempView("cm_cdc_src")
-    val r = SqlVerbs.execute(spark,
-      "MERGE INTO events t USING cm_cdc_src s ON t.id = s.id " +
+    val sqlStats = spark.sql(
+      s"MERGE INTO ${sqlName(t2, "cdc_sql")} t USING cm_cdc_src s " +
+        "ON t.id = s.id " +
         "WHEN MATCHED AND s.del THEN DELETE " +
         "WHEN MATCHED THEN UPDATE SET * " +
         "WHEN NOT MATCHED AND NOT s.del THEN INSERT " +
-        "(id, ts, grp, payload) VALUES (s.id, s.ts, s.grp, s.payload)",
-      Map("events" -> t2))
-    val sqlStats = r.asInstanceOf[SqlVerbs.Merged].stats
-    assert(sqlStats.rowsUpdated == 180 && sqlStats.rowsInserted == 9)
+        "(id, ts, grp, payload) VALUES (s.id, s.ts, s.grp, s.payload)")
+      .collect().head
+    assert(sqlStats.getLong(0) == 180 && sqlStats.getLong(1) == 9)
     assert(MergeStore.read(spark, t).orderBy("id").collect().toSeq ==
       MergeStore.read(spark, t2).orderBy("id").collect().toSeq)
     val after = MergeStore.read(spark, t)
@@ -353,11 +367,11 @@ class ConditionalMergeSpec extends SparkSpec {
   test("matched clause order decides: first true condition wins; all-but-last must be conditioned") {
     val t = fresh("cm-order")
     val st = MergeStore.mergeConditional(spark, source, t, Seq("id"),
-      matchedActions = Some(Seq(
-        MergeStore.MatchedUpdate(Some(expr("s.id < 100")),
+      matchedActions = Seq(
+        MatchedUpdate(Some(expr("s.id < 100")),
           Some(Map("payload" -> expr("'first'")))),
-        MergeStore.MatchedDelete(None))),
-      insert = false)
+        MatchedDelete(None)),
+      insertClauses = Nil)
     assert(st.rowsUpdated == 100 && st.rowsDeleted == 100, st.toString)
     val after = MergeStore.read(spark, t)
     assert(after.where($"id" < 100 && $"payload" =!= "first").count() == 0)
@@ -366,24 +380,23 @@ class ConditionalMergeSpec extends SparkSpec {
     // An unconditioned clause anywhere but last refuses loudly.
     val e = intercept[IllegalArgumentException] {
       MergeStore.mergeConditional(spark, source, t, Seq("id"),
-        matchedActions = Some(Seq(
-          MergeStore.MatchedDelete(None),
-          MergeStore.MatchedUpdate(None, None))))
+        matchedActions = Seq(MatchedDelete(None), MatchedUpdate(None, None)),
+        insertClauses = insertAll)
     }
     assert(e.getMessage.contains("unreachable"))
   }
 
   test("conditional INSERT inserts only passing unmatched rows; refusals: extra INSERT clause, target reference in INSERT values, foreign qualifier") {
     val t = fresh("cm-refuse")
-    val cat = Map("events" -> t)
+    val events = sqlName(t, "refuse")
     source.createOrReplaceTempView("cm_src3")
     // WHEN NOT MATCHED AND cond THEN INSERT: source-only condition
     // filters the unmatched rows (ids N..N+9 are the unmatched ones;
     // only the even ones land).
-    val r1 = SqlVerbs.execute(spark,
-      "MERGE INTO events t USING cm_src3 s ON t.id = s.id " +
-        "WHEN NOT MATCHED AND s.id % 2 = 0 THEN INSERT *", cat)
-    assert(r1.asInstanceOf[SqlVerbs.Merged].stats.rowsInserted == 5)
+    val r1 = spark.sql(
+      s"MERGE INTO $events t USING cm_src3 s ON t.id = s.id " +
+        "WHEN NOT MATCHED AND s.id % 2 = 0 THEN INSERT *").collect().head
+    assert(r1.getLong(1) == 5)
     assert(MergeStore.read(spark, t).where($"id" >= N.toLong).count() == 5)
     assert(MergeStore.read(spark, t)
       .where($"id" >= N.toLong && $"id" % 2 =!= 0).count() == 0)
@@ -391,12 +404,13 @@ class ConditionalMergeSpec extends SparkSpec {
     // condition claims the row — even new ids take the column-list
     // clause (grp = 100), the rest fall through to INSERT * (grp = 8).
     val t2 = fresh("cm-refuse2")
-    val r2 = SqlVerbs.execute(spark,
-      "MERGE INTO events t USING cm_src3 s ON t.id = s.id " +
+    val r2 = spark.sql(
+      s"MERGE INTO ${sqlName(t2, "refuse2")} t USING cm_src3 s " +
+        "ON t.id = s.id " +
         "WHEN NOT MATCHED AND s.id % 2 = 0 THEN INSERT " +
         "(id, ts, grp, payload) VALUES (s.id, s.ts, 100, s.payload) " +
-        "WHEN NOT MATCHED THEN INSERT *", Map("events" -> t2))
-    assert(r2.asInstanceOf[SqlVerbs.Merged].stats.rowsInserted == 10)
+        "WHEN NOT MATCHED THEN INSERT *").collect().head
+    assert(r2.getLong(1) == 10)
     val newRows = MergeStore.read(spark, t2).where($"id" >= N.toLong)
     assert(newRows.where($"id" % 2 === 0 && $"grp" =!= 100).count() == 0)
     assert(newRows.where($"id" % 2 =!= 0 && $"grp" =!= 8).count() == 0)
@@ -404,39 +418,37 @@ class ConditionalMergeSpec extends SparkSpec {
     // Spark's parser enforces it for SQL; the verb enforces the same
     // contract for the Scala API.
     val e1 = intercept[Exception] {
-      SqlVerbs.execute(spark,
-        "MERGE INTO events t USING cm_src3 s ON t.id = s.id " +
-          "WHEN NOT MATCHED THEN INSERT * " +
-          "WHEN NOT MATCHED AND s.grp = 8 THEN INSERT *", cat)
+      spark.sql(s"MERGE INTO $events t USING cm_src3 s ON t.id = s.id " +
+        "WHEN NOT MATCHED THEN INSERT * " +
+        "WHEN NOT MATCHED AND s.grp = 8 THEN INSERT *")
     }
     assert(e1.getMessage.toLowerCase.contains("condition"))
     val e1b = intercept[IllegalArgumentException] {
       MergeStore.mergeConditional(spark, source, t, Seq("id"),
-        matchedActions = Some(Nil),
-        insertClauses = Some(Seq(
-          MergeStore.InsertClause(None, None),
-          MergeStore.InsertClause(Some(expr("grp = 8")), None))))
+        matchedActions = Nil,
+        insertClauses = Seq(
+          InsertClause(None, None),
+          InsertClause(Some(expr("grp = 8")), None)))
     }
     assert(e1b.getMessage.contains("unreachable"))
-    val e2 = intercept[RuntimeException] {
-      SqlVerbs.execute(spark,
-        "MERGE INTO events t USING cm_src3 s ON t.id = s.id " +
-          "WHEN MATCHED THEN UPDATE SET payload = s.payload " +
-          "WHEN NOT MATCHED THEN INSERT (id, payload) " +
-          "VALUES (s.id, t.payload)", cat)
+    // Scope refusals are the analyzer's: a target column in INSERT
+    // values, or a qualifier naming neither side, does not resolve.
+    val e2 = intercept[Exception] {
+      spark.sql(s"MERGE INTO $events t USING cm_src3 s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET payload = s.payload " +
+        "WHEN NOT MATCHED THEN INSERT (id, payload) " +
+        "VALUES (s.id, t.payload)")
     }
-    assert(e2.getMessage.contains("only the MERGE source"))
-    val e3 = intercept[RuntimeException] {
-      SqlVerbs.execute(spark,
-        "MERGE INTO events t USING cm_src3 s ON t.id = s.id " +
-          "WHEN MATCHED AND x.ts > t.ts THEN UPDATE SET *", cat)
+    assert(e2.getMessage.contains("`t`.`payload`"), e2.getMessage)
+    val e3 = intercept[Exception] {
+      spark.sql(s"MERGE INTO $events t USING cm_src3 s ON t.id = s.id " +
+        "WHEN MATCHED AND x.ts > t.ts THEN UPDATE SET *")
     }
-    assert(e3.getMessage.contains("neither the MERGE target"))
+    assert(e3.getMessage.contains("`x`.`ts`"), e3.getMessage)
     // ON-clause refusal names the offending conjunct.
-    val e4 = intercept[RuntimeException] {
-      SqlVerbs.execute(spark,
-        "MERGE INTO events t USING cm_src3 s ON t.id = s.id " +
-          "AND t.ts < s.ts WHEN MATCHED THEN UPDATE SET *", cat)
+    val e4 = intercept[Exception] {
+      spark.sql(s"MERGE INTO $events t USING cm_src3 s ON t.id = s.id " +
+        "AND t.ts < s.ts WHEN MATCHED THEN UPDATE SET *")
     }
     assert(e4.getMessage.contains("offending conjunct") &&
       e4.getMessage.contains("WHEN MATCHED AND"))

@@ -337,9 +337,11 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("MOR-registered tables route SQL UPDATE/DELETE through deletion vectors") {
-    val t = tmpDir("cat-mor") + "/tbl"
-    MergeStore.init(spark, base, t, FILES, clusterBy = Seq("id"))
-    GraftCatalog.register("db.morred", t, mor = true)
+    // The table's durable graft.mor policy alone decides the route: SET
+    // TBLPROPERTIES records it as a metadata commit on the table.
+    val t = fresh("morred")
+    spark.sql(
+      "ALTER TABLE graft.db.morred SET TBLPROPERTIES ('graft.mor'='true')")
     val filesBefore = MergeStore.liveFiles(t).toSet
     assert(spark.sql("DELETE FROM graft.db.morred WHERE id = 77")
       .as[Long].head() == 1)
@@ -357,17 +359,35 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.sql(
       "SELECT count(*) AS n FROM graft.db.morred").as[Long].head() ==
       N - 1)
-    // Registering the SAME path under another name (default mor=false)
-    // must not silently disable the established MOR routing.
+    // A second name for the SAME path routes MOR too: the policy lives
+    // in the table, not in the registration.
     GraftCatalog.register("db.morred_alias", t)
     val files2 = MergeStore.liveFiles(t).toSet
     assert(spark.sql("DELETE FROM graft.db.morred_alias WHERE id = 79")
       .as[Long].head() == 1)
-    assert(MergeStore.liveFiles(t).toSet == files2,
-      "re-registration dropped the MOR routing")
-    // Durable MOR policy: CREATE TABLE with 'graft.mor' carries the
-    // flag through ordinary verb commits like a constraint — a fresh
-    // session (or registration without the flag) still routes MOR.
+    assert(spark.sql("UPDATE graft.db.morred_alias " +
+      "SET payload = 'alias-up' WHERE id = 80").as[Long].head() == 1)
+    assert(files2.subsetOf(MergeStore.liveFiles(t).toSet),
+      "the alias lost the table's MOR routing")
+    assert(MergeStore.read(spark, t).where($"id" === 80L)
+      .select($"payload").as[String].head() == "alias-up")
+    // Without the policy the same statements rewrite files
+    // (copy-on-write) and mark no deletion vector.
+    val c = fresh("cowred")
+    val cowBefore = MergeStore.liveFiles(c).toSet
+    assert(spark.sql("DELETE FROM graft.db.cowred WHERE id = 77")
+      .as[Long].head() == 1)
+    val cowAfterDel = MergeStore.liveFiles(c).toSet
+    assert(!cowBefore.subsetOf(cowAfterDel),
+      "a COW delete must replace the file holding the row")
+    assert(spark.sql("UPDATE graft.db.cowred " +
+      "SET payload = 'cow-up' WHERE id = 78").as[Long].head() == 1)
+    assert(!cowAfterDel.subsetOf(MergeStore.liveFiles(c).toSet),
+      "a COW update must replace the file holding the row")
+    assert(MergeStore.dvMeta(c).isEmpty)
+    assert(MergeStore.read(spark, c).count() == N - 1)
+    // Durable MOR policy at birth: CREATE TABLE with 'graft.mor'
+    // carries the flag through ordinary verb commits like a constraint.
     System.setProperty("graft.catalog.warehouse", tmpDir("cat-mor-wh"))
     try {
       spark.sql("CREATE TABLE graft.wh.mord (id BIGINT, v STRING) " +
@@ -392,5 +412,151 @@ class GraftCatalogSpec extends SparkSpec {
       .as[Long].head() == 0)
     assert(spark.sql("SELECT count(*) AS n FROM graft.db.dv")
       .as[Long].head() == N - 1)
+  }
+
+  test("UPDATE by SQL == updateWhere: simultaneous SET, NULL predicate rows survive") {
+    // grp is NULL on ids % 31 == 0: the WHERE is NULL there, so those
+    // rows must survive untouched. SET is simultaneous — payload reads
+    // the PRE-update grp although grp is assigned in the same statement.
+    val nullable = base.withColumn("grp",
+      when($"id" % 31 === 0, lit(null)).otherwise($"grp"))
+    val t = tmpDir("cat-upd-null") + "/tbl"
+    MergeStore.init(spark, nullable, t, FILES, clusterBy = Seq("id"))
+    GraftCatalog.register("db.updnull", t)
+    val n = spark.sql("UPDATE graft.db.updnull " +
+      "SET payload = concat('u-', grp), grp = grp + 1 WHERE grp % 10 = 3")
+      .as[Long].head()
+    assert(n == nullable.where($"grp" % 10 === 3).count())
+    // Twin table through the Scala verb: bit-identical result.
+    val twin = tmpDir("cat-upd-twin") + "/tbl"
+    MergeStore.init(spark, nullable, twin, FILES, clusterBy = Seq("id"))
+    MergeStore.updateWhere(spark, twin, expr("grp % 10 = 3"),
+      Map("payload" -> expr("concat('u-', grp)"), "grp" -> expr("grp + 1")))
+    assert(MergeStore.read(spark, t).orderBy("id").collect().toSeq ==
+      MergeStore.read(spark, twin).orderBy("id").collect().toSeq)
+    val r3 = MergeStore.read(spark, t).where($"id" === 3L)
+      .select($"grp", $"payload").collect().head
+    assert(r3.getInt(0) == 4 && r3.getString(1) == "u-3")
+    val r0 = MergeStore.read(spark, t).where($"id" === 0L)
+      .select($"grp", $"payload").collect().head
+    assert(r0.isNullAt(0) && r0.getString(1) == "v1-0",
+      "a NULL-predicate row must survive unchanged")
+  }
+
+  test("sole WHEN MATCHED THEN DELETE through spark.sql removes the key set") {
+    val t = fresh("mdel")
+    spark.range(100L, 105L).select(col("id"))
+      .createOrReplaceTempView("cat_doomed")
+    val del = spark.sql("MERGE INTO graft.db.mdel t USING cat_doomed s " +
+      "ON t.id = s.id WHEN MATCHED THEN DELETE")
+    assert(del.columns.toSeq == Seq("rows_deleted"))
+    assert(del.as[Long].head() == 5)
+    assert(MergeStore.read(spark, t).count() == N - 5)
+    assert(MergeStore.read(spark, t).where($"id".between(100, 104))
+      .count() == 0)
+  }
+
+  test("single-action MERGE keeps SQL semantics: insert-only and update-only") {
+    val t = fresh("single")
+    // Source overlaps the table on 100..104 and extends past N by 3.
+    spark.range(100L, 105L)
+      .select(col("id"), lit(1).cast("int").as("grp"),
+        concat(lit("src-"), col("id")).as("payload"))
+      .union(spark.range(N.toLong, N + 3L)
+        .select(col("id"), lit(2).cast("int").as("grp"),
+          concat(lit("src-"), col("id")).as("payload")))
+      .createOrReplaceTempView("cat_single_src")
+    // INSERT-only: matched rows must stay UNTOUCHED (a bare upsert
+    // would overwrite 100..104 — the silent-wrong-data shape).
+    val ins = spark.sql("MERGE INTO graft.db.single t " +
+      "USING cat_single_src s ON t.id = s.id " +
+      "WHEN NOT MATCHED THEN INSERT *").collect().head
+    assert(ins.getLong(0) == 0 && ins.getLong(1) == 3, ins.toString)
+    val afterIns = MergeStore.read(spark, t)
+    assert(afterIns.count() == N + 3)
+    assert(afterIns.where($"id" === 102L).select($"payload")
+      .as[String].head() == "v1-102", "insert-only touched a matched row")
+    assert(afterIns.where($"id" === N.toLong).select($"payload")
+      .as[String].head() == s"src-$N")
+    // UPDATE-only: unmatched source rows must be IGNORED — shrink the
+    // table back so the source has genuinely unmatched rows again.
+    MergeStore.deleteWhere(spark, t, col("id") >= N.toLong)
+    val upd = spark.sql("MERGE INTO graft.db.single t " +
+      "USING cat_single_src s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET *").collect().head
+    assert(upd.getLong(0) == 5 && upd.getLong(1) == 0, upd.toString)
+    val afterUpd = MergeStore.read(spark, t)
+    assert(afterUpd.count() == N, "update-only inserted unmatched rows")
+    assert(afterUpd.where($"id" === 102L).select($"payload")
+      .as[String].head() == "src-102")
+    assert(afterUpd.where($"id" >= N.toLong).count() == 0)
+  }
+
+  test("struct columns: nested-field references are field access, not qualifiers") {
+    val t = tmpDir("cat-struct") + "/tbl"
+    val df = spark.range(100L).select(col("id"),
+      struct((col("id") % 5).cast("int").as("kind"),
+        lit("m").as("tag")).as("meta"),
+      concat(lit("v-"), col("id")).as("payload"))
+    MergeStore.init(spark, df, t, 4, clusterBy = Seq("id"))
+    GraftCatalog.register("db.nested", t)
+    // Bare struct path in WHERE and in a SET value.
+    spark.sql("UPDATE graft.db.nested " +
+      "SET payload = concat('k-', meta.kind) WHERE meta.kind = 3")
+    assert(MergeStore.read(spark, t).where($"id" === 3L)
+      .select($"payload").as[String].head() == "k-3")
+    // Alias-qualified struct path (3-part name): e.meta.kind.
+    spark.sql("DELETE FROM graft.db.nested e WHERE e.meta.kind = 4")
+    assert(MergeStore.read(spark, t).count() == 80)
+    assert(MergeStore.read(spark, t)
+      .where($"meta.kind" === 4).count() == 0)
+    // MERGE conditions traverse struct fields on both sides.
+    MergeStore.read(spark, t).limit(0).unionByName(
+      spark.range(0L, 100L, 5L).select(col("id"),
+        struct(lit(9).cast("int").as("kind"), lit("s").as("tag"))
+          .as("meta"),
+        lit("src").as("payload"))).createOrReplaceTempView("cat_struct_src")
+    val st = spark.sql("MERGE INTO graft.db.nested t " +
+      "USING cat_struct_src s ON t.id = s.id " +
+      "WHEN MATCHED AND s.meta.kind > t.meta.kind THEN " +
+      "UPDATE SET payload = concat(t.payload, '!'), meta = s.meta")
+      .collect().head
+    assert(st.getLong(0) ==
+      MergeStore.read(spark, t).where($"id" % 5 === 0).count())
+    assert(MergeStore.read(spark, t).where($"id" === 10L)
+      .select($"meta.kind").as[Int].head() == 9)
+    assert(MergeStore.read(spark, t).where($"id" === 10L)
+      .select($"payload").as[String].head() == "v-10!")
+  }
+
+  test("refusals are loud: unknown table, unsupported shapes, constraints still gate") {
+    val t = fresh("refuse")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("DELETE FROM graft.db.nope WHERE id = 1")
+    }
+    val evo = intercept[Exception] { // evolution is star-upsert-only
+      spark.sql("MERGE WITH SCHEMA EVOLUTION INTO graft.db.refuse t " +
+        "USING graft.db.refuse s ON t.id = s.id " +
+        "WHEN MATCHED AND s.grp = 1 THEN UPDATE SET *")
+    }
+    assert(evo.getMessage.contains("canonical star upsert only"),
+      evo.getMessage)
+    // The dispatched verb's own constraint gate still fires from SQL.
+    MergeStore.addConstraint(spark, t, "grp_pos", "grp >= 0")
+    intercept[IllegalStateException] {
+      spark.sql("UPDATE graft.db.refuse SET grp = -1 WHERE id = 5")
+    }
+    assert(MergeStore.read(spark, t).where($"grp" < 0).count() == 0)
+    // payload is NOT NULL in the table schema: the analyzer guards a
+    // MERGE assignment of a nullable value, and the guard still refuses
+    // a NULL at run time inside the verb's plan.
+    spark.range(6L, 8L).select(col("id"), lit(null).cast("string")
+      .as("payload")).createOrReplaceTempView("cat_null_src")
+    val nm = intercept[Exception] {
+      spark.sql("MERGE INTO graft.db.refuse t USING cat_null_src s " +
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET payload = s.payload")
+    }
+    assert(nm.getMessage.contains("NOT NULL column"), nm.getMessage)
+    assert(MergeStore.read(spark, t).where($"payload".isNull).count() == 0)
   }
 }

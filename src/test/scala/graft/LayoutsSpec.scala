@@ -14,7 +14,7 @@ class LayoutsSpec extends SparkSpec {
   test("clustered layout skips row groups: fewer bytes, same rows") {
     val events = Tables.load(spark, sf(), "events")
       .select("event_id", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("layouts").toString
+    val dir = tmpDir("layouts")
     val clustered = s"$dir/clustered"
     val shuffled = s"$dir/shuffled"
     Layouts.clusteredWrite(events, clustered, Seq("user_id"), numFiles = 16)
@@ -47,7 +47,7 @@ class LayoutsSpec extends SparkSpec {
       floor(rand(1) * 10000).as("a"),
       floor(rand(2) * 10000).as("b"))
       .localCheckpoint(true)
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tmpDir("zorder")
     val lex = s"$dir/lex"
     val zed = s"$dir/z"
     Layouts.clusteredWrite(df, lex, Seq("a", "b"), numFiles = 64)

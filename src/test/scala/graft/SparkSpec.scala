@@ -14,6 +14,7 @@ object SharedSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
   def sf(path: String = "sf0.001"): String = s"/root/testdata/$path"
+  /** A scratch directory deleted with its contents at JVM exit. */
   def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.core.TempDirs.create(prefix).toString
 }
