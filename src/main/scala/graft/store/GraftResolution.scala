@@ -87,7 +87,10 @@ final case class GraftResolution(spark: SparkSession)
           if u.resolved && graftOf(rel).isDefined =>
         GraftUpdateCommand(graftOf(rel).get._2.path,
           assignments.map { case Assignment(k, v) =>
-            targetColName(k) -> dequalify(v)
+            // Spark adds no NOT NULL guard to UPDATE on a non-row-level
+            // table; add the one MERGE's assignments get.
+            targetColName(k) -> dequalify(
+              if (!k.nullable && v.nullable) AssertNotNull(v) else v)
           },
           cond.map(dequalify))
       case d @ DeleteFromTable(rel, cond)
@@ -546,20 +549,14 @@ final case class GraftMergeCommand(path: String, source: LogicalPlan,
     * may still resolve a provably file-disjoint rival by rebase: its
     * read set and this filter share one snapshot. */
   private def mergeUnmatched(spark: SparkSession, source: DataFrame,
-                             maxRetries: Int): MergeStore.MergeStats = {
-    val v = MergeStore.version(path)
-      .getOrElse(sys.error(s"no committed version at $path"))
-    val unmatched = source.join(
-      MergeStore.read(spark, path, Some(v)).select(pk.map(
-        org.apache.spark.sql.functions.col): _*),
-      pk, "left_anti")
-    try MergeStore.merge(spark, unmatched, path, pk,
-      snapshotVersion = Some(v))
-    catch {
-      case _: java.util.ConcurrentModificationException
-          if maxRetries > 0 =>
-        val st = mergeUnmatched(spark, source, maxRetries - 1)
-        st.copy(recomputes = st.recomputes + 1)
-    }
-  }
+                             maxRetries: Int): MergeStore.MergeStats =
+    MergeStore.withOcc(maxRetries) { _ =>
+      val v = MergeStore.version(path)
+        .getOrElse(sys.error(s"no committed version at $path"))
+      val unmatched = source.join(
+        MergeStore.read(spark, path, Some(v)).select(pk.map(
+          org.apache.spark.sql.functions.col): _*),
+        pk, "left_anti")
+      MergeStore.merge(spark, unmatched, path, pk, snapshotVersion = Some(v))
+    }(st => st.copy(recomputes = st.recomputes + 1))
 }

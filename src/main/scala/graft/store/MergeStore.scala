@@ -35,10 +35,13 @@ import graft.operators.Upsert
   *   - Multi-writer: optimistic concurrency. Every merge reads one
   *     pinned snapshot version and its commit is a CAS on that version
   *     (create v<N+1> if absent — see [[commit]]); a writer that loses
-  *     the race gets ConcurrentModificationException and recomputes the
-  *     merge against the new head (`maxRetries`). Delta's optimistic
-  *     protocol in miniature, spec'd with two interleaved writers in
-  *     MergeStoreSpec.
+  *     the race first re-commits its computed result when the rival was
+  *     file-disjoint ([[commitWithRebase]]), else gets
+  *     ConcurrentModificationException, which [[withOcc]] — the one
+  *     replay every verb shares — turns into a recompute against the new
+  *     head (`maxRetries`). Delta's optimistic protocol in miniature,
+  *     spec'd with two interleaved writers in MergeStoreSpec and
+  *     OccRebaseSpec.
   *
   * Scale notes: the affected-file list travels to the driver — it is
   * O(files-with-matches), bounded by the update batch's key spread, not
@@ -1068,7 +1071,7 @@ object MergeStore {
     * can answer "which files hold matched keys". */
   private def probeScan(spark: SparkSession, target: String, version: Int,
                         names: Seq[String], cols: Seq[String]): DataFrame =
-    readSubsetWithFile(spark, target, version, names)
+    readSubsetWithPos(spark, target, version, names)
       .select((cols :+ "__file").map(col): _*)
 
   /** [[commit]] plus stats upkeep: new files' freshly computed stats
@@ -1870,10 +1873,6 @@ object MergeStore {
       .drop("__gdvf", "__gdvp")
   }
 
-  final case class MorDeleteStats(filesTotal: Int, filesMarked: Int,
-                                  rowsDeleted: Long,
-                                  recomputes: Int = 0, rebases: Int = 0)
-
   /** Merge-on-read DELETE by predicate: mark matching rows' positions
     * in per-file deletion-vector sidecars instead of rewriting files —
     * O(delete) cost for a point delete against arbitrarily large
@@ -1882,115 +1881,26 @@ object MergeStore {
     * rows never re-match (the probe reads DV-applied), so reruns are
     * no-ops that don't even commit. Readers pay one broadcast
     * anti-join until a rewrite/[[purgeDeletes]]/compact materializes
-    * the vectors. */
+    * the vectors. `filesRewritten` counts the files marked. */
   def deleteWhereMor(spark: SparkSession, target: String,
                      predicate: org.apache.spark.sql.Column,
                      maxRetries: Int = 0,
-                     snapshotVersion: Option[Int] = None): MorDeleteStats = {
-    val doomed = coalesce(predicate, lit(false))
-    try morDeleteOnce(spark, target, snapshotVersion,
-      alive => alive.where(doomed),
-      prunePredicate = Some(predicate))
-    catch {
-      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
-        val st = deleteWhereMor(spark, target, predicate,
-          maxRetries - 1, None)
-        st.copy(recomputes = st.recomputes + 1)
-    }
-  }
+                     snapshotVersion: Option[Int] = None): DeleteStats =
+    deleteByPredicate(spark, target, predicate, maxRetries,
+      snapshotVersion, mor = true)
 
   /** Merge-on-read DELETE by key set — [[delete]]'s semantics at
     * deletion-vector cost (the GDPR-erasure shape: a small key batch
     * against a huge clustered table marks a handful of positions). */
   def deleteMor(spark: SparkSession, target: String, keys: DataFrame,
                 pk: Seq[String], maxRetries: Int = 0,
-                snapshotVersion: Option[Int] = None): MorDeleteStats = {
-    require(pk.nonEmpty, s"deleteMor at $target needs key columns")
-    val keyRows = keys.select(pk.map(col): _*)
-      .where(pk.map(col(_).isNotNull).reduce(_ && _)).distinct()
-    try morDeleteOnce(spark, target, snapshotVersion,
-      alive => alive.join(keyRows, pk, "left_semi"),
-      pruneKeys = Some((keyRows, pk)))
-    catch {
-      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
-        val st = deleteMor(spark, target, keys, pk, maxRetries - 1, None)
-        st.copy(recomputes = st.recomputes + 1)
-    }
-  }
-
-  private def morDeleteOnce(spark: SparkSession, target: String,
-                            snapshotVersion: Option[Int],
-                            doomedOf: DataFrame => DataFrame,
-                            pruneKeys: Option[(DataFrame, Seq[String])] = None,
-                            prunePredicate: Option[org.apache.spark.sql.Column]
-                              = None): MorDeleteStats = {
-    val parentV = snapshotVersion.orElse(currentVersion(target))
-      .getOrElse(sys.error(s"no committed version at $target"))
-    val before = liveFiles(target, Some(parentV))
-    val candidates = pruneKeys match {
-      case Some((keyRows, pk)) =>
-        pruneByKeyBounds(target, parentV, before, keyRows, pk)
-      case None => prunePredicate
-        .map(p => pruneByPredicate(spark, target, parentV, before, p))
-        .getOrElse(before)
-    }
-    if (candidates.isEmpty) return MorDeleteStats(before.size, 0, 0L)
-    // Candidate rows with (file, position) — existing vectors applied,
-    // so a doomed row is one that is CURRENTLY alive and matches. File
-    // and position are computed directly over the scan, BEFORE the DV
-    // anti-join (input_file_name's single-source rule).
-    val paths = candidates.map(f => dataDir(target).resolve(f).toString)
-    val st = manifestSchema(target, parentV)
-    val alive0 = applyDvJoin(spark, target, parentV,
-      spark.read.schema(physicalSchema(st)).parquet(paths: _*)
-        .withColumn("__gdvf", element_at(split(input_file_name(), "/"), -1))
-        .withColumn("__gdvp", col("_metadata.row_index")),
-      "__gdvf", "__gdvp", Some(candidates))
-    // The doomed-row predicate speaks logical names; file/position
-    // probe columns are already materialized, so the rename is safe.
-    val alive = toLogical(alive0, st)
-    val doomed = doomedOf(alive).select("__gdvf", "__gdvp").cache()
-    try {
-      val affected = doomed.select("__gdvf").distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-      if (affected.isEmpty) return MorDeleteStats(before.size, 0, 0L)
-      val rowsDeleted = doomed.count()
-      val next = parentV + 1
-      // New sidecar per affected file = union of its existing positions
-      // (supersedes the old sidecar — readers join ONE table) and the
-      // fresh marks; disjoint by construction (doomed rows were alive).
-      val existing = dvMeta(target, Some(parentV))
-        .filter { case (f, _) => affected.contains(f) }
-      val allPos =
-        if (existing.isEmpty) doomed
-        else doomed.unionByName(dvPositions(spark, target, existing))
-      val updates = writeDvSidecars(spark, target, allPos, affected, next)
-      // File-disjoint rebase, like the COW verbs: two concurrent MOR
-      // deletes marking DIFFERENT files (the GDPR trickle shape) both
-      // land without recompute — the loser re-commits its sidecar
-      // lines onto the new head's manifest. A rival touching the same
-      // candidate files (its dv: lines moved) recomputes, because this
-      // attempt's sidecars unioned the PARENT's positions.
-      val candidatesAt: (Int, Seq[String]) => Seq[String] = (v, fs) =>
-        pruneKeys match {
-          case Some((keyRows, pk)) => pruneByKeyBounds(target, v, fs,
-            keyRows, pk)
-          case None => prunePredicate
-            .map(p => pruneByPredicate(spark, target, v, fs, p))
-            .getOrElse(fs)
-        }
-      val rebases = commitWithRebase(target, parentV, candidates,
-        affected.toSet, candidatesAt,
-        head => commit(target, liveFiles(target, Some(head)), head,
-          manifestMeta(target, Some(head)) ++ updates): Unit).get
-      MorDeleteStats(before.size, affected.size, rowsDeleted,
-        rebases = rebases)
-    } finally doomed.unpersist()
-  }
+                snapshotVersion: Option[Int] = None): DeleteStats =
+    deleteByKeys(spark, target, keys, pk, maxRetries, snapshotVersion,
+      mor = true)
 
   /** Merge-on-read UPDATE: [[updateWhere]]'s semantics at
     * deletion-vector cost — matching rows' OLD positions are marked in
-    * sidecars and their post-SET images land as ONE appended file, in
+    * sidecars and their post-SET images land as appended files, in
     * a single commit. O(matched rows), never a rewrite of the files
     * they sit in: the MOR answer for a scattered compliance UPDATE
     * (re-attribute, redact a field) against huge files. SET sees the
@@ -2002,87 +1912,9 @@ object MergeStore {
                      predicate: org.apache.spark.sql.Column,
                      set: Map[String, org.apache.spark.sql.Column],
                      maxRetries: Int = 0,
-                     snapshotVersion: Option[Int] = None): UpdateStats = {
-    require(set.nonEmpty, s"UPDATE at $target needs SET assignments")
-    try updateMorOnce(spark, target, snapshotVersion, predicate, set)
-    catch {
-      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
-        val st = updateWhereMor(spark, target, predicate, set,
-          maxRetries - 1, None)
-        st.copy(recomputes = st.recomputes + 1)
-    }
-  }
-
-  private def updateMorOnce(spark: SparkSession, target: String,
-                            snapshotVersion: Option[Int],
-                            predicate: org.apache.spark.sql.Column,
-                            set: Map[String, org.apache.spark.sql.Column])
-      : UpdateStats = {
-    val parentV = snapshotVersion.orElse(currentVersion(target))
-      .getOrElse(sys.error(s"no committed version at $target"))
-    val before = liveFiles(target, Some(parentV))
-    val schema = manifestSchema(target, parentV)
-    val unknown = set.keySet -- schema.fieldNames.toSet
-    require(unknown.isEmpty,
-      s"UPDATE SET references columns not in $target: " +
-        unknown.toSeq.sorted.mkString(", "))
-    val matched = coalesce(predicate, lit(false))
-    val candidates =
-      pruneByPredicate(spark, target, parentV, before, predicate)
-    if (candidates.isEmpty) return UpdateStats(before.size, 0, 0L)
-    val paths = candidates.map(f => dataDir(target).resolve(f).toString)
-    val hit0 = applyDvJoin(spark, target, parentV,
-        spark.read.schema(physicalSchema(schema)).parquet(paths: _*)
-          .withColumn("__gdvf",
-            element_at(split(input_file_name(), "/"), -1))
-          .withColumn("__gdvp", col("_metadata.row_index")),
-        "__gdvf", "__gdvp", Some(candidates))
-    val hit = toLogical(hit0, schema).where(matched).cache()
-    try {
-      val affected = hit.select("__gdvf").distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-      if (affected.isEmpty) return UpdateStats(before.size, 0, 0L)
-      val rowsUpdated = hit.count()
-      // Post-SET images of exactly the matched rows (SET sees the OLD
-      // row — the projection reads pre-update values).
-      val updated = hit.select(schema.fields.map { f =>
-        set.get(f.name).map(_.cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))
-      }.toSeq: _*)
-      enforceConstraints(spark, target, parentV, updated, "updateWhereMor")
-      val next = parentV + 1
-      val existing = dvMeta(target, Some(parentV))
-        .filter { case (f, _) => affected.contains(f) }
-      val doomed = hit.select("__gdvf", "__gdvp")
-      val allPos =
-        if (existing.isEmpty) doomed
-        else doomed.unionByName(dvPositions(spark, target, existing))
-      val updates = writeDvSidecars(spark, target, allPos, affected, next)
-      // Size the appended post-image files by matched volume, like
-      // purgeDeletes: a broad UPDATE matching rows across N files must
-      // never funnel its whole rewrite through one task/file — that
-      // would be a silent scale cliff in a verb promising O(matched).
-      val newFiles = writeFiles(toPhysical(
-        updated.repartition(math.max(1, affected.size)), schema), target)
-      val (bCols, fpp) = inheritedBloom(target, parentV)
-      val sCols = statsColumns(target, Some(parentV))
-      val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
-        sCols, bCols, fpp, schema)
-      // One commit: vectors bury the old images, the appended files
-      // carry the new ones; stats ride along. File-disjoint rebase as
-      // everywhere — the dv-line check refuses when a rival marked the
-      // same candidate files.
-      val rebases = commitWithRebase(target, parentV, candidates,
-        affected.toSet,
-        (v, fs) => pruneByPredicate(spark, target, v, fs, predicate),
-        head => assembleAndCommit(spark, target,
-          (liveFiles(target, Some(head)) ++ newFiles).distinct, head,
-          Map.empty, fresh, blooms, sCols, schema, bCols, fpp,
-          dvUpdates = updates): Unit).get
-      UpdateStats(before.size, affected.size, rowsUpdated,
-        rebases = rebases)
-    } finally hit.unpersist()
-  }
+                     snapshotVersion: Option[Int] = None): UpdateStats =
+    updateByPredicate(spark, target, predicate, set, maxRetries,
+      snapshotVersion, mor = true)
 
   /** Write one `<datafile>.v<version>.dv.parquet` sidecar per file of
     * `affected` from `(\_\_gdvf, __gdvp)` position rows, in ONE
@@ -2206,26 +2038,28 @@ object MergeStore {
       Some(names)), st)
   }
 
-  /** [[readSubset]] carrying a `__file` column (the row's data file
-    * name), deletion vectors applied. `__file` and the DV probe's row
-    * position are computed DIRECTLY over the by-name scan, before the
-    * anti-join — Spark forbids `input_file_name()` above a plan with
+  /** [[readSubset]] carrying each row's data file name (`__file`) and
+    * row position in it (`__pos`), deletion vectors applied — the one
+    * probe reader of every verb that must know where a live row sits
+    * (the affected-file probes, and the positions a MOR verb marks).
+    * Both columns are computed DIRECTLY over the by-name scan, before
+    * the anti-join — Spark forbids `input_file_name()` above a plan with
     * two file sources, so callers must never re-derive the file name
     * on top of a DV-applied frame. */
-  private def readSubsetWithFile(spark: SparkSession, target: String,
-                                 version: Int,
-                                 names: Seq[String]): DataFrame = {
+  private def readSubsetWithPos(spark: SparkSession, target: String,
+                                version: Int,
+                                names: Seq[String]): DataFrame = {
     val st = manifestSchema(target, version)
     if (names.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-        .withColumn("__file", lit(""))
+        .withColumn("__file", lit("")).withColumn("__pos", lit(0L))
     else toLogical(applyDvJoin(spark, target, version,
       spark.read.schema(physicalSchema(st)).parquet(
           names.map(f => dataDir(target).resolve(f).toString): _*)
         .withColumn("__file", element_at(split(input_file_name(), "/"), -1))
-        .withColumn("__gdvp0", col("_metadata.row_index")),
-      "__file", "__gdvp0", Some(names)).drop("__gdvp0"), st)
+        .withColumn("__pos", col("_metadata.row_index")),
+      "__file", "__pos", Some(names)), st)
   }
 
   // ------------------------------------------------------------------
@@ -2690,6 +2524,21 @@ object MergeStore {
     None // unreachable
   }
 
+  /** The one CAS-loss REPLAY every verb shares: run `attempt` at `pin`
+    * (None = head); when it loses the manifest CAS to a rival that
+    * [[commitWithRebase]] could not rebase over, replay it up to
+    * `maxRetries` more times against the FRESH head — never the stale
+    * pin, which is exactly the version the rival moved past — passing
+    * each replay's result through `replayed` (the verb's `recomputes`
+    * count). Staged files of a lost attempt become vacuum debris. */
+  private[store] def withOcc[T](maxRetries: Int, pin: Option[Int] = None)(
+      attempt: Option[Int] => T)(replayed: T => T): T =
+    try attempt(pin)
+    catch {
+      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
+        replayed(withOcc(maxRetries - 1)(attempt)(replayed))
+    }
+
   final case class AppendStats(filesTotal: Int, filesAdded: Int,
                                rowsInserted: Long,
                                recomputes: Int = 0, rebases: Int = 0)
@@ -2718,13 +2567,9 @@ object MergeStore {
   def append(spark: SparkSession, rows: DataFrame, target: String,
              numFiles: Int = 0, maxRetries: Int = 0,
              snapshotVersion: Option[Int] = None): AppendStats =
-    try appendOnce(spark, rows, target, numFiles, replace = false,
-      snapshotVersion)
-    catch {
-      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
-        val st = append(spark, rows, target, numFiles, maxRetries - 1)
-        st.copy(recomputes = st.recomputes + 1)
-    }
+    withOcc(maxRetries, snapshotVersion)(
+      appendOnce(spark, rows, target, numFiles, replace = false, _))(
+      st => st.copy(recomputes = st.recomputes + 1))
 
   /** Replace the table's CONTENT with `rows` in one commit (INSERT
     * OVERWRITE): the new files become the entire live set; schema,
@@ -2734,13 +2579,9 @@ object MergeStore {
     * contract. */
   def overwriteTable(spark: SparkSession, rows: DataFrame, target: String,
                      numFiles: Int = 0, maxRetries: Int = 0): AppendStats =
-    try appendOnce(spark, rows, target, numFiles, replace = true, None)
-    catch {
-      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
-        val st = overwriteTable(spark, rows, target, numFiles,
-          maxRetries - 1)
-        st.copy(recomputes = st.recomputes + 1)
-    }
+    withOcc(maxRetries)(
+      appendOnce(spark, rows, target, numFiles, replace = true, _))(
+      st => st.copy(recomputes = st.recomputes + 1))
 
   private def appendOnce(spark: SparkSession, rows: DataFrame,
                          target: String, numFiles: Int,
@@ -2837,14 +2678,8 @@ object MergeStore {
       (if (pk.nonEmpty) Map(PkKey -> pk.mkString(",")) else Map.empty) ++
       ckptFormat.map(CkptFormatKey -> _) ++
       ckptInterval.map(i => CkptIntervalKey -> i.toString)
-    def attempt(retries: Int): Int =
-      try commit(target, files, currentVersion(target).get,
-        props ++ sizes ++ fresh ++ blooms)
-      catch {
-        case _: java.util.ConcurrentModificationException
-            if retries > 0 => attempt(retries - 1)
-      }
-    attempt(maxRetries)
+    withOcc(maxRetries)(_ => commit(target, files, currentVersion(target).get,
+      props ++ sizes ++ fresh ++ blooms))(identity)
   }
 
   // ------------------------------------------------------------------
@@ -2976,16 +2811,10 @@ object MergeStore {
       } finally incoming.unpersist()
     }
 
-    try attempt(currentVersion(target).getOrElse(sys.error(
-      s"no committed version at $target — COPY INTO needs an existing " +
-        "table (CREATE it first)")), 0)
-    catch {
-      case _: java.util.ConcurrentModificationException
-          if maxRetries > 0 =>
-        val st = copyInto(spark, target, source, format, filePattern,
-          options, numFiles, force, maxRetries - 1)
-        st.copy(recomputes = st.recomputes + 1)
-    }
+    withOcc(maxRetries)(_ => attempt(currentVersion(target).getOrElse(
+      sys.error(s"no committed version at $target — COPY INTO needs an " +
+        "existing table (CREATE it first)")), 0))(
+      st => st.copy(recomputes = st.recomputes + 1))
   }
 
   /** MERGE `updates` into the table on `pk` (incoming wins; within the
@@ -3011,16 +2840,9 @@ object MergeStore {
             maxRetries: Int = 0,
             snapshotVersion: Option[Int] = None,
             allowSchemaEvolution: Boolean = false): MergeStats =
-    try mergeOnce(spark, updates, target, pk, ordCols, snapshotVersion,
-      allowSchemaEvolution)
-    catch {
-      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
-        // Replay resolves the snapshot FRESH (never the stale pin): the
-        // retry exists precisely because that version is no longer head.
-        val st = merge(spark, updates, target, pk, ordCols, maxRetries - 1,
-          allowSchemaEvolution = allowSchemaEvolution)
-        st.copy(recomputes = st.recomputes + 1)
-    }
+    withOcc(maxRetries, snapshotVersion)(mergeOnce(spark, updates, target,
+      pk, ordCols, _, allowSchemaEvolution))(
+      st => st.copy(recomputes = st.recomputes + 1))
 
   private def mergeOnce(spark: SparkSession, updates: DataFrame,
                         target: String, pk: Seq[String],
@@ -3199,15 +3021,9 @@ object MergeStore {
                        ordCols: Seq[String] = Nil,
                        maxRetries: Int = 0,
                        snapshotVersion: Option[Int] = None): MergeStats =
-    try mergeConditionalOnce(spark, source, target, pk, matchedActions,
-      insertClauses, notMatchedBySource, ordCols, snapshotVersion)
-    catch {
-      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
-        val st = mergeConditional(spark, source, target, pk,
-          matchedActions, insertClauses, notMatchedBySource, ordCols,
-          maxRetries - 1)
-        st.copy(recomputes = st.recomputes + 1)
-    }
+    withOcc(maxRetries, snapshotVersion)(mergeConditionalOnce(spark, source,
+      target, pk, matchedActions, insertClauses, notMatchedBySource,
+      ordCols, _))(st => st.copy(recomputes = st.recomputes + 1))
 
   /** `WHEN NOT MATCHED BY SOURCE [AND condition] THEN DELETE`
     * (`assignments = None`) `| UPDATE SET c = e, ...` (assignments
@@ -3328,7 +3144,7 @@ object MergeStore {
       val bsAffected: Set[String] = notMatchedBySource match {
         case None => Set.empty
         case Some(_) =>
-          readSubsetWithFile(spark, target, parentV, bsCandidates)
+          readSubsetWithPos(spark, target, parentV, bsCandidates)
             .join(src, pk, "left_anti").where(bsHit.get)
             .select("__file").distinct()
             .collect().map(_.getString(0)).toSet
@@ -3490,15 +3306,9 @@ object MergeStore {
     * `clusterBy`) keeps a key-local removal batch touching few files. */
   def delete(spark: SparkSession, target: String, keys: DataFrame,
              pk: Seq[String], maxRetries: Int = 0,
-             snapshotVersion: Option[Int] = None): DeleteStats = {
-    require(pk.nonEmpty, s"delete at $target needs a key")
-    val keyRows = keys.select(pk.map(col): _*)
-      .where(pk.map(col(_).isNotNull).reduce(_ && _)).distinct()
-    deleteRetrying(spark, target, maxRetries, snapshotVersion,
-      live => live.join(keyRows, pk, "left_semi"),
-      live => live.join(keyRows, pk, "left_anti"),
-      pruneKeys = Some((keyRows, pk)))
-  }
+             snapshotVersion: Option[Int] = None): DeleteStats =
+    deleteByKeys(spark, target, keys, pk, maxRetries, snapshotVersion,
+      mor = false)
 
   /** DELETE by predicate (`DELETE FROM t WHERE p`): rows where `predicate`
     * is TRUE die; NULL and FALSE survive (SQL DELETE semantics). Same COW
@@ -3509,96 +3319,175 @@ object MergeStore {
   def deleteWhere(spark: SparkSession, target: String,
                   predicate: org.apache.spark.sql.Column,
                   maxRetries: Int = 0,
-                  snapshotVersion: Option[Int] = None): DeleteStats = {
-    val doomed = coalesce(predicate, lit(false))
-    deleteRetrying(spark, target, maxRetries, snapshotVersion,
-      live => live.where(doomed),
-      live => live.where(!doomed),
-      prunePredicate = Some(predicate))
+                  snapshotVersion: Option[Int] = None): DeleteStats =
+    deleteByPredicate(spark, target, predicate, maxRetries,
+      snapshotVersion, mor = false)
+
+  private def deleteByKeys(spark: SparkSession, target: String,
+                           keys: DataFrame, pk: Seq[String],
+                           maxRetries: Int, pin: Option[Int],
+                           mor: Boolean): DeleteStats = {
+    require(pk.nonEmpty, s"delete at $target needs a key")
+    val keyRows = keys.select(pk.map(col): _*)
+      .where(pk.map(col(_).isNotNull).reduce(_ && _)).distinct()
+    withOcc(maxRetries, pin)(p => rowLevel(spark, target, p, mor,
+      (v, fs) => pruneByKeyBounds(target, v, fs, keyRows, pk),
+      Erase(_.join(keyRows, pk, "left_semi"),
+        _.join(keyRows, pk, "left_anti")),
+      DeleteStats(_, _, _, 0, _)))(
+      st => st.copy(recomputes = st.recomputes + 1))
   }
 
-  private def deleteRetrying(spark: SparkSession, target: String,
-                             maxRetries: Int, snapshotVersion: Option[Int],
-                             doomed: DataFrame => DataFrame,
-                             survivors: DataFrame => DataFrame,
-                             pruneKeys: Option[(DataFrame, Seq[String])] = None,
-                             prunePredicate: Option[org.apache.spark.sql.Column] = None)
-      : DeleteStats =
-    try deleteOnce(spark, target, snapshotVersion, doomed, survivors,
-      pruneKeys, prunePredicate)
-    catch {
-      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
-        // Replay against the FRESH head, exactly like merge's retry.
-        val st = deleteRetrying(spark, target, maxRetries - 1, None,
-          doomed, survivors, pruneKeys, prunePredicate)
-        st.copy(recomputes = st.recomputes + 1)
-    }
+  private def deleteByPredicate(spark: SparkSession, target: String,
+                                predicate: org.apache.spark.sql.Column,
+                                maxRetries: Int, pin: Option[Int],
+                                mor: Boolean): DeleteStats = {
+    val doomed = coalesce(predicate, lit(false))
+    withOcc(maxRetries, pin)(p => rowLevel(spark, target, p, mor,
+      (v, fs) => pruneByPredicate(spark, target, v, fs, predicate),
+      Erase(_.where(doomed), _.where(!doomed)),
+      DeleteStats(_, _, _, 0, _)))(
+      st => st.copy(recomputes = st.recomputes + 1))
+  }
 
-  private def deleteOnce(spark: SparkSession, target: String,
-                         snapshotVersion: Option[Int],
-                         doomed: DataFrame => DataFrame,
-                         survivors: DataFrame => DataFrame,
-                         pruneKeys: Option[(DataFrame, Seq[String])],
-                         prunePredicate: Option[org.apache.spark.sql.Column] = None)
-      : DeleteStats = {
-    val parentV = snapshotVersion.orElse(currentVersion(target))
+  /** What a row-level verb does to the rows it matches: the per-file
+    * action of [[rowLevel]]. */
+  private sealed trait RowEdit
+  /** DELETE: `doomed` keeps the matched rows of a probe, `survivors`
+    * the rows a copy-on-write rewrite of an affected file keeps. */
+  private final case class Erase(doomed: DataFrame => DataFrame,
+                                 survivors: DataFrame => DataFrame)
+    extends RowEdit
+  /** UPDATE: `set` applies where `matched` holds; every SET expression
+    * sees the OLD row. */
+  private final case class Assign(matched: org.apache.spark.sql.Column,
+                                  set: Map[String, org.apache.spark.sql.Column])
+    extends RowEdit
+
+  /** The one row-level DML core behind DELETE and UPDATE, copy-on-write
+    * and merge-on-read alike (Delta's design: two actions of one path):
+    *
+    *   1. candidate files: `candidatesAt` prunes by the key batch's
+    *      bounds or the bounds the predicate implies — the same value
+    *      re-derives the candidates at a moved head for the rebase check;
+    *   2. one DV-applied probe ([[readSubsetWithPos]]) finds the matched
+    *      rows that are ALIVE, each with its (file, position);
+    *   3. per affected file one action: REWRITE (COW — the survivors, or
+    *      the `when(matched, e)` projection) or MARK (MOR — a deletion-
+    *      vector sidecar unioned with the parent's, plus the post-SET
+    *      images appended for an update);
+    *   4. fresh stats once, then [[assembleAndCommit]] through
+    *      [[commitWithRebase]].
+    *
+    * The full-table plan is never built: constructing it lists every
+    * live file (an object-store HEAD per path at 100 TB), so the schema
+    * comes from the manifest and the probe and rewrite read candidate
+    * files by name. Nothing matched: no commit. Returns
+    * `stats(filesTotal, filesTouched, rows, rebases)`. */
+  private def rowLevel[T](spark: SparkSession, target: String,
+                          pin: Option[Int], mor: Boolean,
+                          candidatesAt: (Int, Seq[String]) => Seq[String],
+                          edit: RowEdit,
+                          stats: (Int, Int, Long, Int) => T): T = {
+    val parentV = pin.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
     val before = liveFiles(target, Some(parentV))
-    // The full-table plan is never built: constructing it lists every
-    // live file (an object-store HEAD per path at 100 TB), so the
-    // schema comes from the manifest and the probe and rewrite read
-    // candidate files by name.
     val schema = manifestSchema(target, parentV)
-    // Key-form deletes prune the doomed-row probe via manifest stats
-    // (a key batch outside a file's range can't kill rows there);
-    // predicate deletes prune by the bounds the predicate itself
-    // implies on stats columns. Catalyst column-prunes the probe to
-    // the referenced columns either way.
-    val candidates = pruneKeys match {
-      case Some((keyRows, pk)) =>
-        pruneByKeyBounds(target, parentV, before, keyRows, pk)
-      case None => prunePredicate
-        .map(p => pruneByPredicate(spark, target, parentV, before, p))
-        .getOrElse(before)
+    edit match {
+      case Assign(_, set) =>
+        val unknown = set.keySet -- schema.fieldNames.toSet
+        require(unknown.isEmpty,
+          s"UPDATE SET references columns not in $target: " +
+            unknown.toSeq.sorted.mkString(", "))
+      case _: Erase => ()
     }
-    val live = readSubsetWithFile(spark, target, parentV, candidates)
-    val dead = doomed(live)
-    val affected = dead.select("__file").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (affected.isEmpty)
-      return DeleteStats(before.size, 0, 0L) // nothing matched: no commit
-    val rowsDeleted = dead.count()
-    // Rewrite reads the affected files BY NAME — never a post-scan
-    // file-name filter over the whole table.
-    val kept = survivors(readSubset(spark, target, parentV,
-        affected.toSeq.sorted))
-      .drop("__file")
-    // A fully-dead file set writes nothing — the manifest just drops it.
-    val newFiles =
-      if (kept.isEmpty) Seq.empty
-      else writeFiles(toPhysical(
-        kept.repartition(math.max(1, affected.size)), schema), target)
-    val (bCols, fpp) = inheritedBloom(target, parentV)
-    val sCols = statsColumns(target, Some(parentV))
-    val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
-      sCols, bCols, fpp, schema)
-    val candidatesAt: (Int, Seq[String]) => Seq[String] = (v, fs) =>
-      pruneKeys match {
-        case Some((keyRows, pk)) => pruneByKeyBounds(target, v, fs,
-          keyRows, pk)
-        case None => prunePredicate
-          .map(p => pruneByPredicate(spark, target, v, fs, p))
-          .getOrElse(fs)
+    val candidates = candidatesAt(parentV, before)
+    if (candidates.isEmpty) return stats(before.size, 0, 0L, 0)
+    // A DELETE keeps only the matches' (file, position); an UPDATE
+    // keeps the whole rows its SET projects.
+    val probe = readSubsetWithPos(spark, target, parentV, candidates)
+    val hit = (edit match {
+      case Erase(doomed, _) => doomed(probe).select("__file", "__pos")
+      case Assign(matched, _) => probe.where(matched)
+    }).cache()
+    try {
+      val affected = hit.select("__file").distinct()
+        .collect().map(_.getString(0)).toSeq.sorted
+      if (affected.isEmpty) return stats(before.size, 0, 0L, 0)
+      val rows = hit.count()
+      // Constraints see the post-SET image of exactly the matched rows
+      // (bystanders carried verbatim were already valid).
+      val postSet = edit match {
+        case Assign(_, set) =>
+          val updated = hit.select(schema.fields.map { f =>
+            set.get(f.name).map(_.cast(f.dataType).as(f.name))
+              .getOrElse(col(f.name))
+          }.toSeq: _*)
+          enforceConstraints(spark, target, parentV, updated,
+            if (mor) "updateWhereMor" else "updateWhere")
+          Some(updated)
+        case _: Erase => None
       }
-    val rebases = commitWithRebase(target, parentV, candidates, affected,
-      candidatesAt,
-      head => assembleAndCommit(spark, target,
-        (liveFiles(target, Some(head)).filterNot(affected) ++
-          newFiles).distinct,
-        head, Map.empty, fresh, blooms, sCols, schema, bCols, fpp,
-        Map.empty): Unit).get
-    DeleteStats(before.size, affected.size, rowsDeleted,
-      rebases = rebases)
+      // New files are sized by the affected volume: a broad verb must
+      // never funnel its whole write through one task/file.
+      def write(df: DataFrame): Seq[String] = writeFiles(toPhysical(
+        df.repartition(math.max(1, affected.size)), schema), target)
+      val (newFiles, dvUpdates) =
+        if (mor) {
+          // MARK. Each affected file's new sidecar = its existing
+          // positions (superseding the old sidecar — readers join ONE
+          // table) ∪ the fresh marks; disjoint by construction (the
+          // matched rows were alive).
+          val existing = dvMeta(target, Some(parentV))
+            .filter { case (f, _) => affected.contains(f) }
+          val marks = hit.select(col("__file").as("__gdvf"),
+            col("__pos").as("__gdvp"))
+          val dv = writeDvSidecars(spark, target,
+            if (existing.isEmpty) marks
+            else marks.unionByName(dvPositions(spark, target, existing)),
+            affected, parentV + 1)
+          (postSet.map(write).getOrElse(Nil), dv)
+        } else {
+          // REWRITE the affected files, read BY NAME — never a post-scan
+          // file-name filter over the whole table. Untouched rows in them
+          // re-write verbatim (COW granularity is the file, not the row).
+          val kept = readSubset(spark, target, parentV, affected)
+          val rewritten = edit match {
+            case Erase(_, survivors) =>
+              // A fully-dead file set writes nothing: the manifest just
+              // drops it.
+              val s = survivors(kept)
+              if (s.isEmpty) Nil else write(s)
+            case Assign(matched, set) => write(kept.select(
+              schema.fields.map { f =>
+                set.get(f.name) match {
+                  case Some(e) =>
+                    when(matched, e.cast(f.dataType)).otherwise(col(f.name))
+                      .as(f.name)
+                  case None => col(f.name)
+                }
+              }.toSeq: _*))
+          }
+          (rewritten, Map.empty[String, String])
+        }
+      val replaced = if (mor) Set.empty[String] else affected.toSet
+      val (bCols, fpp) = inheritedBloom(target, parentV)
+      val sCols = statsColumns(target, Some(parentV))
+      val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
+        sCols, bCols, fpp, schema)
+      // File-disjoint rebase: a rival that touched other files gets this
+      // result re-committed onto its head. One that rewrote a candidate
+      // or moved its dv: line recomputes — a MOR sidecar unioned the
+      // PARENT's positions.
+      val rebases = commitWithRebase(target, parentV, candidates,
+        affected.toSet, candidatesAt,
+        head => assembleAndCommit(spark, target,
+          (liveFiles(target, Some(head)).filterNot(replaced) ++
+            newFiles).distinct,
+          head, Map.empty, fresh, blooms, sCols, schema, bCols, fpp,
+          dvUpdates): Unit).get
+      stats(before.size, affected.size, rows, rebases)
+    } finally hit.unpersist()
   }
 
   /** Conservative per-column bound constraints IMPLIED by a predicate
@@ -3846,74 +3735,21 @@ object MergeStore {
                   predicate: org.apache.spark.sql.Column,
                   set: Map[String, org.apache.spark.sql.Column],
                   maxRetries: Int = 0,
-                  snapshotVersion: Option[Int] = None): UpdateStats = {
-    require(set.nonEmpty, s"UPDATE at $target needs SET assignments")
-    try updateOnce(spark, target, snapshotVersion, predicate, set)
-    catch {
-      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
-        val st = updateWhere(spark, target, predicate, set,
-          maxRetries - 1, None)
-        st.copy(recomputes = st.recomputes + 1)
-    }
-  }
+                  snapshotVersion: Option[Int] = None): UpdateStats =
+    updateByPredicate(spark, target, predicate, set, maxRetries,
+      snapshotVersion, mor = false)
 
-  private def updateOnce(spark: SparkSession, target: String,
-                         snapshotVersion: Option[Int],
-                         predicate: org.apache.spark.sql.Column,
-                         set: Map[String, org.apache.spark.sql.Column])
-      : UpdateStats = {
-    val parentV = snapshotVersion.orElse(currentVersion(target))
-      .getOrElse(sys.error(s"no committed version at $target"))
-    val before = liveFiles(target, Some(parentV))
-    val schema = manifestSchema(target, parentV)
-    val unknown = set.keySet -- schema.fieldNames.toSet
-    require(unknown.isEmpty,
-      s"UPDATE SET references columns not in $target: " +
-        unknown.toSeq.sorted.mkString(", "))
-    val matched = coalesce(predicate, lit(false))
-    val candidates =
-      pruneByPredicate(spark, target, parentV, before, predicate)
-    val live = readSubsetWithFile(spark, target, parentV, candidates)
-    val hit = live.where(matched)
-    val affected = hit.select("__file").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (affected.isEmpty)
-      return UpdateStats(before.size, 0, 0L) // nothing matched: no commit
-    // Constraints see the post-SET image of exactly the rows the
-    // UPDATE rewrites (bystanders carried verbatim were already valid).
-    enforceConstraints(spark, target, parentV,
-      hit.select(schema.fields.map { f =>
-        set.get(f.name).map(_.cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))
-      }.toSeq: _*), "updateWhere")
-    val rowsUpdated = hit.count()
-    // Rewrite reads the affected files BY NAME; untouched rows in them
-    // re-write verbatim (COW granularity is the file, not the row).
-    val updated = readSubset(spark, target, parentV,
-        affected.toSeq.sorted)
-      .select(schema.fields.map { f =>
-        set.get(f.name) match {
-          case Some(e) =>
-            when(matched, e.cast(f.dataType)).otherwise(col(f.name))
-              .as(f.name)
-          case None => col(f.name)
-        }
-      }.toSeq: _*)
-    val newFiles = writeFiles(toPhysical(
-      updated.repartition(math.max(1, affected.size)), schema), target)
-    val (bCols, fpp) = inheritedBloom(target, parentV)
-    val sCols = statsColumns(target, Some(parentV))
-    val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
-      sCols, bCols, fpp, schema)
-    val rebases = commitWithRebase(target, parentV, candidates, affected,
+  private def updateByPredicate(spark: SparkSession, target: String,
+                                predicate: org.apache.spark.sql.Column,
+                                set: Map[String, org.apache.spark.sql.Column],
+                                maxRetries: Int, pin: Option[Int],
+                                mor: Boolean): UpdateStats = {
+    require(set.nonEmpty, s"UPDATE at $target needs SET assignments")
+    withOcc(maxRetries, pin)(p => rowLevel(spark, target, p, mor,
       (v, fs) => pruneByPredicate(spark, target, v, fs, predicate),
-      head => assembleAndCommit(spark, target,
-        (liveFiles(target, Some(head)).filterNot(affected) ++
-          newFiles).distinct,
-        head, Map.empty, fresh, blooms, sCols, schema, bCols, fpp,
-        Map.empty): Unit).get
-    UpdateStats(before.size, affected.size, rowsUpdated,
-      rebases = rebases)
+      Assign(coalesce(predicate, lit(false)), set),
+      UpdateStats(_, _, _, 0, _)))(
+      st => st.copy(recomputes = st.recomputes + 1))
   }
 
   /** RESTORE to a committed version (Delta RESTORE): publish a NEW head
@@ -4574,14 +4410,9 @@ object MergeStore {
                    maxRetries: Int = 0,
                    snapshotVersion: Option[Int] = None,
                    guard: Option[MarkerGuard] = None): ApplyStats =
-    try applyChangesOnce(spark, target, upserts, deleteKeys, pk, ordCols,
-      meta, snapshotVersion, guard)
-    catch {
-      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
-        val st = applyChanges(spark, target, upserts, deleteKeys, pk,
-          ordCols, meta, maxRetries - 1, guard = guard)
-        st.copy(recomputes = st.recomputes + 1)
-    }
+    withOcc(maxRetries, snapshotVersion)(applyChangesOnce(spark, target,
+      upserts, deleteKeys, pk, ordCols, meta, _, guard))(
+      st => st.copy(recomputes = st.recomputes + 1))
 
   private def applyChangesOnce(spark: SparkSession, target: String,
                                upserts: DataFrame, deleteKeys: DataFrame,
@@ -5009,15 +4840,9 @@ object MergeStore {
                    targetFileBytes: Long = 128L << 20,
                    maxRetries: Int = 0,
                    snapshotVersion: Option[Int] = None): CompactStats =
-    try compactSmallOnce(spark, target, smallBytes, targetFileBytes,
-      snapshotVersion)
-    catch {
-      case _: java.util.ConcurrentModificationException
-          if maxRetries > 0 =>
-        val st = compactSmall(spark, target, smallBytes, targetFileBytes,
-          maxRetries - 1, None)
-        st.copy(recomputes = st.recomputes + 1)
-    }
+    withOcc(maxRetries, snapshotVersion)(compactSmallOnce(spark, target,
+      smallBytes, targetFileBytes, _))(
+      st => st.copy(recomputes = st.recomputes + 1))
 
   private def compactSmallOnce(spark: SparkSession, target: String,
                                smallBytes: Long, targetFileBytes: Long,

@@ -32,7 +32,7 @@ class DeletionVectorSpec extends SparkSpec {
     val t = freshTable("dv-basic")
     val filesBefore = MergeStore.liveFiles(t)
     val st = MergeStore.deleteWhereMor(spark, t, col("id") % 100 === 7)
-    assert(st.rowsDeleted == 100 && st.filesMarked > 0)
+    assert(st.rowsDeleted == 100 && st.filesRewritten > 0)
     assert(MergeStore.version(t).contains(1))
     assert(MergeStore.liveFiles(t) == filesBefore, "MOR must not rewrite files")
     val back = MergeStore.read(spark, t)
@@ -214,12 +214,6 @@ class DeletionVectorSpec extends SparkSpec {
     assert(back.where(col("payload").startsWith("upd-")).count() == 50)
     assert(back.where(col("id") === 3L).select("payload")
       .collect()(0).getString(0) == "upd-3")
-    // Bit-equal to the COW UPDATE on a twin table.
-    val twin = freshTable("dv-mor-upd-twin")
-    MergeStore.updateWhere(spark, twin, col("id") % 200 === 3,
-      Map("payload" -> concat(lit("upd-"), col("id"))))
-    assert(back.orderBy("id").collect().toSeq ==
-      MergeStore.read(spark, twin).orderBy("id").collect().toSeq)
     // The typed feed nets the buried/appended pair into updates.
     val feed = MergeStore.changes(spark, t, 0, 1, pk = Seq("id"),
       includePreimages = true)
@@ -233,6 +227,40 @@ class DeletionVectorSpec extends SparkSpec {
     assert(MergeStore.read(spark, t).where(col("id") === 3L)
       .select("payload").collect()(0).getString(0) == "again")
     assert(MergeStore.read(spark, t).count() == N)
+  }
+
+  test("each MOR verb equals its COW twin: rows and change-type counts") {
+    val pred = col("id") % 200 === 3
+    val keys = Seq(3L, 203L, 9803L, 999999L).toDF("id")
+    val set = Map("payload" -> concat(lit("upd-"), col("id")))
+    // input -> run(table, mor)
+    val inputs: Seq[(String, (String, Boolean) => Unit)] = Seq(
+      "predicate delete" -> { (t, mor) =>
+        (if (mor) MergeStore.deleteWhereMor(spark, t, pred)
+         else MergeStore.deleteWhere(spark, t, pred)): Unit },
+      "key delete" -> { (t, mor) =>
+        (if (mor) MergeStore.deleteMor(spark, t, keys, Seq("id"))
+         else MergeStore.delete(spark, t, keys, Seq("id"))): Unit },
+      "update" -> { (t, mor) =>
+        (if (mor) MergeStore.updateWhereMor(spark, t, pred, set)
+         else MergeStore.updateWhere(spark, t, pred, set)): Unit })
+    inputs.foreach { case (name, run) =>
+      val tag = name.replace(' ', '-')
+      val mor = freshTable(s"dv-twin-$tag")
+      val cow = freshTable(s"dv-twin-$tag-cow")
+      run(mor, true)
+      run(cow, false)
+      assert(MergeStore.dvMeta(mor).nonEmpty && MergeStore.dvMeta(cow).isEmpty,
+        name)
+      assert(MergeStore.read(spark, mor).orderBy("id").collect().toSeq ==
+        MergeStore.read(spark, cow).orderBy("id").collect().toSeq, name)
+      def typeCounts(t: String): Map[String, Long] =
+        MergeStore.changes(spark, t, 0, 1, pk = Seq("id"),
+          includePreimages = true).groupBy("_change_type").count()
+          .as[(String, Long)].collect().toMap
+      val want = typeCounts(cow)
+      assert(want.nonEmpty && typeCounts(mor) == want, s"$name: $want")
+    }
   }
 
   test("optimistic concurrency: racing MOR delete and merge both land via retry") {

@@ -558,5 +558,12 @@ class GraftCatalogSpec extends SparkSpec {
     }
     assert(nm.getMessage.contains("NOT NULL column"), nm.getMessage)
     assert(MergeStore.read(spark, t).where($"payload".isNull).count() == 0)
+    // The same assignment through UPDATE is refused the same way.
+    val nu = intercept[Exception] {
+      spark.sql("UPDATE graft.db.refuse SET payload = CAST(NULL AS STRING) " +
+        "WHERE id = 5")
+    }
+    assert(nu.getMessage.contains("NOT NULL column"), nu.getMessage)
+    assert(MergeStore.read(spark, t).where($"payload".isNull).count() == 0)
   }
 }

@@ -195,6 +195,48 @@ class OccRebaseSpec extends SparkSpec {
     assert(MergeStore.read(spark, t).count() == N - 10 - 5 - 2)
   }
 
+  test("every row-level verb replays a same-file CAS loss on the fresh head") {
+    val keys = (30L to 34L).toDF("id")
+    val hit = col("id").between(30L, 34L)
+    val set = Map("payload" -> concat(lit("upd-"), col("id")))
+    // verb -> run(table, maxRetries, pin) => (recomputes, rebases)
+    val verbs: Seq[(String, (String, Int, Option[Int]) => (Int, Int))] = Seq(
+      "delete" -> { (t, r, pin) =>
+        val s = MergeStore.delete(spark, t, keys, Seq("id"), r, pin)
+        (s.recomputes, s.rebases) },
+      "deleteWhere" -> { (t, r, pin) =>
+        val s = MergeStore.deleteWhere(spark, t, hit, r, pin)
+        (s.recomputes, s.rebases) },
+      "deleteMor" -> { (t, r, pin) =>
+        val s = MergeStore.deleteMor(spark, t, keys, Seq("id"), r, pin)
+        (s.recomputes, s.rebases) },
+      "deleteWhereMor" -> { (t, r, pin) =>
+        val s = MergeStore.deleteWhereMor(spark, t, hit, r, pin)
+        (s.recomputes, s.rebases) },
+      "updateWhere" -> { (t, r, pin) =>
+        val s = MergeStore.updateWhere(spark, t, hit, set, r, pin)
+        (s.recomputes, s.rebases) },
+      "updateWhereMor" -> { (t, r, pin) =>
+        val s = MergeStore.updateWhereMor(spark, t, hit, set, r, pin)
+        (s.recomputes, s.rebases) })
+    // The rival rewrites the file holding the verb's rows (v1); the
+    // verb, pinned at v0, cannot rebase over it.
+    def withRival(tag: String): String = {
+      val t = fresh(tag)
+      MergeStore.merge(spark, batch("a", 10L to 19L), t, Seq("id"))
+      t
+    }
+    verbs.foreach { case (name, run) =>
+      val t = withRival(s"occ-replay-$name")
+      intercept[java.util.ConcurrentModificationException](run(t, 0, Some(0)))
+      assert(run(t, 1, Some(0)) == ((1, 0)), s"$name: want one recompute")
+      val serial = withRival(s"occ-replay-$name-serial")
+      run(serial, 0, None)
+      assert(MergeStore.read(spark, t).orderBy("id").collect().toSeq ==
+        MergeStore.read(spark, serial).orderBy("id").collect().toSeq, name)
+    }
+  }
+
   test("threaded disjoint writers: every merge computes exactly once") {
     val t = fresh("occ-threads")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
