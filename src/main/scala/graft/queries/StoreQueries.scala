@@ -183,8 +183,9 @@ object StoreQueries extends QueryFamily {
     "Change-feed replication: a replica table is deep-cloned from the " +
       "source's v0 snapshot, then advanced by sync() shipping ONLY the " +
       "change feed of each span (v0→v1 merge of updates + inserts, " +
-      "v1→v2 delete) — insert/update post-images MERGE, delete keys " +
-      "DELETE, both file-granular on the replica. The read-back must " +
+      "v1→v2 delete) — insert/update post-images and delete keys land " +
+      "as ONE file-granular applyChanges commit on the replica, with " +
+      "its sync marker. The read-back must " +
       "equal the source's final state: a lost update, resurrected " +
       "delete, or double-applied insert breaks the hash.",
     (s, dir) => {

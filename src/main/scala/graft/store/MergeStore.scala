@@ -1074,11 +1074,6 @@ object MergeStore {
     readSubsetWithPos(spark, target, version, names)
       .select((cols :+ "__file").map(col): _*)
 
-  /** [[commit]] plus stats upkeep: new files' freshly computed stats
-    * lines join the parent's lines for carried files (rewritten files'
-    * stats die with them), and `stats.cols` rides every commit so the
-    * property survives arbitrary verb interleavings. User metadata must
-    * stay clear of the reserved stats namespace. */
   /** The (columns, fpp) bloom configuration a verb inherits from its
     * parent manifest. */
   private def inheritedBloom(target: String,
@@ -1087,6 +1082,11 @@ object MergeStore {
       manifestMeta(target, Some(parentV)).get(BloomFppKey)
         .map(_.toDouble).getOrElse(0.01))
 
+  /** [[commit]] plus stats upkeep: new files' freshly computed stats
+    * lines join the parent's lines for carried files (rewritten files'
+    * stats die with them), and `stats.cols` rides every commit so the
+    * property survives arbitrary verb interleavings. User metadata must
+    * stay clear of the reserved stats namespace. */
   private def commitWithStats(spark: SparkSession, target: String,
                               files: Seq[String], parent: Int,
                               userMeta: Map[String, String],
@@ -1164,11 +1164,15 @@ object MergeStore {
     // orphaned from its source the moment retention reclaimed its birth
     // manifest. Deletion-vector lines carry with their data file — a
     // rewritten file's new NAME has no line, which is exactly the
-    // materialization contract.
+    // materialization contract. A replica's sync marker carries too:
+    // a compaction keeps the content it vouches for, and a vacuum that
+    // dropped the marker's own manifest must not send the next sync
+    // back to a stale start.
     val policyCarry =
       if (parent < 0) Map.empty[String, String]
       else manifestMeta(target, Some(parent)).filter { case (k, _) =>
         isConstraintKey(k) || k == WapSourceKey || k == WapBaseKey ||
+          k == SyncAppliedKey ||
           k == MorKey || k == PkKey || k == CkptFormatKey ||
           k == CkptIntervalKey || isCopyKey(k) ||
           (isDvKey(k) && fileSet.contains(k.stripPrefix(DvPrefix)))
@@ -2902,54 +2906,56 @@ object MergeStore {
         deduped.select(tableCols.map(col).toIndexedSeq: _*), tableSchema,
         "merge")
       ).cache()
-    enforceConstraints(spark, target, parentV, incoming, "merge")
-
-    // Affected-file probe: manifest-pruned candidate files (the batch's
-    // key bounds vs per-file stats), scanned for pk columns only — a
-    // key-local batch against a clustered table probes O(overlap)
-    // files, and no path below ever scans the full table again (the
-    // rewrite set reads its files BY NAME, not via a post-scan
-    // input_file_name filter over every live file).
-    val candidates = pruneByKeyBounds(target, parentV, before,
-      incoming.select(pk.map(col): _*), pk)
-    val liveKeys = probeScan(spark, target, parentV, candidates, pk)
-    // Files holding at least one matched PK — the COW rewrite set.
-    val affected = liveKeys.join(incoming, pk, "left_semi")
-      .select("__file").distinct()
-      .collect().map(_.getString(0)).toSet
-
-    val rowsUpdated = liveKeys.join(incoming, pk, "left_semi").count()
-    val rowsInserted = incoming.join(liveKeys, pk, "left_anti").count()
-
-    // Survivors of the affected files (their non-matched rows) plus the
-    // incoming batch become the replacement files; untouched files are
-    // carried into the next manifest as-is.
-    val survivors = readSubset(spark, target, parentV,
-        affected.toSeq.sorted)
-      .join(incoming, pk, "left_anti")
-    val replacement =
-      survivors.unionByName(incoming, allowMissingColumns = true)
-    // The recorded schema re-inherits the table's rename mapping:
-    // `incoming` is built over the user batch, whose attributes carry
-    // no field metadata. Nullability unions with the table's — carried
-    // files keep their NULLs whatever the batch declares.
-    val recorded = withMapping(
-      unionNullability(incoming.schema, tableSchema), tableSchema)
-    // A true no-op (empty effective batch: nothing matched, nothing to
-    // insert) commits NOTHING — no empty data file, no version churn;
-    // an idempotent rerun of an already-applied filtered merge stays
-    // invisible to the change feed and to followers.
-    if (affected.isEmpty && rowsInserted == 0L && rowsUpdated == 0L) {
-      incoming.unpersist()
-      return MergeStats(before.size, 0, 0L, 0L)
-    }
-    val newFiles =
-      if (affected.isEmpty) writeFiles(toPhysical(incoming, recorded), target)
-      else writeFiles(toPhysical(
-        replacement.repartition(math.max(1, affected.size)), recorded), target)
-    val sCols = statsColumns(target, Some(parentV))
-    val (bCols, fpp) = inheritedBloom(target, parentV)
+    // The cache is released on every exit, a constraint rejection
+    // included.
     try {
+      enforceConstraints(spark, target, parentV, incoming, "merge")
+
+      // Affected-file probe: manifest-pruned candidate files (the batch's
+      // key bounds vs per-file stats), scanned for pk columns only — a
+      // key-local batch against a clustered table probes O(overlap)
+      // files, and no path below ever scans the full table again (the
+      // rewrite set reads its files BY NAME, not via a post-scan
+      // input_file_name filter over every live file).
+      val candidates = pruneByKeyBounds(target, parentV, before,
+        incoming.select(pk.map(col): _*), pk)
+      val liveKeys = probeScan(spark, target, parentV, candidates, pk)
+      // Files holding at least one matched PK — the COW rewrite set.
+      val affected = liveKeys.join(incoming, pk, "left_semi")
+        .select("__file").distinct()
+        .collect().map(_.getString(0)).toSet
+
+      val rowsUpdated = liveKeys.join(incoming, pk, "left_semi").count()
+      val rowsInserted = incoming.join(liveKeys, pk, "left_anti").count()
+
+      // Survivors of the affected files (their non-matched rows) plus the
+      // incoming batch become the replacement files; untouched files are
+      // carried into the next manifest as-is.
+      val survivors = readSubset(spark, target, parentV,
+          affected.toSeq.sorted)
+        .join(incoming, pk, "left_anti")
+      val replacement =
+        survivors.unionByName(incoming, allowMissingColumns = true)
+      // The recorded schema re-inherits the table's rename mapping:
+      // `incoming` is built over the user batch, whose attributes carry
+      // no field metadata. Nullability unions with the table's — carried
+      // files keep their NULLs whatever the batch declares.
+      val recorded = withMapping(
+        unionNullability(incoming.schema, tableSchema), tableSchema)
+      // A true no-op (empty effective batch: nothing matched, nothing to
+      // insert) commits NOTHING — no empty data file, no version churn;
+      // an idempotent rerun of an already-applied filtered merge stays
+      // invisible to the change feed and to followers.
+      if (affected.isEmpty && rowsInserted == 0L && rowsUpdated == 0L)
+        return MergeStats(before.size, 0, 0L, 0L)
+      val newFiles =
+        if (affected.isEmpty)
+          writeFiles(toPhysical(incoming, recorded), target)
+        else writeFiles(toPhysical(
+          replacement.repartition(math.max(1, affected.size)), recorded),
+          target)
+      val sCols = statsColumns(target, Some(parentV))
+      val (bCols, fpp) = inheritedBloom(target, parentV)
       // Fresh stats/bloom lines for the new files compute ONCE — a
       // rebase re-commits them against a moved head without re-running
       // the jobs.
@@ -3773,7 +3779,11 @@ object MergeStore {
     * walks history newest-first, so after a restore a consumer still
     * sees the newest marker ever committed. Restoring a maintained
     * VIEW below its applied watermark therefore needs the corrected
-    * marker passed via `meta` in the same commit. */
+    * marker passed via `meta` in the same commit. A replica's sync
+    * marker is the exception: it names the content the table holds, so
+    * the restore commit records `toVersion`'s value (empty — read as
+    * unset — below the first sync), and the next [[sync]] starts from
+    * the restored content. */
   def restore(spark: SparkSession, target: String, toVersion: Int,
               meta: Map[String, String] = Map.empty): Int = {
     val head = currentVersion(target)
@@ -3816,7 +3826,11 @@ object MergeStore {
         isConstraintKey(k) || k == MorKey || k == PkKey ||
           k == CkptFormatKey || k == CkptIntervalKey
       }
-    commit(target, files, head, policy ++ carried ++ meta)
+    val syncMarker =
+      if (markerValue(target, SyncAppliedKey, Some(head)).isEmpty) Map.empty
+      else Map(SyncAppliedKey ->
+        markerValue(target, SyncAppliedKey, Some(toVersion)).getOrElse(""))
+    commit(target, files, head, policy ++ carried ++ syncMarker ++ meta)
   }
 
   /** Zero-copy table clone (Delta CLONE): `dest` is born at v0 holding
@@ -4365,15 +4379,17 @@ object MergeStore {
   /** Newest value of manifest-metadata `key` at or below a version
     * (head by default) — the generic walk behind progress markers: a
     * commit that doesn't carry the key (a compaction, a rival verb) is
-    * skipped; vacuumed manifests read as empty. O(1) in steady state
-    * (the head usually carries its consumer's marker). */
+    * skipped; vacuumed manifests read as empty. An empty value records
+    * the key as unset (a [[restore]] below a replica's first sync).
+    * O(1) in steady state (the head usually carries its consumer's
+    * marker). */
   def markerValue(target: String, key: String,
                   atVersion: Option[Int] = None): Option[String] =
     atVersion.orElse(currentVersion(target)) match {
       case None => None
       case Some(head) => (head to 0 by -1).iterator
         .flatMap(v => manifestMeta(target, Some(v)).get(key))
-        .nextOption()
+        .nextOption().filter(_.nonEmpty)
     }
 
   /** MERGE `upserts` and DELETE `deleteKeys` in ONE atomic commit, with
@@ -4389,7 +4405,9 @@ object MergeStore {
     * key in BOTH sets ends PRESENT (delete-then-upsert composition). A
     * batch that touches nothing still commits a metadata-only version
     * when `meta` is non-empty, so progress markers advance past empty
-    * spans. OCC retry semantics match the single verbs.
+    * spans. OCC retry semantics match the single verbs, and so does
+    * the batch projection: upsert columns must name table columns
+    * (ordering columns excepted) and align by [[merge]]'s upcast rule.
     *
     * A [[MarkerGuard]] makes the change batch a TRANSACTIONAL
     * IDEMPOTENT write: each attempt — including every OCC retry, which
@@ -4432,64 +4450,84 @@ object MergeStore {
     // plan (a listing job over every live file) is never built, same
     // as merge/delete.
     val recorded = manifestSchema(target, parentV)
+    // Same strict projection as merge: an upsert column the table lacks
+    // (a source that gained a column, for a replica) fails loudly
+    // instead of being trimmed away while the marker moves past it.
+    val extra = upserts.columns
+      .filterNot(recorded.fieldNames.contains).filterNot(ordCols.contains)
+    require(extra.isEmpty,
+      s"applyChanges batch carries columns absent from the table at " +
+        s"$target (${extra.mkString(", ")}) — a drifted producer; add " +
+        "them to the table first")
     val ord = if (ordCols.nonEmpty) ordCols.map(col)
       else Seq(monotonically_increasing_id())
-    val incoming = Upsert.dedupByKey(
+    val incoming = alignBatchTypes(Upsert.dedupByKey(
         upserts.where(pk.map(col(_).isNotNull).reduce(_ && _)), pk, ord)
-      .select(recorded.fieldNames.map(col).toIndexedSeq: _*).cache()
-    enforceConstraints(spark, target, parentV, incoming, "applyChanges")
+      .select(recorded.fieldNames.map(col).toIndexedSeq: _*), recorded,
+      "applyChanges").cache()
     val keys = deleteKeys.select(pk.map(col): _*)
       .where(pk.map(col(_).isNotNull).reduce(_ && _)).distinct().cache()
-    val sCols = statsColumns(target, Some(parentV))
-    val (bCols, bloomFpp) = inheritedBloom(target, parentV)
+    // The caches are released on every exit, a constraint rejection
+    // included.
     try {
-      // Heartbeat shape: an empty change batch exists only to advance a
-      // progress marker — probing every candidate file for keys that
-      // cannot exist is pure waste (measured 12-34 s per commit at
-      // 4-16k live files: the per-micro-batch idle cost of a streaming
-      // sink). Commit the metadata against the unchanged file list and
-      // return before any table IO.
-      if (incoming.isEmpty && keys.isEmpty) {
-        if (meta.nonEmpty)
-          commitWithStats(spark, target, before, parentV, meta, Nil,
-            sCols, recorded, bCols, bloomFpp)
-        return ApplyStats(before.size, 0, 0L, 0L)
-      }
-      // One pruned, pk-only probe answers both verbs: candidate files
-      // come from the COMBINED key bounds (upserts ∪ deletes) — a file
-      // outside both batches' ranges can hold neither a matched upsert
-      // nor a doomed key.
-      val candidates = pruneByKeyBounds(target, parentV, before,
-        incoming.select(pk.map(col): _*)
-          .unionByName(keys.select(pk.map(col): _*)), pk)
-      val liveKeys = probeScan(spark, target, parentV, candidates, pk)
-      val matchedUp = liveKeys.join(incoming, pk, "left_semi")
-      val matchedDel = liveKeys.join(keys, pk, "left_semi")
-      val affected = matchedUp.select("__file")
-        .union(matchedDel.select("__file")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val rowsUpserted = incoming.count()
-      // Deleted = doomed keys present in the snapshot and NOT re-upserted
-      // (delete-then-upsert composition: such a key survives as the
-      // incoming row, so it did not end deleted).
-      val rowsDeleted = matchedDel.join(incoming, pk, "left_anti").count()
-      if (affected.isEmpty && rowsUpserted == 0L) {
+      enforceConstraints(spark, target, parentV, incoming, "applyChanges")
+      val sCols = statsColumns(target, Some(parentV))
+      val (bCols, bloomFpp) = inheritedBloom(target, parentV)
+      def metaOnly(): ApplyStats = {
         // Nothing to rewrite: a metadata-only commit still advances the
         // progress marker atomically (same file list, next version) —
         // carried stats ride along untouched.
         if (meta.nonEmpty)
           commitWithStats(spark, target, before, parentV, meta, Nil,
             sCols, recorded, bCols, bloomFpp)
-        return ApplyStats(before.size, 0, 0L, 0L)
+        ApplyStats(before.size, 0, 0L, 0L)
       }
+      // The count both sizes the upsert side and tests it for emptiness.
+      val rowsUpserted = incoming.count()
+      // Heartbeat shape: an empty change batch exists only to advance a
+      // progress marker — probing every candidate file for keys that
+      // cannot exist is pure waste (measured 12-34 s per commit at
+      // 4-16k live files: the per-micro-batch idle cost of a streaming
+      // sink). Commit the metadata against the unchanged file list and
+      // return before any table IO.
+      if (rowsUpserted == 0L && keys.isEmpty) return metaOnly()
+      // One pruned, pk-only probe answers both verbs: candidate files
+      // come from the COMBINED key bounds (upserts ∪ deletes) — a file
+      // outside both batches' ranges can hold neither a matched upsert
+      // nor a doomed key.
+      val probeKeys = incoming.select(pk.map(col): _*)
+        .unionByName(keys.select(pk.map(col): _*))
+      val candidates = pruneByKeyBounds(target, parentV, before,
+        probeKeys, pk)
+      // ONE grouped collect over the probe answers the affected set and
+      // the deleted count: each live key is tagged by the upsert (__up)
+      // and delete (__dl) sets it matches (both are unique per key, so
+      // the left joins never fan out; NULL keys match neither). Deleted
+      // = doomed keys present in the snapshot and NOT re-upserted
+      // (delete-then-upsert composition: such a key survives as the
+      // incoming row, so it did not end deleted).
+      val perFile = probeScan(spark, target, parentV, candidates, pk)
+        .join(incoming.select(pk.map(col) :+ lit(true).as("__up"): _*),
+          pk, "left")
+        .join(keys.select(pk.map(col) :+ lit(true).as("__dl"): _*),
+          pk, "left")
+        .where(col("__up").isNotNull || col("__dl").isNotNull)
+        .groupBy("__file")
+        .agg(count(when(col("__dl").isNotNull && col("__up").isNull, 1)))
+        .collect()
+      val affected = perFile.map(_.getString(0)).toSet
+      val rowsDeleted = perFile.map(_.getLong(1)).sum
+      if (affected.isEmpty && rowsUpserted == 0L) return metaOnly()
       val survivors = readSubset(spark, target, parentV,
           affected.toSeq.sorted)
         .join(incoming, pk, "left_anti")
         .join(keys, pk, "left_anti")
       val replacement = survivors.unionByName(incoming)
+      // Only a delete-only batch can leave nothing to write: every
+      // affected file emptied, so no (empty) data file is written.
       val newFiles =
         if (affected.isEmpty) writeFiles(toPhysical(incoming, recorded), target)
-        else if (replacement.isEmpty) Seq.empty
+        else if (rowsUpserted == 0L && replacement.isEmpty) Seq.empty
         else writeFiles(toPhysical(
           replacement.repartition(math.max(1, affected.size)), recorded),
           target)
@@ -4500,8 +4538,6 @@ object MergeStore {
       // moved the marker turns the rebase into a dropped replay.
       val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
         sCols, bCols, bloomFpp, recorded)
-      val probeKeys = incoming.select(pk.map(col): _*)
-        .unionByName(keys.select(pk.map(col): _*))
       commitWithRebase(target, parentV, candidates, affected,
         (v, fs) => pruneByKeyBounds(target, v, fs, probeKeys, pk),
         head => assembleAndCommit(spark, target,
@@ -4737,42 +4773,70 @@ object MergeStore {
     }
   }
 
-  final case class SyncStats(upserted: Long, deleted: Long)
+  /** Manifest-metadata key of a replica's progress marker: the source
+    * version whose content the replica holds. It lands in the same
+    * commit as the changes that bring the replica there. */
+  private[graft] val SyncAppliedKey = "sync.applied"
 
   /** Replicate a version span onto another MergeStore table by shipping
     * ONLY the change feed — the cross-region/downstream-copy primitive.
     * At 100 TB a replica cannot re-copy the table per refresh; the
     * industry shape (Delta deep-clone incremental sync, Iceberg
-    * changelog consumption) is: read changes(from, to), MERGE the
-    * insert/update post-images, DELETE the deleted keys. Both verbs are
-    * file-granular on the replica, so a trickle of source commits costs
-    * a trickle of replica rewrites.
+    * changelog consumption) is: read changes(start, to) and apply its
+    * insert/update post-images and deleted keys as ONE guarded
+    * [[applyChanges]] commit that also moves the replica's marker to
+    * `toVersion` — no reader of the replica ever sees the upserts
+    * without the deletes. The apply is file-granular on the replica,
+    * so a trickle of source commits costs a trickle of replica rewrites.
     *
     * The replica must exist (initialize it once from
-    * `read(source, Some(fromVersion))` — the "deep clone" step);
-    * `fromVersion` must be the replica's last-applied source version
-    * for the span composition to be exact. Because changes() nets each
-    * key to ONE terminal change across the span, apply order within the
-    * span is immaterial. Idempotent: re-syncing an applied span is a
-    * no-op merge + no-op delete. */
+    * `read(source, Some(fromVersion))` — the "deep clone" step). The
+    * span starts at the replica's marker; `fromVersion` is used only
+    * while the replica has none, i.e. it names the clone version.
+    * changes() nets each key to ONE terminal change across the span, so
+    * applying it to a replica already past `start` could bring back a
+    * row inserted and deleted inside the span: the commit is therefore
+    * guarded on the exact marker it read, and a rival that moved it
+    * drops this apply whole (`skippedReplay`; re-run to converge). A
+    * replica already at or past `toVersion` commits nothing and reports
+    * `skippedReplay`, so re-syncing an applied span is a no-op. A
+    * source column the replica lacks refuses the apply with nothing
+    * committed (add it to the replica, then re-run). Two first syncs
+    * racing on a replica with no marker yet are not detected. */
   def sync(spark: SparkSession, source: String, replica: String,
            fromVersion: Int, toVersion: Int, pk: Seq[String],
-           maxRetries: Int = 3): SyncStats = {
+           maxRetries: Int = 3): ApplyStats = {
     require(exists(replica),
       s"replica $replica must be initialized from source version $fromVersion")
-    val feed = changes(spark, source, fromVersion, toVersion, pk).cache()
-    try {
-      val upserts = feed.where(col("_change_type").isin(
-        "insert", "update_postimage")).drop("_change_type")
-      val deletes = feed.where(col("_change_type") === "delete")
-        .select(pk.map(col): _*).distinct()
-      val nUp = upserts.count()
-      if (nUp > 0) merge(spark, upserts, replica, pk, maxRetries = maxRetries)
-      val del =
-        if (deletes.isEmpty) DeleteStats(0, 0, 0L)
-        else delete(spark, replica, deletes, pk, maxRetries = maxRetries)
-      SyncStats(nUp, del.rowsDeleted)
-    } finally feed.unpersist()
+    val marker = markerValue(replica, SyncAppliedKey).map(_.toInt)
+    val start = marker.getOrElse(fromVersion)
+    if (start >= toVersion)
+      return ApplyStats(liveFiles(replica).size, 0, 0L, 0L,
+        skippedReplay = true)
+    val feed = changes(spark, source, start, toVersion, pk).cache()
+    try applyFeed(spark, replica, feed, pk, toVersion.toLong,
+      expected = marker.map(_.toLong), maxRetries = maxRetries)
+    finally feed.unpersist()
+  }
+
+  /** The one replication apply behind [[sync]] and
+    * [[graft.streaming.StreamingSync]]: a change feed (data columns plus
+    * `_change_type`, one terminal change per key) lands on the replica
+    * as ONE [[applyChanges]] commit — insert/update post-images upsert,
+    * deleted keys delete, and the marker moves to `v`, the source
+    * version whose content the replica then holds — guarded by
+    * `MarkerGuard(SyncAppliedKey, v, expected)`. */
+  private[graft] def applyFeed(spark: SparkSession, replica: String,
+                               feed: DataFrame, pk: Seq[String], v: Long,
+                               expected: Option[Long],
+                               maxRetries: Int): ApplyStats = {
+    val upserts = feed.where(col("_change_type").isin(
+      "insert", "update_postimage")).drop("_change_type")
+    val deletes = feed.where(col("_change_type") === "delete")
+      .select(pk.map(col): _*)
+    applyChanges(spark, replica, upserts, deletes, pk,
+      meta = Map(SyncAppliedKey -> v.toString), maxRetries = maxRetries,
+      guard = Some(MarkerGuard(SyncAppliedKey, v, expected)))
   }
 
   /** Compact: bin-pack the live rows into `targetFiles` files and commit
@@ -4888,26 +4952,6 @@ object MergeStore {
     CompactStats(committed, small.size, newFiles.size, rebases = rebases)
   }
 
-  /** Delete data files outside the retention window: anything not
-    * referenced by the newest `retainVersions` manifests (default 1 —
-    * the original keep-head-only behavior; older manifests above the
-    * floor are dropped too, ending their time travel).
-    *
-    * Retention interacts with optimistic concurrency: a reader pinned on
-    * version N (time travel, or a long scan that resolved the manifest
-    * before a rival committed N+1) still needs N's files. Head-only
-    * vacuum is safe only when nothing reads behind head; a multi-writer/
-    * multi-reader deployment sets `retainVersions` to cover its longest
-    * reader — exactly Delta's `VACUUM ... RETAIN` contract, expressed in
-    * versions instead of hours.
-    *
-    * Retention also protects IN-FLIGHT WRITERS: a rival merge stages its
-    * data files via writeFiles() BEFORE winning the manifest CAS; in that
-    * window the files are unreferenced and look like orphans. `graceMillis`
-    * (default [[DefaultVacuumGraceMillis]]) skips any data file younger
-    * than the window, so a concurrent vacuum can never delete files a
-    * soon-to-win commit will reference. Pass 0 only when no writer can be
-    * mid-merge (single-writer maintenance windows, tests). */
   /** Materialize version `v` (head by default) as a `.ckpt` sidecar —
     * Delta's explicit `checkpoint()`: bounds every reader's
     * reconstruction walk at `v` without waiting for the interval-th
@@ -4973,6 +5017,26 @@ object MergeStore {
         .flatMap(fmt))
   }
 
+  /** Delete data files outside the retention window: anything not
+    * referenced by the newest `retainVersions` manifests (default 1 —
+    * the original keep-head-only behavior; older manifests above the
+    * floor are dropped too, ending their time travel).
+    *
+    * Retention interacts with optimistic concurrency: a reader pinned on
+    * version N (time travel, or a long scan that resolved the manifest
+    * before a rival committed N+1) still needs N's files. Head-only
+    * vacuum is safe only when nothing reads behind head; a multi-writer/
+    * multi-reader deployment sets `retainVersions` to cover its longest
+    * reader — exactly Delta's `VACUUM ... RETAIN` contract, expressed in
+    * versions instead of hours.
+    *
+    * Retention also protects IN-FLIGHT WRITERS: a rival merge stages its
+    * data files via writeFiles() BEFORE winning the manifest CAS; in that
+    * window the files are unreferenced and look like orphans. `graceMillis`
+    * (default [[DefaultVacuumGraceMillis]]) skips any data file younger
+    * than the window, so a concurrent vacuum can never delete files a
+    * soon-to-win commit will reference. Pass 0 only when no writer can be
+    * mid-merge (single-writer maintenance windows, tests). */
   def vacuum(target: String, retainVersions: Int = 1,
              graceMillis: Long = DefaultVacuumGraceMillis,
              dryRun: Boolean = false): Int = {

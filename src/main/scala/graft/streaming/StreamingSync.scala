@@ -6,20 +6,25 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.store.MergeStore
 
-/** Continuous replication: the CDC stream driving [[MergeStore.sync]]'s
-  * verb pair through foreachBatch — a replica that FOLLOWS its source
-  * commit-by-commit instead of being advanced by scheduled sync() calls.
-  * Cross-region table following, the streaming twin of q97.
+/** Continuous replication: the CDC stream driving the same guarded
+  * [[MergeStore.applyChanges]] commit as [[MergeStore.sync]] through
+  * foreachBatch — a replica that FOLLOWS its source commit-by-commit
+  * instead of being advanced by scheduled sync() calls. Cross-region
+  * table following, the streaming twin of q97.
   *
-  * Unlike [[StreamingIvm]], no high-water-mark guard is needed: applying
-  * a change batch to the replica is IDEMPOTENT (merging the same
-  * post-images re-lands identical rows; deleting the same keys is a
-  * no-op), and foreachBatch can only ever redeliver the LAST batch after
-  * a crash — never an earlier one — so a replay converges to the same
-  * replica state. Aggregation deltas don't have that luxury; upserts do.
+  * Each non-empty micro-batch lands as ONE replica commit: its upserts,
+  * its deletes and the replica's progress marker (`sync.applied`, the
+  * newest source `_commit_version` the batch carries) in the same CAS.
+  * A reader of the replica therefore only ever sees a state the source
+  * had. The marker guards the commit: foreachBatch can redeliver the
+  * last batch after a crash, and a batch the marker already covers is
+  * dropped whole. Applying per-commit terminal changes is also
+  * overlap-safe (re-merging the same post-images re-lands identical
+  * rows; deleting the same keys is a no-op), so the guard needs no
+  * exact base.
   *
   * Scale shape: each micro-batch ships only its span's changed rows
-  * (file-pruned at the source) and costs a file-granular merge/delete on
+  * (file-pruned at the source) and costs one file-granular apply on
   * the replica — steady-state replication cost tracks the source's
   * commit rate, never either table's size.
   */
@@ -44,23 +49,27 @@ object StreamingSync {
         maxVersionsPerBatch = maxVersionsPerBatch)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyCdcBatch(batch, replica, pk)
+        applyCdcBatch(batch, replica, pk): Unit
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .start()
   }
 
-  /** Apply one CDC micro-batch to the replica: merge the arriving rows,
-    * delete the departed keys. A multi-commit batch can carry several
-    * changes for one key (delete@v1 then re-insert@v2) — only the
-    * TERMINAL change per key (highest `_commit_version`) may apply, or
-    * a delete-then-reinsert would end deleted. The terminal changes are
-    * persisted for the call: the emptiness probes and both verbs read
+  /** Apply one CDC micro-batch to the replica as one guarded
+    * [[MergeStore.applyChanges]] commit: arriving rows upsert, departed
+    * keys delete, and the marker advances to the batch's newest
+    * `_commit_version`. A multi-commit batch can carry several changes
+    * for one key (delete@v1 then re-insert@v2) — only the TERMINAL
+    * change per key (highest `_commit_version`) may apply, or a
+    * delete-then-reinsert would end deleted. The terminal changes are
+    * persisted for the call: the marker read and the apply both read
     * them, and each would otherwise re-run the span read over the
-    * source. Visible for specs. */
+    * source. Returns None for an empty batch (nothing is committed),
+    * else the apply's stats — `skippedReplay` for a batch the marker
+    * already covers. Visible for specs. */
   def applyCdcBatch(batch: DataFrame, replica: String,
-                    pk: Seq[String]): Unit = {
+                    pk: Seq[String]): Option[MergeStore.ApplyStats] = {
     val spark = batch.sparkSession
     // Robust to a pre-image-bearing feed (includePreimages = true):
     // update_preimage rows TIE their post-image on _commit_version, so
@@ -75,18 +84,17 @@ object StreamingSync {
       .orderBy(col(MergeStoreCdc.CommitVersionCol).desc)
     val terminal = events
       .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-      .drop("__rn", MergeStoreCdc.CommitVersionCol)
+      .drop("__rn")
       .cache()
     try {
-      val upserts = terminal.where(col(MergeStoreCdc.ChangeTypeCol).isin(
-        "insert", "update_postimage")).drop(MergeStoreCdc.ChangeTypeCol)
-      val deletes = terminal
-        .where(col(MergeStoreCdc.ChangeTypeCol) === "delete")
-        .select(pk.map(col): _*).distinct()
-      if (!upserts.isEmpty)
-        MergeStore.merge(spark, upserts, replica, pk, maxRetries = 3)
-      if (!deletes.isEmpty)
-        MergeStore.delete(spark, replica, deletes, pk, maxRetries = 3)
+      // The newest change is always some key's terminal one; after it
+      // lands, the replica holds the source's content at its version.
+      val newest = terminal
+        .agg(max(col(MergeStoreCdc.CommitVersionCol))).head()
+      if (newest.isNullAt(0)) return None
+      Some(MergeStore.applyFeed(spark, replica,
+        terminal.drop(MergeStoreCdc.CommitVersionCol), pk,
+        newest.getLong(0), expected = None, maxRetries = 3))
     } finally terminal.unpersist(): Unit
   }
 }

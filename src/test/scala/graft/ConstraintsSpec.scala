@@ -38,6 +38,24 @@ class ConstraintsSpec extends SparkSpec {
     assert(MergeStore.constraints(t).size == 1)
   }
 
+  test("a rejected merge or applyChanges leaves no cached batch behind") {
+    val t = freshTable()
+    MergeStore.addConstraint(spark, t, "score_range", "score < 100")
+    val bad = Seq((5000L, 250, "bad")).toDF("id", "score", "name")
+    spark.catalog.clearCache()
+    val cm = spark.sharedState.cacheManager
+    assert(cm.isEmpty)
+    intercept[IllegalStateException] {
+      MergeStore.merge(spark, bad, t, pk = Seq("id"))
+    }
+    assert(cm.isEmpty)
+    intercept[IllegalStateException] {
+      MergeStore.applyChanges(spark, t, bad, Seq(1L).toDF("id"),
+        pk = Seq("id"))
+    }
+    assert(cm.isEmpty)
+  }
+
   test("merge: a violating batch is rejected loudly, table unchanged") {
     val t = freshTable()
     MergeStore.addConstraint(spark, t, "score_range",

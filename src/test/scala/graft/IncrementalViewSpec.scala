@@ -528,12 +528,106 @@ class IncrementalViewSpec extends SparkSpec {
     MergeStore.delete(spark, t,
       spark.range(0L, 50L).select(col("id")), pk = Seq("id")) // v2
     val st = MergeStore.sync(spark, t, r, 0, 2, pk = Seq("id"))
-    assert(st.deleted == 50)
+    assert(st.rowsDeleted == 50)
     def snap(p: String) = MergeStore.read(spark, p)
       .select($"id", $"grp", $"amount").as[(Long, Int, Double)]
       .collect().sortBy(_._1).toSeq
     assert(snap(r) == snap(t))
-    // Re-applying the same span must change nothing (idempotence).
+    // Re-applying the same span must change nothing (idempotence): the
+    // replica's marker already covers it, so nothing is committed.
+    val v = MergeStore.version(r)
+    assert(MergeStore.sync(spark, t, r, 0, 2, pk = Seq("id")).skippedReplay)
+    assert(MergeStore.version(r) == v)
+    assert(snap(r) == snap(t))
+  }
+
+  test("sync starts at the replica's marker, whatever fromVersion says") {
+    val t = tmpDir("sync-stale") + "/tbl"
+    val r = tmpDir("sync-stale") + "/replica"
+    MergeStore.init(spark, rows(200), t, numFiles = 4, clusterBy = Seq("id"))
+    MergeStore.init(spark, MergeStore.read(spark, t), r, numFiles = 4,
+      clusterBy = Seq("id")) // deep clone of v0
+    val r0 = MergeStore.version(r).get
+    val extra = spark.range(1000L, 1003L).select(col("id"),
+      lit(5).cast("int").as("grp"), lit(1.0).as("amount"))
+    MergeStore.merge(spark, extra, t, pk = Seq("id")) // v1: 1000-1002 in
+    MergeStore.sync(spark, t, r, 0, 1, pk = Seq("id"))
+    assert(MergeStore.version(r).contains(r0 + 1))
+    // The marker outlives compactions and a vacuum of the manifest that
+    // first carried it.
+    MergeStore.compact(spark, r, targetFiles = 2, clusterBy = Seq("id"))
+    MergeStore.compact(spark, r, targetFiles = 3, clusterBy = Seq("id"))
+    MergeStore.vacuum(r, retainVersions = 1, graceMillis = 0)
+    val r1 = MergeStore.version(r).get
+    // v2 deletes a key that v1 inserted and updates another: over the
+    // span (0, 2] that key nets to nothing, so a sync that trusted the
+    // stale fromVersion = 0 would keep it on the replica.
+    MergeStore.applyChanges(spark, t,
+      rows(200).where(col("id") === 3L).withColumn("amount", lit(-1.0)),
+      spark.range(1000L, 1001L).select(col("id")), pk = Seq("id")) // v2
+    val st = MergeStore.sync(spark, t, r, 0, 2, pk = Seq("id"))
+    assert(!st.skippedReplay && st.rowsDeleted == 1)
+    assert(MergeStore.version(r).contains(r1 + 1))
+    def snap(p: String) = MergeStore.read(spark, p)
+      .select($"id", $"grp", $"amount").as[(Long, Int, Double)]
+      .collect().sortBy(_._1).toSeq
+    assert(snap(r) == snap(t))
+    assert(MergeStore.read(spark, r).where(col("id") === 1000L).isEmpty)
+  }
+
+  test("sync refuses a source column the replica lacks; nothing commits") {
+    val t = tmpDir("sync-drift") + "/tbl"
+    val r = tmpDir("sync-drift") + "/replica"
+    MergeStore.init(spark, rows(100), t, numFiles = 2, clusterBy = Seq("id"))
+    MergeStore.init(spark, MergeStore.read(spark, t), r, numFiles = 2,
+      clusterBy = Seq("id")) // deep clone of v0
+    MergeStore.addColumn(spark, t, "note",
+      org.apache.spark.sql.types.StringType) // v1
+    MergeStore.merge(spark, rows(5).withColumn("note", lit("n")), t,
+      pk = Seq("id")) // v2
+    val v = MergeStore.version(r)
+    val e = intercept[IllegalArgumentException](
+      MergeStore.sync(spark, t, r, 0, 2, pk = Seq("id")))
+    assert(e.getMessage.contains("note"))
+    // Neither the rows nor the marker moved: the values are not lost.
+    assert(MergeStore.version(r) == v)
+    assert(MergeStore.markerValue(r, MergeStore.SyncAppliedKey).isEmpty)
+    MergeStore.addColumn(spark, r, "note",
+      org.apache.spark.sql.types.StringType)
+    MergeStore.sync(spark, t, r, 0, 2, pk = Seq("id"))
+    def snap(p: String) = MergeStore.read(spark, p)
+      .select($"id", $"amount", $"note").as[(Long, Double, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(snap(r) == snap(t))
+    assert(MergeStore.read(spark, r).where($"note" === "n").count() == 5)
+  }
+
+  test("restore resets the replica's sync marker to the restored content") {
+    val t = tmpDir("sync-restore") + "/tbl"
+    val r = tmpDir("sync-restore") + "/replica"
+    MergeStore.init(spark, rows(100), t, numFiles = 2, clusterBy = Seq("id"))
+    MergeStore.init(spark, MergeStore.read(spark, t), r, numFiles = 2,
+      clusterBy = Seq("id")) // deep clone of v0
+    val r0 = MergeStore.version(r).get
+    MergeStore.merge(spark, rows(3).withColumn("amount", lit(-1.0)), t,
+      pk = Seq("id")) // v1
+    MergeStore.sync(spark, t, r, 0, 1, pk = Seq("id"))
+    MergeStore.delete(spark, t, spark.range(50L, 60L).select(col("id")),
+      pk = Seq("id")) // v2
+    MergeStore.sync(spark, t, r, 0, 2, pk = Seq("id"))
+    def snap(p: String) = MergeStore.read(spark, p)
+      .select($"id", $"grp", $"amount").as[(Long, Int, Double)]
+      .collect().sortBy(_._1).toSeq
+    // Back to the clone: no marker, so the next sync starts at the
+    // caller's clone version and ships the whole span again.
+    MergeStore.restore(spark, r, r0)
+    assert(MergeStore.markerValue(r, MergeStore.SyncAppliedKey).isEmpty)
+    MergeStore.sync(spark, t, r, 0, 2, pk = Seq("id"))
+    assert(snap(r) == snap(t))
+    // Back to the first sync's commit: the marker names source v1.
+    MergeStore.restore(spark, r, r0 + 1)
+    assert(MergeStore.markerValue(r, MergeStore.SyncAppliedKey)
+      .contains("1"))
     MergeStore.sync(spark, t, r, 0, 2, pk = Seq("id"))
     assert(snap(r) == snap(t))
   }

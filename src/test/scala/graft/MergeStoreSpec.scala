@@ -449,6 +449,65 @@ class MergeStoreSpec extends SparkSpec {
     assert(MergeStore.version(t).get == v0 + 1)
   }
 
+  test("applyChanges' one probe counts what the merge+delete pair counts") {
+    def rowsOf(lo: Long, hi: Long, tag: String) = spark.range(lo, hi)
+      .select(col("id"), (col("id") % 97).cast("int").as("grp"),
+        concat(lit(tag + "-"), col("id")).as("payload"))
+    def snap(t: String) = MergeStore.read(spark, t)
+      .select($"id", $"grp", $"payload").as[(Long, Int, String)]
+      .collect().sortBy(_._1).toSeq
+    // Updates in the first file, inserts past the end, deletes in a
+    // middle file: each verb of the pair rewrites its own file.
+    val ups = rowsOf(0L, 5L, "up").unionByName(rowsOf(20000L, 20003L, "new"))
+    val dels = spark.range(5000L, 5004L).select(col("id"))
+    val fused = freshTable()
+    val pair = freshTable()
+    val st = MergeStore.applyChanges(spark, fused, ups, dels, pk = Seq("id"))
+    val m = MergeStore.merge(spark, ups, pair, pk = Seq("id"))
+    val d = MergeStore.delete(spark, pair, dels, pk = Seq("id"))
+    assert(st.filesRewritten == m.filesRewritten + d.filesRewritten)
+    assert(st.rowsUpserted == m.rowsInserted + m.rowsUpdated)
+    assert(st.rowsUpserted == 8)
+    assert(st.rowsDeleted == d.rowsDeleted && st.rowsDeleted == 4)
+    assert(snap(fused) == snap(pair))
+    // A key in both sets ends present and is not counted as deleted; its
+    // file is rewritten once.
+    val both = MergeStore.applyChanges(spark, fused, rowsOf(7000L, 7001L,
+      "again"), spark.range(7000L, 7001L).select(col("id")), pk = Seq("id"))
+    assert(both.filesRewritten == 1)
+    assert(both.rowsUpserted == 1 && both.rowsDeleted == 0)
+    assert(MergeStore.read(spark, fused).where($"id" === 7000L)
+      .select("payload").as[String].collect().toSeq == Seq("again-7000"))
+  }
+
+  test("applyChanges: an emptying delete writes no file; absent keys commit nothing") {
+    val t = tmpDir("merge-store") + "/tbl"
+    MergeStore.init(spark, base.where($"id" < 40L), t, 4,
+      clusterBy = Seq("id"))
+    val files0 = MergeStore.liveFiles(t)
+    val firstKeys = spark.read.parquet(s"$t/data/${files0.head}")
+      .select("id").as[Long].collect().toSeq
+    def onDisk = java.nio.file.Files.list(java.nio.file.Paths.get(t, "data"))
+      .count()
+    val disk0 = onDisk
+    val noUps = base.limit(0)
+    // A delete-only batch that empties its one affected file: the file
+    // leaves the list and no (empty) replacement is written.
+    val st = MergeStore.applyChanges(spark, t, noUps, firstKeys.toDF("id"),
+      pk = Seq("id"))
+    assert(st.filesRewritten == 1 && st.rowsDeleted == firstKeys.size)
+    assert(MergeStore.liveFiles(t) == files0.tail)
+    assert(onDisk == disk0)
+    assert(MergeStore.read(spark, t).count() == 40 - firstKeys.size)
+    // Deleting keys the table does not hold, with no metadata to record,
+    // commits nothing.
+    val v = MergeStore.version(t).get
+    val none = MergeStore.applyChanges(spark, t, noUps,
+      spark.range(500L, 505L).select(col("id")), pk = Seq("id"))
+    assert(none == MergeStore.ApplyStats(3, 0, 0L, 0L))
+    assert(MergeStore.version(t).contains(v))
+  }
+
   test("changes/diff over a vacuumed span fail with the named retention error") {
     val t = freshTable() // v0
     MergeStore.merge(spark, batch("b1", Seq(1L)), t, pk = Seq("id")) // v1
