@@ -4365,13 +4365,21 @@ object MergeStore {
     * v — any movement means a rival maintainer applied an overlapping
     * span (even a SUB-span: a per-commit stream landing base+1 under a
     * scheduled full-span refresh — a >=-only check would let the
-    * refresh's retry double-apply that overlap). `expected = None`
-    * (no base known): abort only when the marker already covers
-    * `newVersion`. Aborts surface as `skippedReplay`, never commit. */
+    * refresh's retry double-apply that overlap). `expectUnset`: abort
+    * unless the marker is still unset — the base of a writer that read
+    * none (a replica's first sync: a rival first sync that landed a
+    * shorter span must not be overwritten by a netted longer one).
+    * Otherwise, with no base known, abort only when the marker already
+    * covers `newVersion`. Aborts surface as `skippedReplay`, never
+    * commit. */
   final case class MarkerGuard(key: String, newVersion: Long,
-                               expected: Option[Long] = None) {
+                               expected: Option[Long] = None,
+                               expectUnset: Boolean = false) {
+    require(!(expectUnset && expected.isDefined),
+      s"MarkerGuard on $key expects both an unset marker and $expected")
     def stale(current: Option[Long]): Boolean = expected match {
       case Some(e) => !current.contains(e)
+      case None if expectUnset => current.isDefined
       case None => current.exists(_ >= newVersion)
     }
   }
@@ -4584,83 +4592,93 @@ object MergeStore {
 
   /** Row-level diff between two committed versions (change-data-feed
     * lite): the rows of `toVersion` that are NOT in `fromVersion` — i.e.
-    * every inserted row plus the post-image of every update. Because
-    * data files are immutable, files common to both manifests cannot
-    * contribute (their rows cancel exactly), so only the files UNIQUE to
-    * each side are ever scanned — a trickle merge's diff reads the few
-    * rewritten files, not the table. exceptAll keeps duplicate-row
-    * multiplicity honest. */
+    * every inserted row plus the post-image of every update, as a row
+    * multiset (a row held twice at `toVersion` and once at
+    * `fromVersion` appears once). It is the net-positive part of
+    * [[changeSides]], so only the files unique to each side, and the
+    * changed positions of common files, are ever scanned — a trickle
+    * merge's diff reads the few rewritten files, not the table. */
   def diff(spark: SparkSession, target: String,
            fromVersion: Int, toVersion: Int): DataFrame = {
+    val sides = changeSides(spark, target, fromVersion, toVersion)
+    val cols = sides.columns.toSeq.filterNot(_ == "__w").map(col)
+    sides.groupBy(cols: _*).agg(sum(col("__w")).as("__net"))
+      .where(col("__net") > 0)
+      .withColumn("__rep", explode(sequence(lit(1L), col("__net"))))
+      .select(cols: _*)
+  }
+
+  /** The signed rows of a span, in `toVersion`'s logical names and
+    * schema plus a weight `__w`: +1 for every row that `toVersion` holds
+    * and `fromVersion` does not hold in the same place, −1 for the
+    * converse. Immutable files common to both manifests cancel exactly,
+    * so only three parts are read: the files unique to `toVersion`
+    * (with its vectors applied, +1), the files unique to `fromVersion`
+    * (with its vectors, −1), and the positions of common files whose
+    * deletion vector changed ([[dvSpanRows]]). Removed pre-evolution
+    * files null-fill appended columns, as read() shows them. A span
+    * that changed nothing is an empty frame of the same shape. */
+  private[graft] def changeSides(spark: SparkSession, target: String,
+                                 fromVersion: Int,
+                                 toVersion: Int): DataFrame = {
     requireSpanReadable(target, fromVersion, toVersion)
-    // BOTH sides surface the TO version's logical names: physical
+    // Both sides surface the TO version's logical names: physical
     // (on-disk) names are the stable identity across a rename, so a
     // span straddling a rename commit still aligns row-for-row.
     val renames = logicalByPhysical(manifestSchema(target, toVersion))
-    def readFiles(names: Seq[String], v: Int): Option[DataFrame] =
+    def readFiles(names: Seq[String], v: Int, w: Long): Option[DataFrame] =
       if (names.isEmpty) None
       else Some(renameAll(applyDv(spark, target, v,
         readSpanFiles(spark, target, v,
           names.map(f => dataDir(target).resolve(f).toString)),
-        Some(names)), renames))
+        Some(names)), renames).withColumn("__w", lit(w)))
     val before = liveFiles(target, Some(fromVersion)).toSet
     val after = liveFiles(target, Some(toVersion)).toSet
-    // Rows of COMMON files un-deleted across the span (a restore below
-    // a MOR delete) are in `to` but not `from` — they join the added
-    // side. Newly DV'd common-file rows need nothing here: diff
-    // returns additions only. [[dvSpanRows]] yields (revived, doomed).
-    val revived = dvSpanRows(spark, target, fromVersion, toVersion,
-      (before intersect after).toSeq.sorted)._1
-    val addedAll = (readFiles((after -- before).toSeq.sorted, toVersion)
-        .toSeq ++ revived.toSeq)
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    (addedAll, readFiles((before -- after).toSeq.sorted, fromVersion)) match {
-      case (None, _) => read(spark, target, Some(toVersion)).limit(0)
-      case (Some(added), None) => added
-      case (Some(added), Some(removed)) =>
-        // Align across schema evolution: pre-evolution removed files
-        // null-fill the appended columns, exactly as read() shows them.
-        added.exceptAll(
-          added.limit(0).unionByName(removed, allowMissingColumns = true))
-    }
+    val base = read(spark, target, Some(toVersion)).limit(0)
+      .withColumn("__w", lit(0L))
+    val cols = base.columns.toSeq.map(col)
+    (readFiles((after -- before).toSeq.sorted, toVersion, 1L).toSeq ++
+      readFiles((before -- after).toSeq.sorted, fromVersion, -1L) ++
+      dvSpanRows(spark, target, fromVersion, toVersion,
+        (before intersect after).toSeq.sorted))
+      .map(base.unionByName(_, allowMissingColumns = true).select(cols: _*))
+      .reduceOption(_.unionByName(_)).getOrElse(base)
   }
 
   /** Rows of `common` files whose deletion vector CHANGED across a
-    * span, split by direction: `_1` = revived rows (marked at `from`,
-    * unmarked at `to` — only a restore produces these), `_2` = newly
-    * doomed rows (a MOR delete in the span). Each is None when that
-    * direction has no changed file; the per-file position delta is
-    * exact (exceptAll), and only changed files are ever scanned. */
+    * span, signed like [[changeSides]]: `__w` = +1 for a row marked at
+    * `from` and not at `to` (revived — only a restore does this), −1
+    * for a row marked at `to` only (a MOR delete in the span). ONE
+    * signed sum over `(file, pos)` decides each position — exceptAll's
+    * `count_from > count_to` test is a positive sum, and a position
+    * marked on both sides sums to 0 and drops — and one broadcast join
+    * fetches the rows. None when no common file's vector changed; only
+    * changed files are ever scanned. */
   private def dvSpanRows(spark: SparkSession, target: String,
                          fromVersion: Int, toVersion: Int,
-                         common: Seq[String])
-      : (Option[DataFrame], Option[DataFrame]) = {
+                         common: Seq[String]): Option[DataFrame] = {
     val fromDv = dvMeta(target, Some(fromVersion))
     val toDv = dvMeta(target, Some(toVersion))
     val changed = common.filter(f => fromDv.get(f) != toDv.get(f))
-    if (changed.isEmpty) return (None, None)
-    import org.apache.spark.sql.types.{LongType, StringType, StructField,
-      StructType}
-    def posOf(m: Map[String, String]): DataFrame = {
+    if (changed.isEmpty) return None
+    def marks(m: Map[String, String], w: Long): Option[DataFrame] = {
       val entries = m.filter { case (f, _) => changed.contains(f) }
-      if (entries.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("__gdvf", StringType),
-          StructField("__gdvp", LongType))))
-      else dvPositions(spark, target, entries)
+      if (entries.isEmpty) None
+      else Some(dvPositions(spark, target, entries).withColumn("__w", lit(w)))
     }
-    val pFrom = posOf(fromDv)
-    val pTo = posOf(toDv)
+    val delta = (marks(fromDv, 1L).toSeq ++ marks(toDv, -1L))
+      .reduce(_.unionByName(_))
+      .groupBy("__gdvf", "__gdvp").agg(signum(sum(col("__w"))).as("__s"))
+      .where(col("__s") =!= 0)
+      .select(col("__gdvf"), col("__gdvp"), col("__s").cast("long").as("__w"))
     val content = renameAll(
       readSpanFiles(spark, target, toVersion,
           changed.map(f => dataDir(target).resolve(f).toString))
         .withColumn("__gdvf", element_at(split(input_file_name(), "/"), -1))
         .withColumn("__gdvp", col("_metadata.row_index")),
       logicalByPhysical(manifestSchema(target, toVersion)))
-    def rowsAt(pos: DataFrame): DataFrame =
-      content.join(broadcast(pos), Seq("__gdvf", "__gdvp"), "left_semi")
-        .drop("__gdvf", "__gdvp")
-    (Some(rowsAt(pFrom.exceptAll(pTo))), Some(rowsAt(pTo.exceptAll(pFrom))))
+    Some(content.join(broadcast(delta), Seq("__gdvf", "__gdvp"))
+      .drop("__gdvf", "__gdvp"))
   }
 
   /** Typed change feed between two committed versions — [[diff]] plus
@@ -4671,106 +4689,73 @@ object MergeStore {
     * propagate the removal). Keyed on `pk`, so it understands DELETEs
     * the row-multiset [[diff]] cannot distinguish from rewrites.
     *
-    * Same file-pruning argument as diff: immutable files common to both
-    * manifests cancel exactly, so only each side's unique files are
-    * scanned. A pure compaction (same content, new layout) emits ZERO
-    * rows: post-images are content-diffed (exceptAll) before keying,
-    * not just key-matched.
+    * Same file-pruning argument as diff ([[changeSides]]): only each
+    * side's unique files and the changed DV positions are scanned. A
+    * pure compaction (same content, new layout) emits ZERO rows:
+    * content nets before keying ([[classifyChanges]]).
     *
     * `includePreimages = true` additionally emits `update_preimage`
     * rows (the OLD row of every content-changed key — Delta CDF's
     * fourth change type). Consumers that must SUBTRACT superseded state
     * (incremental view maintenance, downstream aggregates) need the
     * pre-image; plain replication does not, so the default stays the
-    * three-type feed. Pre-images come from the same two already-aligned
-    * per-side unique-file scans — no extra IO. */
+    * three-type feed. Pre-images come from the same signed frame — no
+    * extra IO. */
   def changes(spark: SparkSession, target: String,
               fromVersion: Int, toVersion: Int,
               pk: Seq[String], includePreimages: Boolean = false): DataFrame = {
     require(pk.nonEmpty, s"changes at $target needs a key")
-    requireSpanReadable(target, fromVersion, toVersion)
-    // Both sides in the TO version's logical names (see [[diff]]) —
-    // `pk` is spelled in the consumer's present-day names.
-    val renames = logicalByPhysical(manifestSchema(target, toVersion))
-    def readFiles(names: Seq[String], v: Int): Option[DataFrame] =
-      if (names.isEmpty) None
-      else Some(renameAll(applyDv(spark, target, v,
-        readSpanFiles(spark, target, v,
-          names.map(f => dataDir(target).resolve(f).toString)),
-        Some(names)), renames))
-    val beforeNames = liveFiles(target, Some(fromVersion)).toSet
-    val afterNames = liveFiles(target, Some(toVersion)).toSet
-    val emptyOut = read(spark, target, Some(toVersion)).limit(0)
-      .withColumn("_change_type", lit(""))
-    // Unique-side files read with their OWN version's vectors applied;
-    // COMMON files whose vector changed contribute their position-delta
-    // rows — a MOR delete's rows to the removed side (they net to
-    // `delete`), a restore's un-deleted rows to the added side.
-    val (revived, doomed) = dvSpanRows(spark, target, fromVersion,
-      toVersion, (beforeNames intersect afterNames).toSeq.sorted)
-    (readFiles((afterNames -- beforeNames).toSeq.sorted, toVersion),
-      readFiles((beforeNames -- afterNames).toSeq.sorted, fromVersion)) match {
-      case (None, None) if revived.isEmpty && doomed.isEmpty => emptyOut
-      case (added, removed) =>
-        // Align both sides onto the evolved (to-version) schema: removed
-        // pre-evolution files null-fill appended columns, as read() does.
-        val base = emptyOut.drop("_change_type")
-        def align(df: DataFrame): DataFrame =
-          base.unionByName(df, allowMissingColumns = true)
-        val addRows = (added.toSeq ++ revived.toSeq).map(align)
-          .reduceOption(_.unionByName(_)).getOrElse(base)
-        val remRows = (removed.toSeq ++ doomed.toSeq).map(align)
-          .reduceOption(_.unionByName(_)).getOrElse(base)
-        // ONE content-keyed aggregate + ONE pk-keyed window replace the
-        // earlier two exceptAlls, two key-distincts and three anti/semi
-        // joins (~8 exchanges -> 3; the per-commit CDC replay and the
-        // IVM refresh pay this plan once per span side). Semantics are
-        // unchanged row-for-row:
-        //   __net  = count_add(content) - count_rem(content) — exceptAll
-        //            multiplicity in one signed number (a compaction
-        //            nets to 0 and emits nothing);
-        //   __ka/__kr = does this row's KEY physically appear on the
-        //            added/removed side at all (raw presence, exactly
-        //            the old addKeys/remKeys anti/semi tests).
-        // NULL keys keep the old anti/semi behavior (equality joins
-        // never matched them): they classify purely by their own side —
-        // net-added rows insert, net-removed rows delete.
-        val cols = base.columns.toSeq
-        val tagged = addRows
-          .select(cols.map(col) :+ lit(1L).as("__w"): _*)
-          .unionByName(remRows
-            .select(cols.map(col) :+ lit(-1L).as("__w"): _*))
-        val byContent = tagged.groupBy(cols.map(col): _*)
-          .agg(sum(col("__w")).as("__net"),
-            sum(when(col("__w") > 0, 1L).otherwise(0L)).as("__na"),
-            sum(when(col("__w") < 0, 1L).otherwise(0L)).as("__nr"))
-        val byKey = org.apache.spark.sql.expressions.Window
-          .partitionBy(pk.map(col): _*)
-        val keyHasNull = pk.map(col(_).isNull).reduce(_ || _)
-        val annotated = byContent
-          .withColumn("__ka", when(keyHasNull, 0).otherwise(
-            max(when(col("__na") > 0, 1).otherwise(0)).over(byKey)))
-          .withColumn("__kr", when(keyHasNull, 0).otherwise(
-            max(when(col("__nr") > 0, 1).otherwise(0)).over(byKey)))
-        val post = annotated.where(col("__net") > 0)
-          .withColumn("_change_type",
-            when(col("__kr") > 0, lit("update_postimage"))
-              .otherwise(lit("insert")))
-        val pre = annotated.where(col("__net") < 0)
-          .withColumn("_change_type",
-            when(col("__ka") > 0, lit("update_preimage"))
-              .otherwise(lit("delete")))
-        val typed0 = post.unionByName(pre)
-        val typed = if (includePreimages) typed0
-          else typed0.where(col("_change_type") =!= "update_preimage")
-        // Re-expand exceptAll multiplicity (|__net| copies per content —
-        // 1 on any pk-honest table; >1 only when a version carries
-        // duplicate full rows).
-        typed
-          .withColumn("__rep",
-            explode(sequence(lit(1L), abs(col("__net")))))
-          .select(cols.map(col) :+ col("_change_type"): _*)
-    }
+    classifyChanges(changeSides(spark, target, fromVersion, toVersion), pk,
+      by = Nil, includePreimages)
+  }
+
+  /** Type the signed rows of [[changeSides]] (a `__w` column; `pk` and
+    * `by` name data columns) into a change feed: the data columns,
+    * `_change_type`, then `by`. Rows are compared within each value of
+    * `by` — `by = Seq("_commit_version")` classifies every commit of a
+    * multi-commit frame in the same pass, exactly as one [[changes]]
+    * per commit would.
+    *
+    * ONE content aggregate and ONE key window, on ONE shuffle (the
+    * aggregate's input is hash-partitioned on `pk ++ by`, a subset of
+    * its grouping, so the window needs no second one):
+    *   __net = Σ __w per (content, by) — exceptAll multiplicity in one
+    *           signed number (a compaction nets to 0 and emits nothing);
+    *   __ka/__kr = does this row's KEY appear on the added/removed side
+    *           at all (raw presence, before netting).
+    * Net-added rows are `update_postimage` when the key was also
+    * removed, else `insert`; net-removed rows are `update_preimage`
+    * when the key was also added, else `delete`. NULL keys never match
+    * one another: they classify purely by their own side. Each content
+    * re-expands to |__net| copies (1 on any pk-honest table; >1 only
+    * when a version carries duplicate full rows). */
+  private[graft] def classifyChanges(tagged: DataFrame, pk: Seq[String],
+                                     by: Seq[String],
+                                     includePreimages: Boolean): DataFrame = {
+    val cols = tagged.columns.toSeq
+      .filterNot(c => c == "__w" || by.contains(c)).map(col)
+    val part = (pk ++ by).map(col)
+    val byContent = tagged.repartition(part: _*)
+      .groupBy(cols ++ by.map(col): _*)
+      .agg(sum(col("__w")).as("__net"),
+        max(when(col("__w") > 0, 1).otherwise(0)).as("__na"),
+        max(when(col("__w") < 0, 1).otherwise(0)).as("__nr"))
+    val byKey = org.apache.spark.sql.expressions.Window.partitionBy(part: _*)
+    val keyHasNull = pk.map(col(_).isNull).reduce(_ || _)
+    def keyHas(flag: String) =
+      when(keyHasNull, 0).otherwise(max(col(flag)).over(byKey))
+    val typed = byContent
+      .withColumn("__ka", keyHas("__na"))
+      .withColumn("__kr", keyHas("__nr"))
+      .where(col("__net") =!= 0)
+      .withColumn("_change_type", when(col("__net") > 0,
+          when(col("__kr") > 0, "update_postimage").otherwise("insert"))
+        .otherwise(
+          when(col("__ka") > 0, "update_preimage").otherwise("delete")))
+    val kept = if (includePreimages) typed
+      else typed.where(col("_change_type") =!= "update_preimage")
+    kept.withColumn("__rep", explode(sequence(lit(1L), abs(col("__net")))))
+      .select(cols ++ (col("_change_type") +: by.map(col)): _*)
   }
 
   /** Manifest-metadata key of a replica's progress marker: the source
@@ -4796,13 +4781,14 @@ object MergeStore {
     * changes() nets each key to ONE terminal change across the span, so
     * applying it to a replica already past `start` could bring back a
     * row inserted and deleted inside the span: the commit is therefore
-    * guarded on the exact marker it read, and a rival that moved it
-    * drops this apply whole (`skippedReplay`; re-run to converge). A
-    * replica already at or past `toVersion` commits nothing and reports
-    * `skippedReplay`, so re-syncing an applied span is a no-op. A
-    * source column the replica lacks refuses the apply with nothing
-    * committed (add it to the replica, then re-run). Two first syncs
-    * racing on a replica with no marker yet are not detected. */
+    * guarded on the exact marker it read — unset included, so two
+    * first syncs racing on a replica with no marker yet cannot both
+    * land — and a rival that moved it drops this apply whole
+    * (`skippedReplay`; re-run to converge). A replica already at or
+    * past `toVersion` commits nothing and reports `skippedReplay`, so
+    * re-syncing an applied span is a no-op. A source column the replica
+    * lacks refuses the apply with nothing committed (add it to the
+    * replica, then re-run). */
   def sync(spark: SparkSession, source: String, replica: String,
            fromVersion: Int, toVersion: Int, pk: Seq[String],
            maxRetries: Int = 3): ApplyStats = {
@@ -4814,8 +4800,10 @@ object MergeStore {
       return ApplyStats(liveFiles(replica).size, 0, 0L, 0L,
         skippedReplay = true)
     val feed = changes(spark, source, start, toVersion, pk).cache()
-    try applyFeed(spark, replica, feed, pk, toVersion.toLong,
-      expected = marker.map(_.toLong), maxRetries = maxRetries)
+    try applyFeed(spark, replica, feed, pk,
+      MarkerGuard(SyncAppliedKey, toVersion.toLong,
+        expected = marker.map(_.toLong), expectUnset = marker.isEmpty),
+      maxRetries = maxRetries)
     finally feed.unpersist()
   }
 
@@ -4823,20 +4811,20 @@ object MergeStore {
     * [[graft.streaming.StreamingSync]]: a change feed (data columns plus
     * `_change_type`, one terminal change per key) lands on the replica
     * as ONE [[applyChanges]] commit — insert/update post-images upsert,
-    * deleted keys delete, and the marker moves to `v`, the source
-    * version whose content the replica then holds — guarded by
-    * `MarkerGuard(SyncAppliedKey, v, expected)`. */
+    * deleted keys delete, and the marker `guard.key` moves to
+    * `guard.newVersion`, the source version whose content the replica
+    * then holds — guarded by `guard`. */
   private[graft] def applyFeed(spark: SparkSession, replica: String,
-                               feed: DataFrame, pk: Seq[String], v: Long,
-                               expected: Option[Long],
+                               feed: DataFrame, pk: Seq[String],
+                               guard: MarkerGuard,
                                maxRetries: Int): ApplyStats = {
     val upserts = feed.where(col("_change_type").isin(
       "insert", "update_postimage")).drop("_change_type")
     val deletes = feed.where(col("_change_type") === "delete")
       .select(pk.map(col): _*)
     applyChanges(spark, replica, upserts, deletes, pk,
-      meta = Map(SyncAppliedKey -> v.toString), maxRetries = maxRetries,
-      guard = Some(MarkerGuard(SyncAppliedKey, v, expected)))
+      meta = Map(guard.key -> guard.newVersion.toString),
+      maxRetries = maxRetries, guard = Some(guard))
   }
 
   /** Compact: bin-pack the live rows into `targetFiles` files and commit

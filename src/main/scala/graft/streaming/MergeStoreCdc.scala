@@ -17,9 +17,10 @@ import graft.store.MergeStore
   * v1 Source API).
   *
   * The offset IS the manifest version: `getOffset` reports the current
-  * head, and each micro-batch materializes `changes(v-1, v)` for every
+  * head, and each micro-batch materializes the typed changes of every
   * version in its span, tagged `_commit_version` — exact per-commit
-  * attribution, not a span-netted blur. All the scale arguments are the
+  * attribution, not a span-netted blur, classified in ONE pass over
+  * the span ([[changesByCommit]]). All the scale arguments are the
   * change feed's own: a micro-batch scans only the files unique to its
   * versions' manifests, so tailing a trickle-merged 100 TB table costs
   * the trickle, never the table. Downstream, the same feed drives
@@ -34,10 +35,10 @@ import graft.store.MergeStore
   *
   * Why the v1 API (`execution.streaming.Source`) and not DSv2
   * MicroBatchStream: getBatch returns a DataFrame, letting the batch be
-  * DECLARED as the relational changes() plan (file-pruned scans,
-  * exceptAll, anti-joins) with Catalyst planning it per micro-batch; a
-  * DSv2 PartitionReader would force hand-built row scans, re-
-  * implementing the parquet reader outside the optimizer. Spark's own
+  * DECLARED as the relational change-feed plan (file-pruned scans, one
+  * signed aggregate and one key window) with Catalyst planning it per
+  * micro-batch; a DSv2 PartitionReader would force hand-built row
+  * scans, re-implementing the parquet reader outside the optimizer. Spark's own
   * FileStreamSource makes the same choice on the same API.
   */
 object MergeStoreCdc {
@@ -53,36 +54,42 @@ object MergeStoreCdc {
       .add(ChangeTypeCol, StringType, nullable = false)
       .add(CommitVersionCol, LongType, nullable = false)
 
-  /** The BATCH equivalent of a micro-batch span: per-commit typed
-    * changes, unioned. Shared by the source's getBatch and by specs
-    * pinning stream == batch.
+  /** The BATCH equivalent of a micro-batch span: the typed changes of
+    * every commit in it, tagged `_commit_version` — by definition the
+    * union over `v` of `changes(v-1, v)`. Shared by the source's
+    * getBatch, the `table_changes` TVF and specs pinning
+    * stream == batch.
     *
-    * Each commit's feed speaks ITS OWN version's logical names; a
-    * span straddling a RENAME commit would union mismatched names and
-    * wedge the stream on a span no restart can change, so every
-    * per-commit frame is aligned onto the SPAN END's names first —
-    * via the stable physical names (`pk` is spelled in the span-end
-    * names, so the per-commit change computation gets it translated
-    * BACK). A span straddling schema EVOLUTION null-fills the
-    * appended columns on pre-evolution commits
-    * (allowMissingColumns — the same shape read() gives their
-    * files). */
+    * It is computed as ONE plan, whatever the span's length: each
+    * commit contributes its signed sides ([[MergeStore.changeSides]]),
+    * tagged with its version, and a single [[MergeStore
+    * .classifyChanges]] pass classifies them all by `(pk,
+    * _commit_version)` — one aggregate and one window on one shuffle,
+    * where a union of per-commit `changes` plans paid its own for every
+    * commit (and a micro-batch plans them all statically, AQE off).
+    *
+    * Each commit's sides speak ITS OWN version's logical names; a span
+    * straddling a RENAME commit would union mismatched names and wedge
+    * the stream on a span no restart can change, so every commit's
+    * frame is aligned onto the SPAN END's names first — via the stable
+    * physical names (`pk` is spelled in the span-end names). A span
+    * straddling schema EVOLUTION null-fills the appended columns on
+    * pre-evolution commits (allowMissingColumns — the same shape read()
+    * gives their files); the data columns always precede
+    * `_change_type` and `_commit_version`. */
   def changesByCommit(spark: SparkSession, path: String, pk: Seq[String],
                       includePreimages: Boolean,
                       fromVersion: Int, toVersion: Int): DataFrame = {
     require(toVersion > fromVersion,
       s"empty CDC span ($fromVersion, $toVersion] at $path")
-    (fromVersion + 1 to toVersion).map { v =>
-      val toSpanEnd = MergeStore.renameMapBetween(path, v, toVersion)
-      val pkAtV = {
-        val back = toSpanEnd.map(_.swap)
-        pk.map(c => back.getOrElse(c, c))
-      }
+    val sides = (fromVersion + 1 to toVersion).map { v =>
       MergeStore.renameColumns(
-        MergeStore.changes(spark, path, v - 1, v, pkAtV, includePreimages),
-        toSpanEnd)
+        MergeStore.changeSides(spark, path, v - 1, v),
+        MergeStore.renameMapBetween(path, v, toVersion))
         .withColumn(CommitVersionCol, lit(v.toLong))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
+    MergeStore.classifyChanges(sides, pk, Seq(CommitVersionCol),
+      includePreimages)
   }
 
   /** Open the change stream. `fromVersion`: emit commits AFTER this
@@ -90,14 +97,15 @@ object MergeStoreCdc {
     * pass Some(0) to replay history from the initial snapshot).
     *
     * `maxVersionsPerBatch` (0 = unbounded) caps how many commits one
-    * micro-batch may span. getBatch builds an N-way union plan for an
-    * N-commit span, so a restart after long downtime would otherwise
-    * drain the whole backlog as ONE micro-batch whose planning cost —
-    * and whose all-or-nothing reprocessing on failure — grows linearly
-    * with the outage. Capped, an AvailableNow catch-up drains in
-    * ceil(backlog / cap) ordinary batches with identical final state
-    * (per-commit slicing is exact; spec-pinned). Delta's
-    * maxFilesPerTrigger admission shape, in commit units. */
+    * micro-batch may span. getBatch reads every commit's changed files
+    * of its span in one plan, so a restart after long downtime would
+    * otherwise drain the whole backlog as ONE micro-batch whose scan
+    * and planning cost — and whose all-or-nothing reprocessing on
+    * failure — grows linearly with the outage. Capped, an AvailableNow
+    * catch-up drains in ceil(backlog / cap) ordinary batches with
+    * identical final state (per-commit slicing is exact;
+    * spec-pinned). Delta's maxFilesPerTrigger admission shape, in
+    * commit units. */
   def readStream(spark: SparkSession, path: String, pk: Seq[String],
                  includePreimages: Boolean = false,
                  fromVersion: Option[Int] = None,
@@ -268,7 +276,7 @@ class MergeStoreCdcSource(spark: SparkSession, path: String,
     }
     // Admission cap: one micro-batch spans at most maxVersionsPerBatch
     // commits past the last batch's end — a long-downtime backlog
-    // drains in bounded batches instead of one N-way union plan.
+    // drains in bounded batches instead of one backlog-sized plan.
     val capped =
       if (maxVersionsPerBatch <= 0) availCapped
       else {

@@ -94,7 +94,8 @@ object StreamingSync {
       if (newest.isNullAt(0)) return None
       Some(MergeStore.applyFeed(spark, replica,
         terminal.drop(MergeStoreCdc.CommitVersionCol), pk,
-        newest.getLong(0), expected = None, maxRetries = 3))
+        MergeStore.MarkerGuard(MergeStore.SyncAppliedKey, newest.getLong(0)),
+        maxRetries = 3))
     } finally terminal.unpersist(): Unit
   }
 }

@@ -631,4 +631,35 @@ class IncrementalViewSpec extends SparkSpec {
     MergeStore.sync(spark, t, r, 0, 2, pk = Seq("id"))
     assert(snap(r) == snap(t))
   }
+
+  test("two first syncs racing on a replica with no marker: the loser skips whole") {
+    val t = tmpDir("sync-race") + "/tbl"
+    val r = tmpDir("sync-race") + "/replica"
+    MergeStore.init(spark, rows(100), t, numFiles = 2, clusterBy = Seq("id"))
+    MergeStore.init(spark, MergeStore.read(spark, t), r, numFiles = 2,
+      clusterBy = Seq("id")) // deep clone of v0, no marker yet
+    val k = spark.range(500L, 501L).select(col("id"),
+      lit(1).cast("int").as("grp"), lit(1.0).as("amount"))
+    MergeStore.merge(spark, k, t, pk = Seq("id")) // v1: key 500 in
+    MergeStore.delete(spark, t, k.select(col("id")), pk = Seq("id")) // v2
+    MergeStore.merge(spark, rows(3).withColumn("amount", lit(-1.0)), t,
+      pk = Seq("id")) // v3
+    // Both syncs read "no marker" and build their feeds from v0: A's
+    // ends at v1 and carries key 500; B's ends at v3, where 500 nets
+    // to nothing, so B applied on top of A would leave it behind.
+    def apply(to: Int) = MergeStore.applyFeed(spark, r,
+      MergeStore.changes(spark, t, 0, to, pk = Seq("id")), Seq("id"),
+      MergeStore.MarkerGuard(MergeStore.SyncAppliedKey, to.toLong,
+        expectUnset = true), maxRetries = 3)
+    assert(!apply(1).skippedReplay)
+    val v = MergeStore.version(r)
+    assert(apply(3).skippedReplay)
+    assert(MergeStore.version(r) == v)
+    // A re-run starts at A's marker and converges.
+    MergeStore.sync(spark, t, r, 0, 3, pk = Seq("id"))
+    def snap(p: String) = MergeStore.read(spark, p)
+      .select($"id", $"grp", $"amount").as[(Long, Int, Double)]
+      .collect().sortBy(_._1).toSeq
+    assert(snap(r) == snap(t))
+  }
 }
