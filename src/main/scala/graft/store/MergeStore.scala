@@ -1104,10 +1104,10 @@ object MergeStore {
   }
 
   /** Fresh per-file stats + bloom manifest lines for `newFiles` — the
-    * ONE site for the guarded computation every rebaseable verb
-    * precomputes (so a rebase re-commits the lines against a moved
-    * head without re-running the jobs) and [[commitWithStats]] runs
-    * inline. */
+    * guarded computation both commit tails share: [[commitWithRebase]]
+    * runs it once before its CAS loop (a rebase re-commits the lines
+    * against a moved head without re-running the jobs), and
+    * [[commitWithStats]] inline. */
   private def freshStatsAndBlooms(spark: SparkSession, target: String,
       newFiles: Seq[String], sCols: Seq[String], bCols: Seq[String],
       bloomFpp: Double, schema: org.apache.spark.sql.types.StructType)
@@ -1124,8 +1124,9 @@ object MergeStore {
   }
 
   /** [[commitWithStats]] with the fresh per-file stats/bloom lines
-    * PRE-COMPUTED — the rebase path re-commits an already-computed verb
-    * against a moved head without re-running the stats jobs. */
+    * PRE-COMPUTED — [[commitWithRebase]] re-assembles an
+    * already-computed verb at each moved head without re-running the
+    * stats jobs. Returns the committed version. */
   private def assembleAndCommit(spark: SparkSession, target: String,
                                 files: Seq[String], parent: Int,
                                 userMeta: Map[String, String],
@@ -2494,33 +2495,64 @@ object MergeStore {
     dvOf(pm) == dvOf(hm)
   }
 
-  /** The commit-or-rebase loop every row-level verb shares: try the
-    * CAS at `head`; on loss, validate the read set against the new
-    * head with [[rebaseSafe]] and retry the commit there (the computed
-    * result and its fresh stats re-commit unchanged — `attemptAt`
-    * receives the head to commit against), rethrowing to the verb's
-    * recompute path on true overlap. `staleAt` is re-checked at EVERY
-    * head (applyChanges' MarkerGuard — a rival maintainer that moved
-    * the marker turns the rebase into a dropped replay): when it fires
-    * the loop returns None and nothing commits. Otherwise Some(rebase
-    * count). */
-  private def commitWithRebase(target: String, parentV: Int,
-                               candidates: Seq[String],
-                               affected: Set[String],
-                               candidatesAt: (Int, Seq[String]) => Seq[String],
-                               attemptAt: Int => Unit,
+  /** A verb's READ SET, which [[rebaseSafe]] re-validates at a moved
+    * head: the candidate files it probed, the files it rewrote or
+    * DV-marked (they must still be live there), and its own pruning
+    * re-run against a head's live files. */
+  private final case class ReadSet(candidates: Seq[String],
+                                   affected: Set[String],
+                                   candidatesAt: (Int, Seq[String]) => Seq[String])
+  /** The read set of a write that reads no data file (append, COPY
+    * INTO): any rival that left table policy alone rebases. */
+  private val BlindWrite = ReadSet(Nil, Set.empty, (_, _) => Nil)
+
+  /** The version a rebasing commit landed, and how many rebases it took. */
+  private final case class Committed(version: Int, rebases: Int)
+
+  /** The one commit tail of every verb that rebases (append, overwrite,
+    * COPY INTO, the upsert, the conditional merge, the row-level verbs,
+    * compactSmall). The verb hands over what it produced: `newFiles`
+    * written against `parentV`, the head files they `replaced` (a set
+    * of names, or `_ => true` for an overwrite), the `recorded`
+    * schema, user `meta`, `dvUpdates` and its read set. Fresh
+    * stats/bloom lines for the new files compute ONCE here, under the
+    * parent's stats columns and bloom configuration; then the CAS is
+    * tried at `head`. On loss the read set is validated against the
+    * new head with [[rebaseSafe]] and the same result re-assembles
+    * there (zero data IO), rethrowing to the verb's recompute path on
+    * true overlap. `staleAt` is re-checked at EVERY head (applyChanges'
+    * MarkerGuard, COPY INTO's ledger — a rival that moved the marker
+    * turns the rebase into a dropped replay): when it fires nothing
+    * commits and the result is None. */
+  private def commitWithRebase(spark: SparkSession, target: String,
+                               parentV: Int, newFiles: Seq[String],
+                               replaced: String => Boolean,
+                               recorded: org.apache.spark.sql.types.StructType,
+                               reads: ReadSet,
+                               meta: Map[String, String] = Map.empty,
+                               dvUpdates: Map[String, String] = Map.empty,
                                staleAt: Int => Boolean = _ => false)
-      : Option[Int] = {
+      : Option[Committed] = {
+    val sCols = statsColumns(target, Some(parentV)).filter(c =>
+      recorded.fields.exists(f => f.name == c && tagOf(f.dataType).isDefined))
+    val (bCols, fpp) = inheritedBloom(target, parentV)
+    val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
+      sCols, bCols, fpp, recorded)
     var head = parentV
     var rebases = 0
     while (true) {
       if (staleAt(head)) return None
-      try { attemptAt(head); return Some(rebases) }
-      catch {
+      try {
+        val v = assembleAndCommit(spark, target,
+          (liveFiles(target, Some(head)).filterNot(replaced) ++
+            newFiles).distinct,
+          head, meta, fresh, blooms, sCols, recorded, bCols, fpp, dvUpdates)
+        return Some(Committed(v, rebases))
+      } catch {
         case cme: java.util.ConcurrentModificationException =>
           val newHead = currentVersion(target).getOrElse(throw cme)
-          if (!rebaseSafe(target, parentV, newHead, candidates, affected,
-              candidatesAt)) throw cme
+          if (!rebaseSafe(target, parentV, newHead, reads.candidates,
+              reads.affected, reads.candidatesAt)) throw cme
           head = newHead
           rebases += 1
       }
@@ -2618,19 +2650,11 @@ object MergeStore {
       val recorded = withMapping(
         unionNullability(incoming.schema, tableSchema), tableSchema)
       val newFiles = writeFiles(toPhysical(incoming, recorded), target)
-      val sCols = statsColumns(target, Some(parentV))
-      val (bCols, fpp) = inheritedBloom(target, parentV)
-      val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
-        sCols, bCols, fpp, recorded)
-      val rebases = commitWithRebase(target, parentV, Nil, Set.empty,
-        (_, _) => Nil,
-        head => assembleAndCommit(spark, target,
-          if (replace) newFiles
-          else (liveFiles(target, Some(head)) ++ newFiles).distinct,
-          head, Map.empty, fresh, blooms, sCols, recorded, bCols, fpp,
-          Map.empty): Unit).get
+      val c = commitWithRebase(spark, target, parentV, newFiles,
+        if (replace) _ => true else Set.empty[String], recorded,
+        BlindWrite).get
       AppendStats(liveFiles(target, Some(parentV)).size, newFiles.size,
-        rowsInserted, rebases = rebases)
+        rowsInserted, rebases = c.rebases)
     } finally incoming.unpersist()
   }
 
@@ -2781,28 +2805,20 @@ object MergeStore {
         val newFiles =
           if (rowsLoaded == 0L) Seq.empty[String]
           else writeFiles(toPhysical(incoming, recorded), target)
-        val sCols = statsColumns(target, Some(head))
-        val (bCols, fpp) = inheritedBloom(target, head)
-        val (fresh, blooms) = freshStatsAndBlooms(spark, target,
-          newFiles, sCols, bCols, fpp, recorded)
         val ledgerLines: Map[String, String] = toLoad.map(st =>
           copyKey(st.getPath.toString) ->
             s"${st.getLen} ${st.getModificationTime}").toMap
-        val committed = commitWithRebase(target, head, Nil, Set.empty,
-          (_, _) => Nil,
-          h => assembleAndCommit(spark, target,
-            (liveFiles(target, Some(h)) ++ newFiles).distinct, h,
-            ledgerLines, fresh, blooms, sCols, recorded, bCols, fpp,
-            Map.empty): Unit,
+        val committed = commitWithRebase(spark, target, head, newFiles,
+          Set.empty[String], recorded, BlindWrite, meta = ledgerLines,
           staleAt = h => h != head && !force && {
             val lm = manifestMeta(target, Some(h))
             toLoad.exists(st =>
               lm.contains(copyKey(st.getPath.toString)))
           })
         committed match {
-          case Some(_) =>
+          case Some(c) =>
             CopyStats(offered.size, toLoad.size, skipped.size,
-              rowsLoaded, recomputes, currentVersion(target))
+              rowsLoaded, recomputes, Some(c.version))
           case None =>
             // A rival ingested one of this attempt's files mid-race:
             // replay the whole plan against the new head's ledger
@@ -2823,7 +2839,14 @@ object MergeStore {
 
   /** MERGE `updates` into the table on `pk` (incoming wins; within the
     * batch the highest `ordCols` wins, like CoreStore's intra-batch
-    * order). Rewrites only the files containing matched keys.
+    * order). Rewrites only the files containing matched keys. This is
+    * [[applyChanges]] with no delete side and no marker: the same
+    * upsert body runs one pruned key probe whose single grouped collect
+    * yields the rewrite set, `rowsUpdated` (live rows whose key the
+    * batch upserts) and `rowsInserted` (batch keys the table lacks).
+    * `allowSchemaEvolution` appends batch columns the table lacks
+    * (Delta's mergeSchema); off, the batch must project exactly onto
+    * the table's columns, batch-only `ordCols` excepted.
     *
     * Multi-writer safe via optimistic concurrency: the whole merge reads
     * ONE pinned snapshot version (never "the newest", which another
@@ -2844,135 +2867,26 @@ object MergeStore {
             maxRetries: Int = 0,
             snapshotVersion: Option[Int] = None,
             allowSchemaEvolution: Boolean = false): MergeStats =
-    withOcc(maxRetries, snapshotVersion)(mergeOnce(spark, updates, target,
-      pk, ordCols, _, allowSchemaEvolution))(
-      st => st.copy(recomputes = st.recomputes + 1))
+    withOcc(maxRetries, snapshotVersion) { pin =>
+      val u = upsertOnce(spark, target, updates, None, pk, ordCols,
+        Map.empty, pin, None, allowSchemaEvolution, "merge")
+      MergeStats(u.stats.filesTotal, u.stats.filesRewritten, u.rowsInserted,
+        u.rowsUpdated, rebases = u.stats.rebases)
+    }(st => st.copy(recomputes = st.recomputes + 1))
 
-  private def mergeOnce(spark: SparkSession, updates: DataFrame,
-                        target: String, pk: Seq[String],
-                        ordCols: Seq[String],
-                        snapshotVersion: Option[Int],
-                        allowSchemaEvolution: Boolean = false): MergeStats = {
-    val parentV = snapshotVersion.orElse(currentVersion(target))
+  /** The keyed-batch prologue of the upsert and the conditional merge:
+    * the pinned parent version (the head when `pin` is None), its live
+    * files, and `batch` minus NULL-keyed rows with one row per `pk` —
+    * the highest `ordCols` wins, else the last row. */
+  private def keyedBatch(target: String, batch: DataFrame, pk: Seq[String],
+                         ordCols: Seq[String], pin: Option[Int])
+      : (Int, Seq[String], DataFrame) = {
+    val parentV = pin.orElse(currentVersion(target))
       .getOrElse(sys.error(s"no committed version at $target"))
-    val before = liveFiles(target, Some(parentV))
     val ord = if (ordCols.nonEmpty) ordCols.map(col)
       else Seq(monotonically_increasing_id())
-    val deduped = Upsert.dedupByKey(
-      updates.where(pk.map(col(_).isNotNull).reduce(_ && _)), pk, ord)
-    // The verb NEVER builds the full-table read plan just to learn
-    // column names: constructing it lists every live file (an
-    // InMemoryFileIndex pass — a parallel listing JOB past the
-    // discovery threshold, an object-store HEAD per path at 100 TB),
-    // and a pruned trickle merge must stay O(candidate files) end to
-    // end. The manifest schema answers instead.
-    val tableSchema = manifestSchema(target, parentV)
-    val tableCols: Seq[String] = tableSchema.fieldNames.toSeq
-    // Schema evolution (Delta's mergeSchema shape): with it on, batch
-    // columns absent from the table are APPENDED (carried files keep
-    // their physical schema — read() null-fills them there),
-    // and table columns absent from the batch null-fill on the incoming
-    // rows. Off (the default), the batch must project exactly onto the
-    // table's columns — a drifted producer fails loudly here instead of
-    // silently reshaping the table.
-    // Batch-only ordering columns are part of the merge CONTRACT, not
-    // schema drift — only other unknown columns trip the strict check.
-    val extra = deduped.columns
-      .filterNot(tableCols.contains).filterNot(ordCols.contains)
-    require(allowSchemaEvolution || extra.isEmpty,
-      s"merge batch carries columns absent from the table " +
-        s"(${extra.mkString(", ")}) — a drifted producer, or pass " +
-        "allowSchemaEvolution=true to append them")
-    // A renamed-away column's PHYSICAL name is still spelled inside
-    // every carried file; evolving in a new column under that name
-    // would make two fields collide on disk (and resurrect old bytes).
-    val physTaken = tableSchema.fields
-      .filter(f => physicalNameOf(f) != f.name)
-      .map(physicalNameOf).toSet
-    val collides = extra.filter(physTaken.contains)
-    require(collides.isEmpty,
-      s"evolved column(s) ${collides.mkString(", ")} collide with the " +
-        s"on-disk (physical) name of a renamed column at $target — " +
-        "pick another name, or compact and re-init to retire the " +
-        "physical name")
-    val batchOnlyOrd = ordCols.filterNot(tableCols.contains)
-    def emptyTable = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-    val incoming = (
-      if (allowSchemaEvolution)
-        emptyTable.unionByName(deduped.drop(batchOnlyOrd: _*),
-          allowMissingColumns = true)
-      else alignBatchTypes(
-        deduped.select(tableCols.map(col).toIndexedSeq: _*), tableSchema,
-        "merge")
-      ).cache()
-    // The cache is released on every exit, a constraint rejection
-    // included.
-    try {
-      enforceConstraints(spark, target, parentV, incoming, "merge")
-
-      // Affected-file probe: manifest-pruned candidate files (the batch's
-      // key bounds vs per-file stats), scanned for pk columns only — a
-      // key-local batch against a clustered table probes O(overlap)
-      // files, and no path below ever scans the full table again (the
-      // rewrite set reads its files BY NAME, not via a post-scan
-      // input_file_name filter over every live file).
-      val candidates = pruneByKeyBounds(target, parentV, before,
-        incoming.select(pk.map(col): _*), pk)
-      val liveKeys = probeScan(spark, target, parentV, candidates, pk)
-      // Files holding at least one matched PK — the COW rewrite set.
-      val affected = liveKeys.join(incoming, pk, "left_semi")
-        .select("__file").distinct()
-        .collect().map(_.getString(0)).toSet
-
-      val rowsUpdated = liveKeys.join(incoming, pk, "left_semi").count()
-      val rowsInserted = incoming.join(liveKeys, pk, "left_anti").count()
-
-      // Survivors of the affected files (their non-matched rows) plus the
-      // incoming batch become the replacement files; untouched files are
-      // carried into the next manifest as-is.
-      val survivors = readSubset(spark, target, parentV,
-          affected.toSeq.sorted)
-        .join(incoming, pk, "left_anti")
-      val replacement =
-        survivors.unionByName(incoming, allowMissingColumns = true)
-      // The recorded schema re-inherits the table's rename mapping:
-      // `incoming` is built over the user batch, whose attributes carry
-      // no field metadata. Nullability unions with the table's — carried
-      // files keep their NULLs whatever the batch declares.
-      val recorded = withMapping(
-        unionNullability(incoming.schema, tableSchema), tableSchema)
-      // A true no-op (empty effective batch: nothing matched, nothing to
-      // insert) commits NOTHING — no empty data file, no version churn;
-      // an idempotent rerun of an already-applied filtered merge stays
-      // invisible to the change feed and to followers.
-      if (affected.isEmpty && rowsInserted == 0L && rowsUpdated == 0L)
-        return MergeStats(before.size, 0, 0L, 0L)
-      val newFiles =
-        if (affected.isEmpty)
-          writeFiles(toPhysical(incoming, recorded), target)
-        else writeFiles(toPhysical(
-          replacement.repartition(math.max(1, affected.size)), recorded),
-          target)
-      val sCols = statsColumns(target, Some(parentV))
-      val (bCols, fpp) = inheritedBloom(target, parentV)
-      // Fresh stats/bloom lines for the new files compute ONCE — a
-      // rebase re-commits them against a moved head without re-running
-      // the jobs.
-      val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
-        sCols, bCols, fpp, recorded)
-      val rebases = commitWithRebase(target, parentV, candidates,
-        affected,
-        (v, fs) => pruneByKeyBounds(target, v, fs,
-          incoming.select(pk.map(col): _*), pk),
-        head => assembleAndCommit(spark, target,
-          (liveFiles(target, Some(head)).filterNot(affected) ++
-            newFiles).distinct,
-          head, Map.empty, fresh, blooms, sCols, recorded, bCols, fpp,
-          Map.empty): Unit).get
-      MergeStats(before.size, affected.size, rowsInserted, rowsUpdated,
-        rebases = rebases)
-    } finally incoming.unpersist()
+    (parentV, liveFiles(target, Some(parentV)), Upsert.dedupByKey(
+      batch.where(pk.map(col(_).isNotNull).reduce(_ && _)), pk, ord))
   }
 
   /** MERGE with CONDITIONAL and COLUMN-LIST actions — the Delta/Iceberg
@@ -3092,9 +3006,8 @@ object MergeStore {
           "no condition — every insert clause but the last needs one " +
           "(later clauses would be unreachable)")
     }
-    val parentV = snapshotVersion.orElse(currentVersion(target))
-      .getOrElse(sys.error(s"no committed version at $target"))
-    val before = liveFiles(target, Some(parentV))
+    val (parentV, before, deduped) =
+      keyedBatch(target, source, pk, ordCols, snapshotVersion)
     val tableSchema = manifestSchema(target, parentV)
     val tableCols = tableSchema.fieldNames.toSeq
     def toTableType(c: org.apache.spark.sql.Column, name: String) =
@@ -3114,10 +3027,6 @@ object MergeStore {
         s"INSERT column list must assign every key column; missing: " +
           s"${missingPk.mkString(", ")}")
     }
-    val ord = if (ordCols.nonEmpty) ordCols.map(col)
-      else Seq(monotonically_increasing_id())
-    val deduped = Upsert.dedupByKey(
-      source.where(pk.map(col(_).isNotNull).reduce(_ && _)), pk, ord)
     val src = deduped.cache()
     try {
       // Affected-file probe — the matched side reads like [[merge]].
@@ -3273,22 +3182,13 @@ object MergeStore {
           toPhysical(inserted, recorded), target)
         else writeFiles(toPhysical(replacement.repartition(
           math.max(1, affected.size)), recorded), target)
-      val sCols = statsColumns(target, Some(parentV))
-      val (bCols, fpp) = inheritedBloom(target, parentV)
-      val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
-        sCols, bCols, fpp, recorded)
-      val rebases = commitWithRebase(target, parentV, candidates,
-        affected,
-        (v, fs) => (pruneByKeyBounds(target, v, fs,
-          src.select(pk.map(col): _*), pk) ++ bsCandidatesAt(v, fs))
-          .distinct,
-        head => assembleAndCommit(spark, target,
-          (liveFiles(target, Some(head)).filterNot(affected) ++
-            newFiles).distinct,
-          head, Map.empty, fresh, blooms, sCols, recorded, bCols, fpp,
-          Map.empty): Unit).get
+      val c = commitWithRebase(spark, target, parentV, newFiles, affected,
+        recorded, ReadSet(candidates, affected,
+          (v, fs) => (pruneByKeyBounds(target, v, fs,
+            src.select(pk.map(col): _*), pk) ++ bsCandidatesAt(v, fs))
+            .distinct)).get
       MergeStats(before.size, affected.size, rowsInserted, rowsUpdated,
-        rowsDeleted = rowsDeleted, rebases = rebases)
+        rowsDeleted = rowsDeleted, rebases = c.rebases)
     } finally src.unpersist()
   }
 
@@ -3382,8 +3282,7 @@ object MergeStore {
     *      the `when(matched, e)` projection) or MARK (MOR — a deletion-
     *      vector sidecar unioned with the parent's, plus the post-SET
     *      images appended for an update);
-    *   4. fresh stats once, then [[assembleAndCommit]] through
-    *      [[commitWithRebase]].
+    *   4. the one commit tail, [[commitWithRebase]].
     *
     * The full-table plan is never built: constructing it lists every
     * live file (an object-store HEAD per path at 100 TB), so the schema
@@ -3476,23 +3375,15 @@ object MergeStore {
           }
           (rewritten, Map.empty[String, String])
         }
-      val replaced = if (mor) Set.empty[String] else affected.toSet
-      val (bCols, fpp) = inheritedBloom(target, parentV)
-      val sCols = statsColumns(target, Some(parentV))
-      val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
-        sCols, bCols, fpp, schema)
       // File-disjoint rebase: a rival that touched other files gets this
       // result re-committed onto its head. One that rewrote a candidate
       // or moved its dv: line recomputes — a MOR sidecar unioned the
       // PARENT's positions.
-      val rebases = commitWithRebase(target, parentV, candidates,
-        affected.toSet, candidatesAt,
-        head => assembleAndCommit(spark, target,
-          (liveFiles(target, Some(head)).filterNot(replaced) ++
-            newFiles).distinct,
-          head, Map.empty, fresh, blooms, sCols, schema, bCols, fpp,
-          dvUpdates): Unit).get
-      stats(before.size, affected.size, rows, rebases)
+      val c = commitWithRebase(spark, target, parentV, newFiles,
+        if (mor) Set.empty[String] else affected.toSet, schema,
+        ReadSet(candidates, affected.toSet, candidatesAt),
+        dvUpdates = dvUpdates).get
+      stats(before.size, affected.size, rows, c.rebases)
     } finally hit.unpersist()
   }
 
@@ -4405,17 +4296,19 @@ object MergeStore {
     * that must apply a change batch PLUS its progress marker
     * all-or-nothing (IncrementalView's delta application: separate
     * merge / delete / marker steps left a crash window where a
-    * redelivered batch double-applied the delta). Same file-granular
-    * COW shape as [[merge]] + [[delete]] fused: affected files are
-    * those holding a matched upsert key OR a doomed delete key; their
-    * survivors (rows matching neither) rewrite together with the
-    * incoming batch, everything else carries by manifest reference. A
-    * key in BOTH sets ends PRESENT (delete-then-upsert composition). A
-    * batch that touches nothing still commits a metadata-only version
-    * when `meta` is non-empty, so progress markers advance past empty
-    * spans. OCC retry semantics match the single verbs, and so does
-    * the batch projection: upsert columns must name table columns
-    * (ordering columns excepted) and align by [[merge]]'s upcast rule.
+    * redelivered batch double-applied the delta). It runs [[merge]]'s
+    * upsert body with a delete side: one pruned key probe over the
+    * combined key bounds finds the files holding a matched upsert key
+    * OR a doomed delete key; their survivors (rows matching neither)
+    * rewrite together with the incoming batch, everything else carries
+    * by manifest reference. A key in BOTH sets ends PRESENT
+    * (delete-then-upsert composition). A batch that touches nothing
+    * still commits a metadata-only version when `meta` is non-empty, so
+    * progress markers advance past empty spans. OCC retry semantics
+    * match [[merge]]'s, and so does the batch contract: upsert columns
+    * must name table columns (ordering columns excepted), align by the
+    * same upcast rule, and record the same nullability. There is no
+    * schema evolution here.
     *
     * A [[MarkerGuard]] makes the change batch a TRANSACTIONAL
     * IDEMPOTENT write: each attempt — including every OCC retry, which
@@ -4436,59 +4329,112 @@ object MergeStore {
                    maxRetries: Int = 0,
                    snapshotVersion: Option[Int] = None,
                    guard: Option[MarkerGuard] = None): ApplyStats =
-    withOcc(maxRetries, snapshotVersion)(applyChangesOnce(spark, target,
-      upserts, deleteKeys, pk, ordCols, meta, _, guard))(
+    withOcc(maxRetries, snapshotVersion)(pin => upsertOnce(spark, target,
+      upserts, Some(deleteKeys), pk, ordCols, meta, pin, guard,
+      evolve = false, "applyChanges").stats)(
       st => st.copy(recomputes = st.recomputes + 1))
 
-  private def applyChangesOnce(spark: SparkSession, target: String,
-                               upserts: DataFrame, deleteKeys: DataFrame,
-                               pk: Seq[String], ordCols: Seq[String],
-                               meta: Map[String, String],
-                               snapshotVersion: Option[Int],
-                               guard: Option[MarkerGuard]): ApplyStats = {
-    require(pk.nonEmpty, s"applyChanges at $target needs a key")
-    val parentV = snapshotVersion.orElse(currentVersion(target))
-      .getOrElse(sys.error(s"no committed version at $target"))
-    val before = liveFiles(target, Some(parentV))
-    guard.foreach { g =>
-      if (g.stale(markerValue(target, g.key, Some(parentV)).map(_.toLong)))
-        return ApplyStats(before.size, 0, 0L, 0L, skippedReplay = true)
-    }
-    // Schema and columns come from the manifest — the full-table read
-    // plan (a listing job over every live file) is never built, same
-    // as merge/delete.
-    val recorded = manifestSchema(target, parentV)
-    // Same strict projection as merge: an upsert column the table lacks
-    // (a source that gained a column, for a replica) fails loudly
-    // instead of being trimmed away while the marker moves past it.
-    val extra = upserts.columns
-      .filterNot(recorded.fieldNames.contains).filterNot(ordCols.contains)
-    require(extra.isEmpty,
-      s"applyChanges batch carries columns absent from the table at " +
-        s"$target (${extra.mkString(", ")}) — a drifted producer; add " +
-        "them to the table first")
-    val ord = if (ordCols.nonEmpty) ordCols.map(col)
-      else Seq(monotonically_increasing_id())
-    val incoming = alignBatchTypes(Upsert.dedupByKey(
-        upserts.where(pk.map(col(_).isNotNull).reduce(_ && _)), pk, ord)
-      .select(recorded.fieldNames.map(col).toIndexedSeq: _*), recorded,
-      "applyChanges").cache()
-    val keys = deleteKeys.select(pk.map(col): _*)
-      .where(pk.map(col(_).isNotNull).reduce(_ && _)).distinct().cache()
+  /** What one upsert attempt did: [[applyChanges]]' figures plus
+    * [[merge]]'s split of the upserted keys into inserts and updates. */
+  private final case class Upserted(stats: ApplyStats, rowsInserted: Long,
+                                    rowsUpdated: Long)
+
+  /** The one upsert body behind [[merge]] (`deleteKeys = None`, no
+    * meta, no guard, `evolve` from the caller) and [[applyChanges]]:
+    *
+    *   1. the keyed-batch prologue and, with a guard, the marker check
+    *      at the pinned parent;
+    *   2. the batch projected onto the table's columns (strict, or
+    *      evolving: new columns appended), constraint-gated and cached;
+    *   3. nothing to upsert and nothing to delete: a metadata-only
+    *      commit when `meta` is non-empty, else none — before any table
+    *      IO (the idle micro-batch of a streaming sink);
+    *   4. one pruned, pk-only probe right-joined with the change keys
+    *      and grouped by file in ONE collect: files with a match are the
+    *      rewrite set, and the NULL-file group holds the batch keys the
+    *      table lacks;
+    *   5. the affected files rewrite as their survivors plus the batch,
+    *      through the one commit tail, [[commitWithRebase]].
+    *
+    * `merge` pays nothing for the absent delete side: no emptiness job
+    * and no delete join. */
+  private def upsertOnce(spark: SparkSession, target: String,
+                         upserts: DataFrame, deleteKeys: Option[DataFrame],
+                         pk: Seq[String], ordCols: Seq[String],
+                         meta: Map[String, String], pin: Option[Int],
+                         guard: Option[MarkerGuard], evolve: Boolean,
+                         verb: String): Upserted = {
+    require(pk.nonEmpty, s"$verb at $target needs a key")
+    val (parentV, before, deduped) =
+      keyedBatch(target, upserts, pk, ordCols, pin)
+    def nothing(skipped: Boolean): Upserted = Upserted(
+      ApplyStats(before.size, 0, 0L, 0L, skippedReplay = skipped), 0L, 0L)
+    def stale(v: Int): Boolean = guard.exists(g =>
+      g.stale(markerValue(target, g.key, Some(v)).map(_.toLong)))
+    if (stale(parentV)) return nothing(skipped = true)
+    // The verb NEVER builds the full-table read plan just to learn
+    // column names: constructing it lists every live file (an
+    // InMemoryFileIndex pass — a parallel listing JOB past the
+    // discovery threshold, an object-store HEAD per path at 100 TB),
+    // and a pruned trickle upsert must stay O(candidate files) end to
+    // end. The manifest schema answers instead.
+    val tableSchema = manifestSchema(target, parentV)
+    val tableCols: Seq[String] = tableSchema.fieldNames.toSeq
+    // Schema evolution (Delta's mergeSchema shape): with it on, batch
+    // columns absent from the table are APPENDED (carried files keep
+    // their physical schema — read() null-fills them there),
+    // and table columns absent from the batch null-fill on the incoming
+    // rows. Off, the batch must project exactly onto the table's
+    // columns — a drifted producer fails loudly here instead of
+    // silently reshaping the table (or, for a replica, being trimmed
+    // while the marker moves past it).
+    // Batch-only ordering columns are part of the upsert CONTRACT, not
+    // schema drift — only other unknown columns trip the strict check.
+    val extra = deduped.columns
+      .filterNot(tableCols.contains).filterNot(ordCols.contains)
+    require(evolve || extra.isEmpty,
+      s"$verb batch carries columns absent from the table at $target " +
+        s"(${extra.mkString(", ")}) — a drifted producer; add them to " +
+        "the table first (or merge with allowSchemaEvolution=true)")
+    // A renamed-away column's PHYSICAL name is still spelled inside
+    // every carried file; evolving in a new column under that name
+    // would make two fields collide on disk (and resurrect old bytes).
+    val physTaken = tableSchema.fields
+      .filter(f => physicalNameOf(f) != f.name)
+      .map(physicalNameOf).toSet
+    val collides = extra.filter(physTaken.contains)
+    require(collides.isEmpty,
+      s"evolved column(s) ${collides.mkString(", ")} collide with the " +
+        s"on-disk (physical) name of a renamed column at $target — " +
+        "pick another name, or compact and re-init to retire the " +
+        "physical name")
+    val batchOnlyOrd = ordCols.filterNot(tableCols.contains)
+    def emptyTable = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
+    val incoming = (
+      if (evolve)
+        emptyTable.unionByName(deduped.drop(batchOnlyOrd: _*),
+          allowMissingColumns = true)
+      else alignBatchTypes(
+        deduped.select(tableCols.map(col).toIndexedSeq: _*), tableSchema,
+        verb)
+      ).cache()
+    val keys = deleteKeys.map(_.select(pk.map(col): _*)
+      .where(pk.map(col(_).isNotNull).reduce(_ && _)).distinct().cache())
     // The caches are released on every exit, a constraint rejection
     // included.
     try {
-      enforceConstraints(spark, target, parentV, incoming, "applyChanges")
-      val sCols = statsColumns(target, Some(parentV))
-      val (bCols, bloomFpp) = inheritedBloom(target, parentV)
-      def metaOnly(): ApplyStats = {
+      enforceConstraints(spark, target, parentV, incoming, verb)
+      def metaOnly(): Upserted = {
         // Nothing to rewrite: a metadata-only commit still advances the
         // progress marker atomically (same file list, next version) —
         // carried stats ride along untouched.
-        if (meta.nonEmpty)
+        if (meta.nonEmpty) {
+          val (bCols, fpp) = inheritedBloom(target, parentV)
           commitWithStats(spark, target, before, parentV, meta, Nil,
-            sCols, recorded, bCols, bloomFpp)
-        ApplyStats(before.size, 0, 0L, 0L)
+            statsColumns(target, Some(parentV)), tableSchema, bCols, fpp)
+        }
+        nothing(skipped = false)
       }
       // The count both sizes the upsert side and tests it for emptiness.
       val rowsUpserted = incoming.count()
@@ -4498,39 +4444,52 @@ object MergeStore {
       // 4-16k live files: the per-micro-batch idle cost of a streaming
       // sink). Commit the metadata against the unchanged file list and
       // return before any table IO.
-      if (rowsUpserted == 0L && keys.isEmpty) return metaOnly()
-      // One pruned, pk-only probe answers both verbs: candidate files
+      if (rowsUpserted == 0L && keys.forall(_.isEmpty)) return metaOnly()
+      // One pruned, pk-only probe answers every figure: candidate files
       // come from the COMBINED key bounds (upserts ∪ deletes) — a file
       // outside both batches' ranges can hold neither a matched upsert
       // nor a doomed key.
-      val probeKeys = incoming.select(pk.map(col): _*)
-        .unionByName(keys.select(pk.map(col): _*))
-      val candidates = pruneByKeyBounds(target, parentV, before,
-        probeKeys, pk)
-      // ONE grouped collect over the probe answers the affected set and
-      // the deleted count: each live key is tagged by the upsert (__up)
-      // and delete (__dl) sets it matches (both are unique per key, so
-      // the left joins never fan out; NULL keys match neither). Deleted
-      // = doomed keys present in the snapshot and NOT re-upserted
-      // (delete-then-upsert composition: such a key survives as the
-      // incoming row, so it did not end deleted).
+      val upKeys = incoming.select(pk.map(col): _*)
+      val probeKeys = keys.fold(upKeys)(upKeys.unionByName(_))
+      val candidatesAt = (v: Int, fs: Seq[String]) =>
+        pruneByKeyBounds(target, v, fs, probeKeys, pk)
+      val candidates = candidatesAt(parentV, before)
+      // Each change key carries `__up` (true: upserted; false: doomed
+      // and NOT re-upserted — delete-then-upsert composition: such a
+      // key survives as the incoming row, so it does not end deleted).
+      // Keys are unique, so the right join never fans a change key out
+      // past the live rows holding it, and NULL keys match nothing. In
+      // ONE grouped collect, a file group counts its live rows the batch
+      // upserts and deletes, and the NULL-file group counts the
+      // upserted keys no live row holds.
+      val upTagged = upKeys.withColumn("__up", lit(true))
+      val changed = keys.fold(upTagged)(k => upTagged.unionByName(
+        k.join(upKeys, pk, "left_anti").withColumn("__up", lit(false))))
       val perFile = probeScan(spark, target, parentV, candidates, pk)
-        .join(incoming.select(pk.map(col) :+ lit(true).as("__up"): _*),
-          pk, "left")
-        .join(keys.select(pk.map(col) :+ lit(true).as("__dl"): _*),
-          pk, "left")
-        .where(col("__up").isNotNull || col("__dl").isNotNull)
+        .join(changed, pk, "right")
         .groupBy("__file")
-        .agg(count(when(col("__dl").isNotNull && col("__up").isNull, 1)))
+        .agg(count(when(col("__up"), 1)), count(when(!col("__up"), 1)))
         .collect()
-      val affected = perFile.map(_.getString(0)).toSet
-      val rowsDeleted = perFile.map(_.getLong(1)).sum
+      val (hit, missed) = perFile.partition(!_.isNullAt(0))
+      val affected = hit.map(_.getString(0)).toSet
+      val rowsUpdated = hit.map(_.getLong(1)).sum
+      val rowsDeleted = hit.map(_.getLong(2)).sum
+      val rowsInserted = missed.map(_.getLong(1)).sum
       if (affected.isEmpty && rowsUpserted == 0L) return metaOnly()
-      val survivors = readSubset(spark, target, parentV,
-          affected.toSeq.sorted)
+      // Survivors of the affected files (rows matching neither set) plus
+      // the incoming batch become the replacement files; untouched files
+      // are carried into the next manifest as-is.
+      val kept = readSubset(spark, target, parentV, affected.toSeq.sorted)
         .join(incoming, pk, "left_anti")
-        .join(keys, pk, "left_anti")
-      val replacement = survivors.unionByName(incoming)
+      val replacement = keys.fold(kept)(kept.join(_, pk, "left_anti"))
+        .unionByName(incoming, allowMissingColumns = true)
+      // The recorded schema re-inherits the table's rename mapping:
+      // `incoming` is built over the user batch, whose attributes carry
+      // no field metadata. Nullability unions with the table's — carried
+      // files keep their NULLs whatever the batch declares, and a batch
+      // that may carry NULLs never commits under a NOT NULL column.
+      val recorded = withMapping(
+        unionNullability(incoming.schema, tableSchema), tableSchema)
       // Only a delete-only batch can leave nothing to write: every
       // affected file emptied, so no (empty) data file is written.
       val newFiles =
@@ -4539,28 +4498,15 @@ object MergeStore {
         else writeFiles(toPhysical(
           replacement.repartition(math.max(1, affected.size)), recorded),
           target)
-      // Commit with file-disjoint rebase, like merge: stats compute
-      // once, a lost CAS against a provably-disjoint rival re-commits
-      // the computed result onto the new head. The MarkerGuard
-      // re-checks at EVERY rebased head — a rival maintainer that
-      // moved the marker turns the rebase into a dropped replay.
-      val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
-        sCols, bCols, bloomFpp, recorded)
-      commitWithRebase(target, parentV, candidates, affected,
-        (v, fs) => pruneByKeyBounds(target, v, fs, probeKeys, pk),
-        head => assembleAndCommit(spark, target,
-          (liveFiles(target, Some(head)).filterNot(affected) ++
-            newFiles).distinct,
-          head, meta, fresh, blooms, sCols, recorded, bCols, bloomFpp,
-          Map.empty): Unit,
-        staleAt = head => guard.exists(g => g.stale(
-          markerValue(target, g.key, Some(head)).map(_.toLong)))) match {
-        case None => ApplyStats(before.size, 0, 0L, 0L,
-          skippedReplay = true)
-        case Some(rebases) => ApplyStats(before.size, affected.size,
-          rowsUpserted, rowsDeleted, rebases = rebases)
+      commitWithRebase(spark, target, parentV, newFiles, affected, recorded,
+        ReadSet(candidates, affected, candidatesAt), meta = meta,
+        staleAt = stale) match {
+        case None => nothing(skipped = true)
+        case Some(c) => Upserted(ApplyStats(before.size, affected.size,
+          rowsUpserted, rowsDeleted, rebases = c.rebases),
+          rowsInserted, rowsUpdated)
       }
-    } finally { incoming.unpersist(); keys.unpersist() }
+    } finally { incoming.unpersist(); keys.foreach(_.unpersist()) }
   }
 
   /** Loud contract for consumers reading BEHIND head: every manifest a
@@ -4916,28 +4862,14 @@ object MergeStore {
     val recorded = withMapping(df.schema, manifestSchema(target, parentV))
     val newFiles = writeFiles(
       toPhysical(df.repartition(nOut), recorded), target)
-    val sCols = statsColumns(target, Some(parentV)).filter(c =>
-      df.schema.fields.exists(f =>
-        f.name == c && tagOf(f.dataType).isDefined))
-    val (inhB, fpp) = inheritedBloom(target, parentV)
-    // Stats precompute ONCE; a rebase re-commits the same lines against
-    // the moved head with zero data IO.
-    val (fresh, blooms) = freshStatsAndBlooms(spark, target, newFiles,
-      sCols, inhB, fpp, recorded)
-    var committed = parentV
-    val rebases = commitWithRebase(target, parentV, smallNames, smallSet,
-      // The affected-still-live and DV-line checks carry the real
-      // equivalence argument; the candidate set re-derivation is
-      // identity (a rival's NEW small files don't invalidate this
-      // rewrite — they wait for the next pass).
-      (_, headFiles) => smallNames.filter(headFiles.toSet),
-      attemptAt = head => {
-        val headLive = liveFiles(target, Some(head))
-        committed = assembleAndCommit(spark, target,
-          headLive.filterNot(smallSet) ++ newFiles, head, Map.empty,
-          fresh, blooms, sCols, recorded, inhB, fpp, Map.empty)
-      }).getOrElse(0)
-    CompactStats(committed, small.size, newFiles.size, rebases = rebases)
+    // The affected-still-live and DV-line checks carry the real
+    // equivalence argument; the candidate set re-derivation is identity
+    // (a rival's NEW small files don't invalidate this rewrite — they
+    // wait for the next pass).
+    val c = commitWithRebase(spark, target, parentV, newFiles, smallSet,
+      recorded, ReadSet(smallNames, smallSet,
+        (_, headFiles) => smallNames.filter(headFiles.toSet))).get
+    CompactStats(c.version, small.size, newFiles.size, rebases = c.rebases)
   }
 
   /** Materialize version `v` (head by default) as a `.ckpt` sidecar —

@@ -48,6 +48,12 @@ class CopyIntoSpec extends SparkSpec {
     val st1 = MergeStore.copyInto(spark, t, s"$src/*.parquet")
     assert(st1.filesLoaded == 2 && st1.filesSkipped == 0 &&
       st1.rowsLoaded == 200L, st1.toString)
+    // The reported version is the commit that carries this call's
+    // ledger lines: its parent has none of them.
+    def ledger(v: Int) = MergeStore.manifestMeta(t, Some(v)).keys
+      .filter(_.startsWith("cp:")).toSet
+    val v1 = st1.version.get
+    assert(ledger(v1).size == 2 && ledger(v1 - 1).isEmpty, st1.toString)
     assert(MergeStore.read(spark, t).count() == 300L)
     // Idempotent re-run: nothing loads, no version churn.
     val headBefore = MergeStore.version(t).get

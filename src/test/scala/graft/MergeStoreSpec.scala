@@ -508,6 +508,111 @@ class MergeStoreSpec extends SparkSpec {
     assert(MergeStore.version(t).contains(v))
   }
 
+  test("merge's stats and rows match the semi-join and anti-join counts on a twin") {
+    val Cols = Seq("id", "grp", "payload")
+    def rowsOf(lo: Long, hi: Long, tag: String) = spark.range(lo, hi)
+      .select(col("id"), (col("id") % 97).cast("int").as("grp"),
+        concat(lit(tag + "-"), col("id")).as("payload"))
+    def clustered(): String = {
+      val t = tmpDir("merge-pin") + "/tbl"
+      MergeStore.init(spark, rowsOf(0L, 400L, "v1"), t, 4,
+        clusterBy = Seq("id"))
+      t
+    }
+    def withDupKey(): String = {
+      val t = clustered()
+      MergeStore.append(spark, rowsOf(5L, 6L, "dup"), t): Unit
+      t
+    }
+    def statsLess(): String = {
+      val t = tmpDir("merge-pin") + "/tbl"
+      MergeStore.init(spark, rowsOf(0L, 400L, "v1"), t, 4)
+      t
+    }
+    val nullKey = Seq[(Option[Long], Int, String)]((None, 1, "null-key"),
+      (Some(3L), 3, "up-3"), (Some(500L), 5, "new-500"))
+      .toDF("id", "grp", "payload")
+    val dupBatch = Seq((7L, 0, "stale", 1L), (7L, 0, "fresh", 2L),
+      (401L, 1, "new-stale", 5L), (401L, 1, "new-fresh", 9L))
+      .toDF("id", "grp", "payload", "load_seq")
+    val evolving = rowsOf(100L, 103L, "v2")
+      .unionByName(rowsOf(600L, 602L, "new"))
+      .withColumn("score", (col("id") * 10).cast("double"))
+    // (case, table, batch, ordCols, allowSchemaEvolution)
+    val cases = Seq(
+      ("duplicated table key", withDupKey _,
+        rowsOf(4L, 7L, "v2").unionByName(rowsOf(450L, 452L, "new")),
+        Nil, false),
+      ("NULL-key batch row", clustered _, nullKey, Nil, false),
+      ("duplicate-PK batch with ordCols", clustered _, dupBatch,
+        Seq("load_seq"), false),
+      ("evolving batch", clustered _, evolving, Nil, true),
+      ("stats-less table", statsLess _,
+        rowsOf(200L, 204L, "v2").unionByName(rowsOf(900L, 901L, "new")),
+        Nil, false))
+    def rowSet(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      df.select(cols.map(c => col(c).cast("string")): _*).collect()
+        .map(_.mkString("|")).sorted.toSeq
+    cases.foreach { case (name, table, batch, ordCols, evolve) =>
+      val t = table()
+      val twin = t + "-twin"
+      MergeStore.cloneTable(spark, t, twin)
+      // The parent's definitions: NULL keys dropped, the highest ordCols
+      // row kept per key, then a semi-join (live rows whose key is
+      // upserted), an anti-join (batch keys the table lacks), and the
+      // files holding a matched key.
+      val keyed = batch.where(col("id").isNotNull)
+      val deduped =
+        if (ordCols.isEmpty) keyed
+        else keyed.withColumn("__rn", row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy("id")
+              .orderBy(ordCols.map(col(_).desc): _*)))
+          .where(col("__rn") === 1).drop("__rn")
+      val keys = deduped.select("id")
+      val live = MergeStore.read(spark, twin)
+      val wantUpdated = live.join(keys, Seq("id"), "left_semi").count()
+      val wantInserted = keys.join(live, Seq("id"), "left_anti").count()
+      val wantRewritten = MergeStore.liveFiles(twin).count(f =>
+        !spark.read.parquet(s"$twin/data/$f").select("id")
+          .join(keys, Seq("id"), "left_semi").isEmpty)
+      val cols = if (evolve) Cols :+ "score" else Cols
+      val wantRows = rowSet(
+        live.join(keys, Seq("id"), "left_anti")
+          .unionByName(deduped.drop(ordCols.filterNot(Cols.contains): _*),
+            allowMissingColumns = true), cols)
+      val st = MergeStore.merge(spark, batch, t, pk = Seq("id"),
+        ordCols = ordCols, allowSchemaEvolution = evolve)
+      assert((st.filesRewritten, st.rowsInserted, st.rowsUpdated) ==
+        ((wantRewritten, wantInserted, wantUpdated)), name)
+      assert(rowSet(MergeStore.read(spark, t), cols) == wantRows, name)
+    }
+  }
+
+  test("merge and applyChanges record a nullable batch column as nullable") {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    def recorded(t: String): Map[String, Boolean] =
+      DataType.fromJson(MergeStore.manifestMeta(t)("schema"))
+        .asInstanceOf[StructType].fields.map(f => f.name -> f.nullable).toMap
+    // `payload` is NOT NULL in the table (a concat of non-null inputs);
+    // the batch declares it nullable and carries a NULL.
+    val batch = Seq[(Long, Int, String)]((3L, 3, null), (N.toLong, 1, "new"))
+      .toDF("id", "grp", "payload")
+    val merged = freshTable()
+    val applied = freshTable()
+    val table = recorded(merged)
+    assert(!table("id") && !table("payload"))
+    MergeStore.merge(spark, batch, merged, pk = Seq("id"))
+    MergeStore.applyChanges(spark, applied, batch,
+      spark.range(0L).select(col("id")), pk = Seq("id"))
+    // Both verbs widen the recorded column to nullable and keep the
+    // columns the batch also declares NOT NULL as the table had them.
+    val want = table + ("payload" -> true)
+    assert(recorded(merged) == want)
+    assert(recorded(applied) == want)
+    assert(MergeStore.read(spark, applied).where(col("id") === 3L)
+      .where(col("payload").isNull).count() == 1)
+  }
+
   test("changes/diff over a vacuumed span fail with the named retention error") {
     val t = freshTable() // v0
     MergeStore.merge(spark, batch("b1", Seq(1L)), t, pk = Seq("id")) // v1
